@@ -110,7 +110,10 @@ def _source_bytes(path: str, budget: int) -> int:
 #: parquet footers on every query (~30-80 ms of driver latency per
 #: call; guide §6 blesses exactly this class of listing/metadata
 #: cache). NO DATA is cached: the memo holds lazy DataFrames whose
-#: every execution still scans the parquet files.
+#: every execution still scans the parquet files. Each plan is stored
+#: with its input's :func:`_input_fingerprint`; a table that changes
+#: mid-session (a file appended, rewritten or removed) is re-read, so it
+#: gets a fresh file index.
 _LOAD_PLANS: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
 
 
@@ -127,17 +130,51 @@ def _load_plan_cache(spark: SparkSession) -> dict:
     return cache
 
 
+def _input_fingerprint(path: str) -> tuple | None:
+    """Cheap change detector for a source table, with no Spark job and
+    no py4j call: (size, mtime) of a single file, or (entry count, newest
+    mtime) over one ``os.scandir`` level of a directory-layout table (a
+    file added inside a partition directory bumps that directory's
+    mtime). A path that cannot be stat'ed locally (e.g. a remote URI)
+    fingerprints as None, so its plan is memoized as immutable."""
+    import os
+    import stat as _stat
+
+    try:
+        st = os.stat(path)
+        if not _stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        count = newest = 0
+        with os.scandir(path) as entries:
+            for entry in entries:
+                count += 1
+                newest = max(newest, entry.stat().st_mtime_ns)
+        return (count, newest)
+    except OSError:
+        return None
+
+
+def _memo_plan(spark: SparkSession, key: tuple, path: str,
+               build: Callable[[], DataFrame]) -> DataFrame:
+    cache = _load_plan_cache(spark)
+    fingerprint = _input_fingerprint(path)
+    hit = cache.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    df = build()
+    cache[key] = (fingerprint, df)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, table: str,
          rebalance: bool = False) -> DataFrame:
     path = f"{sf_dir}/{table}.parquet"
-    cache = _load_plan_cache(spark)
-    df = cache.get((path, rebalance))
-    if df is None:
+
+    def build() -> DataFrame:
         df = spark.read.parquet(path)
-        if rebalance:
-            df = ensure_min_parallelism(df, path)
-        cache[(path, rebalance)] = df
-    return df
+        return ensure_min_parallelism(df, path) if rebalance else df
+
+    return _memo_plan(spark, (path, rebalance), path, build)
 
 
 def normalize_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -168,14 +205,12 @@ def load_events(spark: SparkSession, sf_dir: str,
     when it reads the same file, so both engines agree."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    cache = _load_plan_cache(spark)
-    ev = cache.get((path, "events", rebalance))
-    if ev is None:
+
+    def build() -> DataFrame:
         ev = normalize_ts(spark.read.parquet(path))
-        if rebalance:
-            ev = ensure_min_parallelism(ev, path)
-        cache[(path, "events", rebalance)] = ev
-    return ev
+        return ensure_min_parallelism(ev, path) if rebalance else ev
+
+    return _memo_plan(spark, (path, "events", rebalance), path, build)
 
 
 def materialize_ctes(sql: str, names: tuple[str, ...]) -> str:

@@ -28,6 +28,16 @@ def get_spark(app_name: str = "apde-etl-spark", shuffle_partitions: int | None =
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark's default keeps 100 compiled codegen classes per JVM, and
+        # one steady pass of the benchmark's query workload needs about
+        # 253, so LRU eviction recompiled ~145 classes (plus JIT warm-up)
+        # on every pass. One session over all 302 registry entries at
+        # sf0.01 compiled 4,485 distinct classes; holding them all cost
+        # 127 MB of heap and 38 MB of metaspace after GC (~37 KB per
+        # entry), against the 8g driver heap. 8192 covers that working
+        # set with headroom. A static conf: it only takes effect when
+        # this call starts the JVM's SparkContext.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     # Scale-dependent I/O knobs (guide §6/§9), env-parameterised with
     # Spark's own defaults locally so the driver's bench stays
