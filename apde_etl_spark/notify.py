@@ -35,6 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apde_etl_spark.sources.readers import local_frame
+
 MSGS_SCHEMA = (
     "msg_id long, msg_name string, msg_subject string, msg_body string, "
     "msg_parent long, created timestamp"
@@ -83,7 +85,8 @@ def new_version(
     head = current_message(notify_msgs, msg_name).select("msg_id").collect()
     parent = head[0]["msg_id"] if head else None
     next_id = (notify_msgs.agg(F.max("msg_id")).collect()[0][0] or 0) + 1
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(next_id, msg_name, msg_subject, msg_body, parent)],
         "msg_id long, msg_name string, msg_subject string, msg_body string, msg_parent long",
     ).withColumn("created", F.current_timestamp())

@@ -46,6 +46,7 @@ from apde_etl_spark.operators.similarity import (
     train_pq_codebooks,
 )
 from apde_etl_spark.sources.lifecycle import write_analytic_table
+from apde_etl_spark.sources.readers import local_frame
 
 __all__ = [
     "build_ann_index",
@@ -98,14 +99,16 @@ def build_ann_index(
     )
     write_analytic_table(cent_src, f"{index_dir}/centroids")
     mins, maxs = sq8_train_bounds(df, vec_col=vec_col, dim=dim)
-    bounds = spark.createDataFrame(
+    bounds = local_frame(
+        spark,
         [(i, mins[i], maxs[i]) for i in range(dim)],
         "pos int, lo double, hi double",
     )
     write_analytic_table(bounds, f"{index_dir}/bounds")
     books = train_pq_codebooks(e, id_col, dim, m=pq_m, k_codes=pq_k,
                                iters=pq_iters)
-    books_df = spark.createDataFrame(
+    books_df = local_frame(
+        spark,
         [(s, c, books[s][c]) for s in range(len(books))
          for c in range(len(books[s]))],
         "subspace int, code int, centroid array<double>",
@@ -501,7 +504,8 @@ def build_knn_graph(
             upper = arm if upper is None else upper.unionByName(arm)
         if upper is not None:
             write_analytic_table(upper, f"{index_dir}/graph_upper")
-        meta = spark.createDataFrame(
+        meta = local_frame(
+            spark,
             [(n_layers, layer_factor, lm)],
             "n_layers int, layer_factor int, layer_neighbors int")
         write_analytic_table(meta, f"{index_dir}/layer_meta")
@@ -1542,7 +1546,8 @@ def build_knn_graph_insert(
     upper = adjU.withColumn("rank", F.row_number().over(wrl).cast("int")) \
         .select("layer", "src", "dst", "rank")
     write_analytic_table(upper, f"{index_dir}/graph_upper")
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(n_layers, layer_factor, layer_neighbors)],
         "n_layers int, layer_factor int, layer_neighbors int")
     write_analytic_table(meta, f"{index_dir}/layer_meta")

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from apde_etl_spark.sources.readers import local_frame
+
 
 def keep_newest(df: DataFrame, key_cols: Sequence[str], order_col: str,
                 tiebreak_cols: Sequence[str] = ()) -> DataFrame:
@@ -246,7 +248,7 @@ def connected_components(
             T.StructField("id", id_type, False),
             T.StructField("component", id_type, False),
         ])
-        return pairs.sparkSession.createDataFrame(rows, out_schema)
+        return local_frame(pairs.sparkSession, rows, out_schema)
     return _distributed_components(pairs, id_a, id_b, max_iter, stats)
 
 

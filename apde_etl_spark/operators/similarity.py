@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from apde_etl_spark.operators.cache import tracked_persist, tracked_release
 from apde_etl_spark.operators.skew import replicated_salted_join
+from apde_etl_spark.sources.readers import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1008,7 +1009,8 @@ def train_ivf_centroids(
     )
     cents = [list(r["__v"]) for r in seed_rows]
     for _ in range(iters):
-        cent_df = e.sparkSession.createDataFrame(
+        cent_df = local_frame(
+            e.sparkSession,
             [(i, c) for i, c in enumerate(cents)],
             "cell_id int, __c array<double>",
         ).withColumn("__cn", l2_norm(F.col("__c")))
@@ -1210,9 +1212,7 @@ def ann_ivf_topk(
         trained = train_ivf_centroids(e, id_col, n_cells, train_iters, stride,
                                       exact_mean=train_exact_mean)
         cent = (
-            df.sparkSession.createDataFrame(
-                trained, "cell_id int, __c array<double>"
-            )
+            local_frame(df.sparkSession, trained, "cell_id int, __c array<double>")
             .withColumn("__cn", l2_norm(F.col("__c")))
             .select(F.col("cell_id").cast("long").alias("cell_id"), "__c", "__cn")
         )
@@ -1497,7 +1497,8 @@ def train_pq_codebooks(
         for i in range(m)
     ]
     for _ in range(iters):
-        book_df = e.sparkSession.createDataFrame(
+        book_df = local_frame(
+            e.sparkSession,
             [
                 (i, j, books[i][j])
                 for i in range(m)

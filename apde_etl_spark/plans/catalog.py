@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators import profile as P
 from apde_etl_spark.operators.finalize import complete_grid
+from apde_etl_spark.sources.readers import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -718,8 +719,10 @@ def j8_domain_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = o.select(
         F.lit("o_orderstatus").alias("varname"), F.col("o_orderstatus").alias("value")
     ).distinct()
-    standard = spark.createDataFrame(
-        [("o_orderstatus", v) for v in ["O", "F", "P", "X"]], ["varname", "value"]
+    standard = local_frame(
+        spark,
+        [("o_orderstatus", v) for v in ["O", "F", "P", "X"]],
+        "varname string, value string",
     )
     ob = observed.alias("ob")
     st = standard.alias("st")
@@ -802,14 +805,16 @@ def j4_type_category_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY J4: left join of the type->category map onto the column
     list; unmatched types fall to 'other' and are skipped with a warning
     (R/etl_qa_run_pipeline.R:1145-1153)."""
-    cols = spark.createDataFrame(
+    cols = local_frame(
+        spark,
         [("l_quantity", "double"), ("l_returnflag", "varchar"),
          ("l_shipdate", "timestamp"), ("l_mystery", "geometry")],
-        ["varname", "data_type"],
+        "varname string, data_type string",
     )
-    cat_map = spark.createDataFrame(
+    cat_map = local_frame(
+        spark,
         [("double", "numeric"), ("varchar", "character"), ("timestamp", "datetime")],
-        ["data_type", "category"],
+        "data_type string, category string",
     )
     return cols.join(F.broadcast(cat_map), "data_type", "left").select(
         "varname", "data_type", F.coalesce(F.col("category"), F.lit("other")).alias("category")

@@ -19,6 +19,7 @@ from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators import text as TX
 from apde_etl_spark.plans.catalog import (_sql_round, load, load_events,
                                            normalize_ts, register)
+from apde_etl_spark.sources.readers import local_frame
 
 # ===========================================================================
 # Gopher-style repetition metrics (dup-token + top-bigram fractions)
@@ -470,9 +471,10 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n x m) nested loop this replaces)."""
     from apde_etl_spark.operators.temporal import range_join_binned
 
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [("bronze", 0.0, 100.0), ("silver", 100.0, 250.0), ("gold", 250.0, 500.0)],
-        ["tier", "lo", "hi"],
+        "tier string, lo double, hi double",
     )
     ev = load_events(spark, sf_dir).filter(F.col("value").isNotNull()).select("value")
     joined = range_join_binned(F.broadcast(tiers), ev, "lo", "hi", "value",

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.plans.catalog import (_sql_round, load, load_events,
                                            normalize_ts, register)
+from apde_etl_spark.sources.readers import local_frame
 
 # ===========================================================================
 # S1/S2 — full scan and schema-only peek
@@ -62,7 +63,7 @@ def s3_table_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load(spark, sf_dir, "region").createOrReplaceTempView("region")
     rows = [(n, int(table_exists(spark, n))) for n in ["region", "no_such_table_xyz"]]
-    return spark.createDataFrame(rows, "table_name string, exists_flag int")
+    return local_frame(spark, rows, "table_name string, exists_flag int")
 
 
 # ===========================================================================
@@ -99,7 +100,7 @@ def s4_column_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(c, "datetime") for c in cls.datetime]
         + [(c, "other") for c in cls.other]
     )
-    return spark.createDataFrame(rows, "varname string, category string")
+    return local_frame(spark, rows, "varname string, category string")
 
 
 # ===========================================================================
@@ -129,7 +130,7 @@ def s5_ddl_synthesis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sup = load(spark, sf_dir, "supplier")
     ddl = synthesize_ddl(sup, "supplier_copy").replace("`", "")
-    return spark.createDataFrame([(ddl,)], "ddl string")
+    return local_frame(spark, [(ddl,)], "ddl string")
 
 
 # ===========================================================================
@@ -874,11 +875,12 @@ def qa_chi_standards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apde_etl_spark.plans.qa_pipeline import QaConfig, run_qa_pipeline
 
     o = load(spark, sf_dir, "orders")
-    standard = spark.createDataFrame(
+    standard = local_frame(
+        spark,
         [("o_orderstatus", v) for v in ["O", "F", "P", "X"]]
         + [("o_orderpriority", v) for v in
            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW", "6-NEVER"]],
-        ["varname", "group"],
+        "varname string, `group` string",
     )
     cfg = QaConfig(
         time_var="o_orderdate",

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.plans.catalog import (_sql_round, load, load_events,
                                           normalize_ts, register)
+from apde_etl_spark.sources.readers import local_frame
 
 # ===========================================================================
 # Anonymization — pseudonymize + generalize + k-anonymity suppression
@@ -550,6 +551,7 @@ def observe_load_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the data, so validation costs ZERO extra scans at any
     scale. The write is a real lake write; the observation result comes
     back as a one-row DataFrame the oracle recomputes independently."""
+    import shutil
     import tempfile
 
     from pyspark.sql import Observation
@@ -567,12 +569,15 @@ def observe_load_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.year("o_orderdate")).cast("int").alias("max_year"),
     )
     workdir = tempfile.mkdtemp(prefix="observe_qa_")
-    observed.write.mode("overwrite").parquet(f"{workdir}/orders")  # the one action
-    m = obs.get
-    import shutil
-
-    shutil.rmtree(workdir, ignore_errors=True)  # metrics already materialized
-    return spark.createDataFrame(
+    try:
+        observed.write.mode("overwrite").parquet(f"{workdir}/orders")  # the one action
+        m = obs.get
+    finally:
+        # metrics are materialized on success; on a failed write the
+        # partial output must not outlive the call either
+        shutil.rmtree(workdir, ignore_errors=True)
+    return local_frame(
+        spark,
         [(m["n_rows"], m["key_checksum"], m["n_null_dates"], m["min_year"], m["max_year"])],
         "n_rows bigint, key_checksum bigint, n_null_dates bigint, min_year int, max_year int",
     )

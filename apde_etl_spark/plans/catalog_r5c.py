@@ -35,6 +35,7 @@ from apde_etl_spark.operators import linkage as LK
 from apde_etl_spark.operators import similarity as SIM
 from apde_etl_spark.plans.catalog import _sql_round, load, register
 from apde_etl_spark.plans.catalog_ext import _minhash_pairs_sql
+from apde_etl_spark.sources.readers import local_frame
 
 # ===========================================================================
 # Shared blocking + comparison-vector SQL
@@ -416,7 +417,8 @@ def linkage_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lvl in range(_EM_LEVELS[f]):
             m_i, u_i = fit["m"][f][lvl], fit["u"][f][lvl]
             rows.append((field, lvl, m_i, u_i, (m_i * S) // u_i))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "field string, level int, m_ppm long, u_ppm long, lr_ppm long",
     )
@@ -485,7 +487,8 @@ def linkage_em_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec = ("match" if pm >= 9 * pu
                else "possible" if pm >= pu else "non_match")
         dec_rows.append((*g, dec))
-    dec_df = spark.createDataFrame(
+    dec_df = local_frame(
+        spark,
         dec_rows,
         "g_text int, g_lang int, g_source int, g_len int, decision string",
     )

@@ -36,6 +36,7 @@ from apde_etl_spark.plans.catalog import (
     register,
 )
 from apde_etl_spark.plans.catalog_r7 import _cached_workdir, _sql_g_cos
+from apde_etl_spark.sources.readers import local_frame
 
 # gate parameters — layer 0 matches the flat-graph entry (M=8, 2 long
 # links, 16 entries, beam 10 / 3 hops); the hierarchy is 2 layers of
@@ -688,7 +689,8 @@ def quality_lr_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines because every update is floor arithmetic on the same
     lattice."""
     fit = _qlr_fit(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("bias", fit["b"]), ("x1_stopword_ratio", fit["w1"]),
          ("x2_mean_token_len", fit["w2"]), ("x3_n_tokens", fit["w3"])],
         "feature string, weight_s long",

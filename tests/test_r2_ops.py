@@ -5,6 +5,8 @@ oracle twin in the driver gate)."""
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,7 @@ from apde_etl_spark.plans.catalog_r2 import (
     _SEG_K,
     anonymize_kanon_customers,
     boilerplate_segment_dedup,
+    observe_load_qa_metrics,
     temperature_source_mixture,
 )
 
@@ -253,3 +256,17 @@ def test_foreachbatch_fresh_checkpoint_does_not_skip_new_batches(spark, tmp_path
     shutil.rmtree(str(tmp_path / "fb" / "ckpt"))
     second = {r["user_id"]: r["n_events"] for r in run().collect()}
     assert second == {u: 2 * n for u, n in first.items()}
+
+
+def test_observe_qa_workdir_removed_when_write_fails(spark, sf_dir, tmp_path,
+                                                     monkeypatch):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def failing_parquet(self, path, *args, **kwargs):
+        raise OSError(f"disk full writing {path}")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(OSError, match="disk full"):
+        observe_load_qa_metrics(spark, sf_dir)
+    assert list(tmp_path.iterdir()) == []
