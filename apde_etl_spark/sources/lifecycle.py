@@ -627,6 +627,11 @@ def list_versions(table_dir: str) -> list[int]:
     return sorted(out)
 
 
+#: hidden partition column that carries each row's file number through a
+#: staged ``n_files`` write; ``_flatten_stage`` removes it again
+_FILE_COL = "__file"
+
+
 def versioned_write(df: DataFrame, table_dir: str,
                     n_files: int | None = None) -> int:
     """Write ``df`` as the NEXT immutable version snapshot
@@ -634,11 +639,90 @@ def versioned_write(df: DataFrame, table_dir: str,
     the transactional-maintenance discipline (MERGE, compaction,
     schema change) is always write-new-version + atomic pointer flip,
     which is what makes concurrent readers safe and time travel free.
-    ``n_files`` forces the output file count (compaction's lever)."""
+
+    The snapshot is written into a hidden staging directory
+    (``_stage_dir``) and published by one ``os.rename`` onto ``v=N``.
+    A reader therefore sees the whole snapshot or none of it, and a
+    failed write leaves no version behind; both rely on the filesystem
+    renaming a directory atomically, as POSIX filesystems do.
+
+    ``n_files`` sets how many files are written (compaction's lever),
+    with the round-robin row assignment of ``repartition(n_files)``.
+    Each write task deserializes the session's Hadoop configuration
+    (~1,100 properties), a fixed cost, so more files than cores are not
+    written one task per file: rows carry their file number as a hidden
+    partition column and at most one task per core writes them.
+
+    Limits: the partitioned writer sorts each task's rows by file number,
+    a cost per row, while the saving is a fixed cost per file; with many
+    rows per file the sort costs more (DEPLOY.md §5 has figures). The
+    task count is ``defaultParallelism``, which under dynamic allocation
+    counts only the executors registered when the write starts."""
+    import os
+    import shutil
+
     version = (list_versions(table_dir) or [0])[-1] + 1
-    out = df.repartition(n_files) if n_files else df
-    out.write.mode("error").parquet(f"{table_dir}/v={version}")
+    stage = _stage_dir(table_dir, version)
+    try:
+        if n_files:
+            cores = df.sparkSession.sparkContext.defaultParallelism
+            (df.repartition(n_files)
+             .withColumn(_FILE_COL, F.spark_partition_id())
+             .coalesce(min(n_files, cores))
+             .write.partitionBy(_FILE_COL).parquet(stage))
+            if 0 not in _flatten_stage(stage):
+                # Spark writes the first partition's file even when it has
+                # no rows (the one schema-only file of an empty frame); a
+                # partitioned write does not, so add it. limit(0) plans as
+                # an empty local relation: df is not run again, and the
+                # file count stays that of repartition(n).write
+                df.limit(0).write.mode("append").parquet(stage)
+        else:
+            df.write.parquet(stage)
+        os.rename(stage, os.path.join(table_dir, f"v={version}"))
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     return version
+
+
+def _stage_dir(table_dir: str, version: int) -> str:
+    """A fresh staging directory for version ``version``:
+    ``_stage_v<N>_<uuid>``. ``list_versions`` and Spark's file index
+    (``read_all_versions``) both skip it; the index skips a name that
+    starts with ``_`` only when it holds no ``=``, so it has none."""
+    import os
+    import uuid
+
+    return os.path.join(table_dir, f"_stage_v{version}_{uuid.uuid4().hex}")
+
+
+def _flatten_stage(stage: str) -> set[int]:
+    """Move each ``__file=i/part-<task>-<rest>`` file of a staged write up
+    into ``stage`` as ``part-{i:05d}-<rest>``, with its Hadoop checksum
+    file, and remove the partition directories. Returns the file numbers
+    ``i`` that held data."""
+    import os
+    import shutil
+
+    prefix = f"{_FILE_COL}="
+    files = set()
+    for sub in os.listdir(stage):
+        if not sub.startswith(prefix):
+            continue
+        i = int(sub[len(prefix):])
+        src = os.path.join(stage, sub)
+        for name in os.listdir(src):
+            dot = "." if name.startswith(".") else ""  # .part-*.crc
+            if not name.startswith(f"{dot}part-"):
+                continue
+            rest = name.split("-", 2)[2]
+            os.rename(os.path.join(src, name),
+                      os.path.join(stage, f"{dot}part-{i:05d}-{rest}"))
+            if not dot:
+                files.add(i)
+        shutil.rmtree(src)
+    return files
 
 
 def read_version(spark: SparkSession, table_dir: str,
@@ -720,7 +804,14 @@ def vacuum_versions(table_dir: str, keep_last: int = 2) -> tuple[list[int], list
     version snapshots. Returns (removed, kept). The latest version is
     never removable (keep_last >= 1 enforced) — the VACUUM analogue
     that caps time-travel storage after compactions and merges
-    accumulate snapshots."""
+    accumulate snapshots.
+
+    It also removes the staging directories that a killed writer left
+    (``_stage_v<N>_*``, see ``versioned_write``) for every N up to the
+    latest version: ``v=N`` exists, so no writer can still publish them.
+    """
+    import os
+    import re
     import shutil
 
     if keep_last < 1:
@@ -729,4 +820,9 @@ def vacuum_versions(table_dir: str, keep_last: int = 2) -> tuple[list[int], list
     removed = versions[:-keep_last] if len(versions) > keep_last else []
     for v in removed:
         shutil.rmtree(f"{table_dir}/v={v}")
+    if versions:
+        for name in os.listdir(table_dir):
+            m = re.match(r"_stage_v(\d+)_", name)
+            if m and int(m.group(1)) <= versions[-1]:
+                shutil.rmtree(os.path.join(table_dir, name))
     return removed, [v for v in versions if v not in removed]

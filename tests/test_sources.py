@@ -434,6 +434,135 @@ def test_compact_table_reduces_files_preserving_rows(spark, tmp_path):
     assert a == b
 
 
+def _result_stage_tasks(spark, group: str, fn) -> list[int]:
+    """Run ``fn`` under job group ``group``; return the task count of each
+    job's result stage (a job's last stage has its highest id)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return [tracker.getStageInfo(max(tracker.getJobInfo(j).stageIds)).numTasks
+            for j in tracker.getJobIdsForGroup(group)]
+
+
+def test_versioned_write_n_files_from_few_tasks(spark, tmp_path):
+    from apde_etl_spark.sources.lifecycle import (
+        data_file_count,
+        read_version,
+        versioned_write,
+    )
+
+    d = str(tmp_path / "vt")
+    cores = spark.sparkContext.defaultParallelism
+    n = 4 * cores + 3
+    df = spark.range(0, 2000, 1, 2).select(
+        F.col("id"), (F.col("id") % 7).alias("x"))
+    tasks = _result_stage_tasks(
+        spark, "versioned_write_n_files",
+        lambda: versioned_write(df, d, n_files=n))
+    assert tasks and max(tasks) <= cores
+    assert data_file_count(d, 1) == n
+    assert not [e for e in os.scandir(f"{d}/v=1") if e.is_dir()]
+    got = read_version(spark, d, 1)
+    assert got.columns == ["id", "x"]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("parts", [2, 4])
+def test_versioned_write_fewer_rows_than_files(spark, tmp_path, parts):
+    from apde_etl_spark.sources.lifecycle import data_file_count, versioned_write
+
+    # the file count is that of a plain repartition(n) write: one file per
+    # non-empty round-robin partition, plus partition 0's even when empty
+    # (2 input partitions leave it empty, 4 do not)
+    df = spark.range(0, 10, 1, parts)
+    plain = str(tmp_path / "plain")
+    df.repartition(16).write.parquet(plain)
+    d = str(tmp_path / "vt")
+    versioned_write(df, d, n_files=16)
+    assert data_file_count(d, 1) == sum(
+        f.endswith(".parquet") for f in os.listdir(plain))
+
+
+def test_versioned_write_empty_input_stays_readable(spark, tmp_path):
+    from apde_etl_spark.sources.lifecycle import (
+        data_file_count,
+        read_version,
+        versioned_write,
+    )
+
+    d = str(tmp_path / "vt")
+    empty = spark.range(0).select(F.col("id"), F.lit("a").alias("tag"))
+    assert versioned_write(empty, d, n_files=64) == 1
+    assert data_file_count(d, 1) == 1
+    got = read_version(spark, d, 1)
+    assert got.schema.simpleString() == "struct<id:bigint,tag:string>"
+    assert got.count() == 0
+
+
+@pytest.mark.parametrize("n_files", [None, 2, 64])
+def test_failed_versioned_write_leaves_table_unchanged(spark, tmp_path, n_files):
+    from apde_etl_spark.sources.lifecycle import (
+        list_versions,
+        read_version,
+        versioned_write,
+    )
+
+    d = str(tmp_path / "vt")
+    versioned_write(spark.range(3), d)
+    bad = spark.range(20).select(
+        F.when(F.col("id") == 5, F.raise_error(F.lit("bad row")))
+        .otherwise(F.col("id")).alias("id"))
+    with pytest.raises(Exception, match="bad row"):
+        versioned_write(bad, d, n_files=n_files)
+    assert list_versions(d) == [1]
+    assert not [f for f in os.listdir(d) if f.startswith("_stage")]
+    assert sorted(r["id"] for r in read_version(spark, d).collect()) == [0, 1, 2]
+
+
+def test_stage_dir_is_invisible_to_readers(spark, tmp_path):
+    from apde_etl_spark.sources.lifecycle import (
+        _stage_dir,
+        list_versions,
+        read_all_versions,
+        versioned_write,
+    )
+
+    # the staging dir of a writer still running (or killed): no version,
+    # and no partition for the hive-style read of every version
+    d = str(tmp_path / "vt")
+    versioned_write(spark.range(3), d)
+    spark.range(5).write.parquet(_stage_dir(d, 2))
+    assert list_versions(d) == [1]
+    allv = read_all_versions(spark, d)
+    assert allv.columns == ["id", "v"] and allv.count() == 3
+
+
+def test_vacuum_removes_stages_no_writer_can_publish(spark, tmp_path):
+    from apde_etl_spark.sources.lifecycle import (
+        _stage_dir,
+        list_versions,
+        vacuum_versions,
+    )
+
+    # stages of killed writers for v1 and v2 (both published since) are
+    # removed; the stage of a writer still running for v3 is kept
+    d = str(tmp_path / "vt")
+    for v in (1, 2):
+        spark.range(3).write.parquet(f"{d}/v={v}")
+    orphans = [_stage_dir(d, 1), _stage_dir(d, 2)]
+    live = _stage_dir(d, 3)
+    for stage in orphans + [live]:
+        spark.range(5).write.parquet(stage)
+    assert vacuum_versions(d, keep_last=2) == ([], [1, 2])
+    assert sorted(os.listdir(d)) == sorted(["v=1", "v=2", os.path.basename(live)])
+    assert list_versions(d) == [1, 2]
+
+
 def test_vacuum_and_read_all_versions(spark, tmp_path):
     from apde_etl_spark.sources.lifecycle import (
         list_versions,

@@ -22,6 +22,13 @@ than the parent's interquartile range. Each metric's median delta is
 also shown against its ``BENCHMARK.json`` regression bound (relative to
 the parent's median), where it has one. A run that fails or reports a
 failed step is listed and left out of the figures.
+
+Each run's full record (``perfbench/.runs/records/``, named on the run's
+stderr) is read as soon as the run ends, before the parent's temporary
+tree is removed, for its per-step figures: each step's least steady
+``work_cpu_s``, the terms ``pass_cpu_s`` adds up. The report gives each
+step's median of those per side, so a change to ``pass_cpu_s`` can be
+traced to the steps that moved.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from __future__ import annotations
 import argparse
 import io
 import json
+import math
 import os
 import shutil
 import statistics
@@ -61,10 +69,35 @@ def extract_ref(ref: str, dest: str) -> None:
         tar.extractall(dest, filter="data")
 
 
+def step_cpu(record: dict) -> dict[str, float]:
+    """Each step's least ``work_cpu_s`` over the untraced steady passes of
+    one run record: the per-step terms of ``pass_cpu_s``."""
+    steady = {p["pass"] for p in record["passes"]
+              if p["kind"] == "steady" and not p["traced"]}
+    out: dict[str, float] = {}
+    for c in record["calls"]:
+        if c["pass"] in steady and "work_cpu_s" in c:
+            out[c["name"]] = min(out.get(c["name"], math.inf), c["work_cpu_s"])
+    return out
+
+
+def record_steps(stderr: str) -> dict[str, float] | None:
+    """``step_cpu`` of the record a run names on its stderr
+    (``perfbench: record <path>``), or None when there is none."""
+    for line in reversed(stderr.splitlines()):
+        if line.startswith("perfbench: record "):
+            path = line[len("perfbench: record "):].strip()
+            if os.path.isfile(path):
+                with open(path) as fh:
+                    return step_cpu(json.load(fh))
+    return None
+
+
 def run_once(tree: str, workload: str, seed: int, seconds: float,
              trace: int) -> dict:
-    """One ``perfbench/run.py`` run in ``tree``; its last stdout line, or
-    ``{"error": ...}`` when the run fails."""
+    """One ``perfbench/run.py`` run in ``tree``; its last stdout line plus
+    its per-step CPU (``steps``), or ``{"error": ...}`` when the run
+    fails."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
            "--trace", str(trace)]
@@ -81,6 +114,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float,
                 "wall_s": time.time() - t0}
     out = json.loads(lines[-1])
     out["wall_s"] = time.time() - t0
+    out["steps"] = record_steps(proc.stderr)
     return out
 
 
@@ -121,6 +155,25 @@ def metric_specs(bench: dict) -> dict[str, dict]:
     return {m["name"]: m for m in bench["end_to_end"] + bench["per_layer"]}
 
 
+def step_report(good: list[dict]) -> list[str]:
+    """Per step, each side's median of its least steady ``work_cpu_s``
+    over the pairs whose records were read."""
+    pairs = [r for r in good if r["parent"].get("steps") and r["change"].get("steps")]
+    if not pairs:
+        return []
+    lines = [f"   per step, least steady work_cpu_s, median of {len(pairs)} pairs:"]
+    for name in sorted(pairs[0]["parent"]["steps"]):
+        side = {k: [r[k]["steps"][name] for r in pairs if name in r[k]["steps"]]
+                for k in ("parent", "change")}
+        if not side["parent"] or not side["change"]:
+            continue
+        pmed = statistics.median(side["parent"])
+        cmed = statistics.median(side["change"])
+        delta = f" {100 * (cmed - pmed) / pmed:+.1f}%" if pmed else ""
+        lines.append(f"     {name:30s} parent {pmed:.4g}  change {cmed:.4g}{delta}")
+    return lines
+
+
 def report(results: dict, specs: dict[str, dict]) -> list[str]:
     lines = []
     for workload, runs in results.items():
@@ -153,6 +206,7 @@ def report(results: dict, specs: dict[str, dict]) -> list[str]:
                 line += (f"  bound {s['bound']}: "
                          f"{'ok' if s['within_bound'] else 'WORSE'}")
             lines.append(line)
+        lines.extend(step_report(good))
     return lines
 
 
