@@ -5,10 +5,10 @@
 operator (plus the training-data extension surface).
 ``oracle_sql()`` — DuckDB twins for the correctness gate.
 
-Implementations live in ``apde_etl_spark/plans/catalog.py`` (reference
-parity surface), ``catalog_ext.py`` (dedup / text / similarity
-extensions), and ``catalog_more.py`` (sources/lifecycle, scalar families,
-streaming, multimodal); this module only re-exports the registry.
+Implementations live in the 29 ``apde_etl_spark/plans/catalog*.py``
+modules imported below: ``catalog.py`` (reference parity surface and
+the registry itself) and 28 more that register their entries on
+import; this module only re-exports the registry.
 """
 
 from __future__ import annotations

@@ -526,34 +526,22 @@ def build_knn_graph(
 # op order via per-dimension accumulation, same (cos DESC, id ASC)
 # cuts, same distinct/union semantics; parity is test-pinned against
 # the iterative walk and the gate entries' oracle hashes). Past the
-# gate — or with SPARK_GRAFT_ANN_LOCAL_SERVE=0 — the iterative
+# gate — or with ``local_serve_max_rows=0`` — the iterative
 # join-per-hop plan below serves unchanged; that is the path a corpus
 # too large to replicate must take, and the two produce identical rows.
 
+#: row gate of the local serve: a corpus with more rows takes the
+#: iterative walk (``local_serve_max_rows`` overrides it per call).
+LOCAL_SERVE_MAX_ROWS = 200_000
 
-def _local_serve_rows_gate() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_ANN_BCAST_ROWS", "200000"))
-    except ValueError:
-        return 200000
-
-
-def _local_serve_budget_bytes() -> int:
-    """Byte budget for the replicated-index payload (round-10 verdict
-    #3): the row gate alone admits a ~1.6 GB broadcast at 200k rows x
-    1024 dims — guide §3.1's driver/executor-OOM failure mode under an
-    innocent-looking gate. The estimate is rows x (dim x 8 + slack)
-    for the vector matrix; the CSR adjacency is bounded by the build's
-    n_neighbors x rows int64s and rides inside the same slack."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_ANN_BCAST_BYTES",
-                                  str(256 * 1024 * 1024)))
-    except ValueError:
-        return 256 * 1024 * 1024
+#: byte budget for the replicated-index payload (round-10 verdict #3):
+#: the row gate alone admits a ~1.6 GB broadcast at 200k rows x 1024
+#: dims — guide §3.1's driver/executor-OOM failure mode under an
+#: innocent-looking gate. The estimate is rows x (dim x 8 + slack) for
+#: the vector matrix; the CSR adjacency is bounded by the build's
+#: n_neighbors x rows int64s and rides inside the same slack. Read at
+#: call time.
+LOCAL_SERVE_MAX_BYTES = 256 * 1024 * 1024
 
 
 #: superseded per-index broadcasts, unpersisted (executor blocks freed)
@@ -577,8 +565,10 @@ def _try_local_serve(
     id_col: str,
     vec_col: str,
     layered: bool,
+    max_rows: int,
 ) -> DataFrame | None:
-    """Broadcast-index serve, or None when the gate/shape rules it out.
+    """Broadcast-index serve, or None when the gate/shape rules it out
+    (``max_rows`` <= 0 turns it off).
 
     Fidelity to the iterative walk, piece by piece:
 
@@ -601,10 +591,7 @@ def _try_local_serve(
     import logging
     import os
 
-    if os.environ.get("SPARK_GRAFT_ANN_LOCAL_SERVE", "1") == "0":
-        return None
-    gate = _local_serve_rows_gate()
-    if gate <= 0:
+    if max_rows <= 0:
         return None
     from pyspark.sql.types import (
         DoubleType,
@@ -620,34 +607,34 @@ def _try_local_serve(
         # iterative path preserves the corpus id's original type — an
         # Integer/Short corpus must take the join path so the same call
         # returns the same schema regardless of corpus size or the
-        # SPARK_GRAFT_ANN_LOCAL_SERVE toggle (the PageRank fast path
+        # ``local_serve_max_rows`` gate (the PageRank fast path
         # declines non-long ids for the same reason).
         id_type = corpus_df.schema[id_col].dataType
         if not isinstance(id_type, LongType):
             return None
         # ONE bounded probe job: row count, vector-width range and
-        # null-vector presence over at most gate+1 corpus rows. The
+        # null-vector presence over at most max_rows+1 corpus rows. The
         # byte gate then sizes the would-be broadcast BEFORE anything
         # is collected; ragged/null corpus vectors decline here too
         # (the join path defines their semantics).
         vec_arr = as_double_array(vec_col)
         p = (corpus_df
              .select(F.size(vec_arr).alias("__d"))
-             .limit(gate + 1)
+             .limit(max_rows + 1)
              .agg(F.count(F.lit(1)).alias("n"),
                   F.count("__d").alias("nd"),
                   F.min("__d").alias("dmin"),
                   F.max("__d").alias("dmax"))
              .collect()[0])
         n_rows = int(p["n"])
-        if n_rows > gate or n_rows == 0:
+        if n_rows > max_rows or n_rows == 0:
             return None
         if p["nd"] != n_rows or p["dmin"] is None or p["dmin"] != p["dmax"]:
             return None
         dim_c = int(p["dmax"])
         if dim_c <= 0:
             return None
-        if n_rows * (dim_c * 8 + 24) > _local_serve_budget_bytes():
+        if n_rows * (dim_c * 8 + 24) > LOCAL_SERVE_MAX_BYTES:
             return None
         # query-side shape probe (round-10 ADVICE, low): a null or
         # ragged query vector — or a query dim != corpus dim — would
@@ -886,6 +873,7 @@ def ann_graph_search(
     hops: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    local_serve_max_rows: int = LOCAL_SERVE_MAX_ROWS,
 ) -> DataFrame:
     """Serve queries from the FROZEN k-NN graph: fixed-hop beam search.
 
@@ -907,12 +895,16 @@ def ann_graph_search(
     graph/graph_meta parquet and the two input frames — no
     construction scan (test-asserted).
 
+    A corpus of at most ``local_serve_max_rows`` rows (0 = never)
+    serves from the broadcast index in one Arrow stage instead, with
+    identical rows (see :func:`_try_local_serve`).
+
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_query_prebuilt`."""
     fast = _try_local_serve(
         spark, index_dir, queries_df, corpus_df, k=k, beam=beam,
         hops=hops, descend_beam=0, hops_per_layer=0, id_col=id_col,
-        vec_col=vec_col, layered=False)
+        vec_col=vec_col, layered=False, max_rows=local_serve_max_rows)
     if fast is not None:
         return fast
     graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
@@ -977,6 +969,7 @@ def ann_graph_search_layered(
     hops_per_layer: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    local_serve_max_rows: int = LOCAL_SERVE_MAX_ROWS,
 ) -> DataFrame:
     """Serve queries from the LAYERED small-world index (HNSW-class;
     Malkov & Yashunin 2018, public method): a fixed-hop beam DESCENT
@@ -1001,13 +994,16 @@ def ann_graph_search_layered(
     neighborhood in O(log n) hops, so the fixed layer-0 budget is
     spent refining, not traveling.
 
+    ``local_serve_max_rows`` gates the broadcast-index serve as in
+    :func:`ann_graph_search`.
+
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_graph_search`."""
     fast = _try_local_serve(
         spark, index_dir, queries_df, corpus_df, k=k, beam=beam,
         hops=hops, descend_beam=descend_beam,
         hops_per_layer=hops_per_layer, id_col=id_col, vec_col=vec_col,
-        layered=True)
+        layered=True, max_rows=local_serve_max_rows)
     if fast is not None:
         return fast
     graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
@@ -1110,32 +1106,23 @@ def ann_graph_search_layered(
     )
 
 
-def _knn_edges_cos(sub: DataFrame, k: int,
-                   use_arrow: bool = False) -> DataFrame:
+def _knn_edges_cos(sub: DataFrame, k: int) -> DataFrame:
     """(src, dst, __cos) — exact cosine k-NN edges over a BOUNDED
     subset (the insertion build's bootstrap: <= boot_rows rows) as a
     plain self-join + window, cosine kept for downstream re-pruning.
     Distributed shape (no driver collect) because the caller bounds the
-    input, not this function. ``use_arrow`` routes the cosine through
-    the bit-identical Arrow scorer (boot_rows² pair rows — at the
-    stress tool's boot=1024 that is ~1M folds, minutes interpreted,
-    seconds batched)."""
+    input, not this function. The cosine runs through the bit-identical
+    Arrow scorer (boot_rows² pair rows — at the stress tool's boot=1024
+    that is ~1M folds, minutes interpreted, seconds batched)."""
     from apde_etl_spark.operators.similarity import arrow_pair_cosine
 
     a = sub.select(F.col("__id").alias("src"), F.col("__v").alias("__va"),
                    F.col("__n").alias("__na"))
     b = sub.select(F.col("__id").alias("dst"), F.col("__v").alias("__vb"),
                    F.col("__n").alias("__nb"))
-    pairs = a.join(b, F.col("src") != F.col("dst"))
-    if use_arrow:
-        scored = arrow_pair_cosine(
-            pairs, keys=("src", "dst"), a_col="__va", b_col="__vb",
-            na_col="__na", nb_col="__nb")
-    else:
-        scored = pairs.select(
-            "src", "dst",
-            (dot(F.col("__va"), F.col("__vb"))
-             / (F.col("__na") * F.col("__nb"))).alias("__cos"))
+    scored = arrow_pair_cosine(
+        a.join(b, F.col("src") != F.col("dst")), keys=("src", "dst"),
+        a_col="__va", b_col="__vb", na_col="__na", nb_col="__nb")
     w = Window.partitionBy("src").orderBy(F.desc("__cos"), F.asc("dst"))
     return (
         scored
@@ -1181,7 +1168,6 @@ def build_knn_graph_insert(
     refresh_passes: int = 1,
     refresh_hops: int = 3,
     refresh_beam: int = 16,
-    use_arrow: bool | None = None,
 ) -> dict:
     """Construct the layered small-world index BY INSERTION (the true
     HNSW build of Malkov & Yashunin 2018, public method): each batch of
@@ -1242,8 +1228,7 @@ def build_knn_graph_insert(
     exact-built graph at the 200k stress point and a 1M-vector build
     wall in BASELINE.md (tools/scale_stress_anngraph.py --mode insert).
 
-    ``use_arrow`` (default on; ``SPARK_GRAFT_ANN_ARROW=0`` disables)
-    routes every pair-cosine through
+    Every pair-cosine runs through
     :func:`similarity.arrow_pair_cosine` — BIT-IDENTICAL to the HOF
     fold (same IEEE operation order; the gate-entry hashes are the
     standing regression), ~2 orders faster on the million-row
@@ -1252,12 +1237,9 @@ def build_knn_graph_insert(
     verdict #1).
     """
     import gc as _gc
-    import os as _os
 
     from apde_etl_spark.operators.similarity import arrow_pair_cosine
 
-    if use_arrow is None:
-        use_arrow = _os.environ.get("SPARK_GRAFT_ANN_ARROW", "1") != "0"
     spark = df.sparkSession
 
     def _ckpt(frame: DataFrame) -> DataFrame:
@@ -1303,12 +1285,11 @@ def build_knn_graph_insert(
     n_nodes = nodes.count()
 
     boot = nodes.filter(F.col("__rn") < boot_rows)
-    adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors, use_arrow=use_arrow))
+    adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors))
     adjU = None
     for l in range(1, n_layers + 1):
         sub = boot.filter(F.col("lvl") >= l)
-        arm = _knn_edges_cos(sub, layer_neighbors,
-                             use_arrow=use_arrow).select(
+        arm = _knn_edges_cos(sub, layer_neighbors).select(
             F.lit(l).cast("int").alias("layer"), "src", "dst", "__cos")
         adjU = arm if adjU is None else adjU.unionByName(arm)
     adjU = _ckpt(adjU)
@@ -1335,16 +1316,9 @@ def build_knn_graph_insert(
             F.col("lvl").alias("__clvl"))
 
         def score(cand: DataFrame) -> DataFrame:
-            joined = (
+            return arrow_pair_cosine(
                 cand.join(corpus, "__cid")
-                .join(q.select("query_id", "__qv", "__qn"), "query_id")
-            )
-            if use_arrow:
-                return arrow_pair_cosine(joined)
-            return joined.select(
-                "query_id", "__cid",
-                (dot(F.col("__cv"), F.col("__qv"))
-                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"))
+                .join(q.select("query_id", "__qv", "__qn"), "query_id"))
 
         def cut(scored: DataFrame, width: int) -> DataFrame:
             return (
@@ -1501,15 +1475,8 @@ def build_knn_graph_insert(
                     .distinct()
                     .join(visited, ["query_id", "__cid"], "left_anti")
                 )
-                joined_r = new.join(corpus_all, "__cid").join(
-                    q_all, "query_id")
-                if use_arrow:
-                    scored = arrow_pair_cosine(joined_r)
-                else:
-                    scored = joined_r.select(
-                        "query_id", "__cid",
-                        (dot(F.col("__cv"), F.col("__qv"))
-                         / (F.col("__cn") * F.col("__qn"))).alias("__cos"))
+                scored = arrow_pair_cosine(
+                    new.join(corpus_all, "__cid").join(q_all, "query_id"))
                 beam = _ckpt(
                     beam.unionAll(scored)
                     .withColumn("__rk", F.row_number().over(wq))

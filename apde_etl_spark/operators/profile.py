@@ -112,41 +112,6 @@ def distinct_counts(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def distinct_gate(df: DataFrame, cols: Sequence[str], threshold: int) -> set[str]:
-    """Columns with fewer than ``threshold`` distinct values (the demotion
-    set), computed scale-aware in two phases:
-
-    1. ``approx_count_distinct`` per column — single pass, no Expand, no
-       melt; HLL rsd is ~5%, so estimates outside a [0.7x, 1.5x)
-       band of the threshold are decided with certainty (>6 sigma).
-    2. exact :func:`distinct_counts` only over the survivors (the
-       low-cardinality columns the gate exists to find — cheap shuffle).
-
-    At 100 TB phase 1 reads each value once and shuffles nothing but
-    sketches; phase 2's melt covers only columns whose distinct sets are
-    tiny by construction.
-    """
-    if not cols:
-        return set()
-    row = df.agg(
-        *[F.approx_count_distinct(c).alias(c) for c in cols],
-        *[F.max(F.col(c).isNull().cast("int")).alias(f"__null_{c}") for c in cols],
-    ).first()
-    # approx_count_distinct ignores NULLs but the exact recount
-    # (uniqueN semantics) counts NULL as a value — add the null slot
-    # back so both phases measure on one scale
-    approx = {c: row[c] + (row[f"__null_{c}"] or 0) for c in cols}
-    # HLL rsd is 5%; a 30-50% margin on either side of the threshold is
-    # >6 sigma, so decisions outside the band are certain and only truly
-    # borderline columns pay for an exact recount (usually: none).
-    demoted = {c for c in cols if approx[c] < 0.7 * threshold}
-    maybe = [c for c in cols if 0.7 * threshold <= approx[c] < 1.5 * threshold]
-    if not maybe:
-        return demoted
-    exact = {r["varname"]: r["n_distinct"] for r in distinct_counts(df, maybe).collect()}
-    return demoted | {c for c, n in exact.items() if n < threshold}
-
-
 # ---------------------------------------------------------------------------
 # A1 — missingness profile (R :700-702; T-SQL :1184-1202)
 # ---------------------------------------------------------------------------

@@ -67,10 +67,6 @@ def ensure_min_parallelism(df: DataFrame, path: str | None = None) -> DataFrame:
     RDD conversion round-trip per query (~1s of pure overhead, measured).
     Column pruning pushes through the repartition, so only the columns
     the query reads are shuffled."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_REBALANCE"):
-        return df
     if path is not None:
         try:
             if _source_bytes(path, _REBALANCE_MAX_BYTES) > _REBALANCE_MAX_BYTES:

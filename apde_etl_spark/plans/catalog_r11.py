@@ -9,8 +9,9 @@ entries, the bench no longer executes ANY distributed work for those
 queries, so a regression in the iterative serve / superstep loop would
 be invisible until a corpus outgrows the gate. These twins compute the
 IDENTICAL result (same oracle SQL — the driver's correctness gate
-re-proves it every round) with the gates FORCED CLOSED, so the
-``--full`` bench carries a standing timing for the distributed shapes.
+re-proves it every round) with the gate parameter set to 0
+(``local_serve_max_rows`` / ``local_max_edges``), so the ``--full``
+bench carries a standing timing for the distributed shapes.
 
 Additions only: the headline list and every existing entry are
 untouched.
@@ -18,33 +19,14 @@ untouched.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from apde_etl_spark.plans.catalog import register
 from apde_etl_spark.plans.catalog_r6 import (
+    _pagerank_directed_sinks,
     _pagerank_directed_sql,
-    graph_pagerank_directed_sinks,
 )
-from apde_etl_spark.plans.catalog_r8 import _HNSW_TOPK_SQL, ann_hnsw_topk
-
-
-def _with_env_forced(fn, spark, sf_dir, env: dict[str, str]) -> DataFrame:
-    """Run an entry constructor with gate env vars pinned, restoring the
-    previous values afterwards. The gates are read at CONSTRUCT time
-    (the fast paths decide while the DataFrame is being assembled), so
-    scoping the override to the constructor call is exact."""
-    saved = {k: os.environ.get(k) for k in env}
-    os.environ.update(env)
-    try:
-        return fn(spark, sf_dir)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+from apde_etl_spark.plans.catalog_r8 import _HNSW_TOPK_SQL, _ann_hnsw_topk
 
 
 @register("ann_hnsw_topk_distributed", _HNSW_TOPK_SQL)
@@ -52,8 +34,7 @@ def ann_hnsw_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_hnsw_topk with the broadcast-index local serve FORCED OFF:
     the iterative join-per-hop layered walk — the plan any
     past-the-byte-gate corpus takes. Same rows, same oracle."""
-    return _with_env_forced(
-        ann_hnsw_topk, spark, sf_dir, {"SPARK_GRAFT_ANN_LOCAL_SERVE": "0"})
+    return _ann_hnsw_topk(spark, sf_dir, local_serve_max_rows=0)
 
 
 @register("graph_pagerank_directed_sinks_distributed",
@@ -63,6 +44,4 @@ def graph_pagerank_directed_sinks_distributed(
     """graph_pagerank_directed_sinks with the driver fast path FORCED
     OFF: the distributed superstep loop (join + groupBy per iteration)
     any past-the-gate graph takes. Same rows, same oracle."""
-    return _with_env_forced(
-        graph_pagerank_directed_sinks, spark, sf_dir,
-        {"SPARK_GRAFT_PR_LOCAL_EDGES": "0"})
+    return _pagerank_directed_sinks(spark, sf_dir, local_max_edges=0)

@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 from apde_etl_spark.operators import finalize as FIN
 from apde_etl_spark.operators import profile as P
 
+#: byte gate of the shared base-table cache in :func:`run_qa_pipeline`
+#: (Catalyst's size estimate of the projected input; 0 = never cache).
+#: Read at call time.
+QA_CACHE_MAX_BYTES = 256 * 1024 * 1024
+
 
 @dataclass
 class QaConfig:
@@ -130,17 +135,11 @@ def run_qa_pipeline(df: DataFrame, config: QaConfig) -> QaResults:
     # reads it back as an InMemoryTableScan). Past the gate the plan
     # is UNCHANGED — two column-pruned scans is the 100 TB shape;
     # caching a 100 TB base table is not.
-    import os
-
     from apde_etl_spark.operators.cache import tracked_persist
     from apde_etl_spark.operators.similarity import plan_size_bytes
 
-    try:
-        cache_gate = int(os.environ.get(
-            "SPARK_GRAFT_QA_CACHE_BYTES", str(256 * 1024 * 1024)))
-    except ValueError:
-        cache_gate = 256 * 1024 * 1024
-    if cache_gate > 0 and plan_size_bytes(base) <= cache_gate:
+    if (QA_CACHE_MAX_BYTES > 0
+            and plan_size_bytes(base) <= QA_CACHE_MAX_BYTES):
         base = tracked_persist(base, scope="qa")
 
     classes = P.classify_columns(base, cols)

@@ -11,19 +11,6 @@ from __future__ import annotations
 
 from typing import Any
 
-try:
-    import yaml
-except ImportError:  # pragma: no cover - baked into the container normally
-    yaml = None
-
-
-def load_yaml(path: str) -> dict[str, Any]:
-    if yaml is None:
-        raise ImportError("pyyaml not available")
-    with open(path) as f:
-        return yaml.safe_load(f)
-
-
 def resolve_config(
     config: dict[str, Any],
     keys: list[str],

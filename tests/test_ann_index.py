@@ -265,12 +265,12 @@ def test_hnsw_recall_floor_and_beats_nothing_lost(spark, sf_dir):
     assert r["recall_at_k"] >= 0.35
 
 
-def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
-                                      monkeypatch):
+def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path):
     """The size-gated broadcast-index serve (round 10) must reproduce
     the iterative join-per-hop walk BIT-FOR-BIT — flat and layered,
-    including the float64 cosines — and must respect its gates
-    (SPARK_GRAFT_ANN_LOCAL_SERVE=0 and SPARK_GRAFT_ANN_BCAST_ROWS)."""
+    including the float64 cosines — and must respect its row gate
+    (``local_serve_max_rows``: 0 turns it off, a cap below the corpus
+    size declines)."""
     import struct
 
     import pyspark.sql.functions as F
@@ -297,21 +297,18 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
         (ann_graph_search_layered,
          dict(k=3, beam=6, hops=2, descend_beam=4, hops_per_layer=1)),
     ]:
-        monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
         fast_df = fn(spark, d, queries, emb, **kw)
         # the fast path IS taken: single Arrow stage, no per-hop joins
         plan = fast_df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan and "Join" not in plan
         fast = fast_df.collect()
-        monkeypatch.setenv("SPARK_GRAFT_ANN_LOCAL_SERVE", "0")
-        it_df = fn(spark, d, queries, emb, **kw)
+        it_df = fn(spark, d, queries, emb, local_serve_max_rows=0, **kw)
         assert "MapInPandas" not in \
             it_df._jdf.queryExecution().executedPlan().toString()
         assert canon(fast) == canon(it_df.collect())
     # rows gate: a cap below the corpus size forces the iterative path
-    monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_ANN_BCAST_ROWS", "3")
-    gated = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2)
+    gated = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2,
+                             local_serve_max_rows=3)
     assert "MapInPandas" not in \
         gated._jdf.queryExecution().executedPlan().toString()
 
@@ -327,6 +324,7 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     iterative path, which preserves the original id type)."""
     import pyspark.sql.functions as F
 
+    import apde_etl_spark.operators.ann_index as AI
     from apde_etl_spark.operators.ann_index import (
         ann_graph_search,
         build_knn_graph,
@@ -336,7 +334,6 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     d = str(tmp_path / "bidx")
     build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    monkeypatch.delenv("SPARK_GRAFT_ANN_LOCAL_SERVE", raising=False)
 
     def is_fast(df):
         return "MapInPandas" in \
@@ -347,10 +344,10 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
                                     k=3, beam=6, hops=2))
     # (1) byte budget: this corpus is n x dim x 8B + slack; a budget
     # below that declines even though the row gate (200k) admits it
-    monkeypatch.setenv("SPARK_GRAFT_ANN_BCAST_BYTES", "1024")
+    monkeypatch.setattr(AI, "LOCAL_SERVE_MAX_BYTES", 1024)
     assert not is_fast(ann_graph_search(spark, d, queries, emb,
                                         k=3, beam=6, hops=2))
-    monkeypatch.delenv("SPARK_GRAFT_ANN_BCAST_BYTES", raising=False)
+    monkeypatch.undo()
     # (2) ragged queries: one query vector truncated to a shorter dim
     ragged = queries.select(
         "vec_id",

@@ -177,7 +177,7 @@ def test_local_fast_path_parity_bit_exact(spark, monkeypatch):
     """The size-gated driver fast path (round 10) must reproduce the
     distributed superstep loop EXACTLY — same int64 arithmetic, every
     mode: drop / redistribute / personalized / tol early-stop — and
-    respect its SPARK_GRAFT_PR_LOCAL_EDGES gate."""
+    respect its ``local_max_edges`` gate."""
     from pyspark.sql import functions as F
 
     from apde_etl_spark.operators import graph as G
@@ -204,25 +204,22 @@ def test_local_fast_path_parity_bit_exact(spark, monkeypatch):
         dict(iters=6, dangling="redistribute", tol=10**6),
     ]
     for kw in cases:
-        monkeypatch.delenv("SPARK_GRAFT_PR_LOCAL_EDGES", raising=False)
         taken.clear()
         fast = _ranks(pagerank_integer(edges, **kw))
         assert taken == [True], kw  # local path taken
-        monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "0")
         taken.clear()
-        slow = _ranks(pagerank_integer(edges, **kw))
+        slow = _ranks(pagerank_integer(edges, local_max_edges=0, **kw))
         assert taken == [False], kw  # distributed loop taken
         assert fast == slow, kw
     # a gate below the edge count also forces the distributed loop
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_EDGES", "3")
     taken.clear()
-    assert set(_ranks(pagerank_integer(edges, iters=3))) and taken == [False]
+    assert set(_ranks(pagerank_integer(edges, iters=3, local_max_edges=3))) \
+        and taken == [False]
 
 
-def test_local_fast_path_declines_int_ids(spark, monkeypatch):
+def test_local_fast_path_declines_int_ids(spark):
     """Non-long node ids fall back to the distributed loop (the local
     path would change the output schema)."""
-    monkeypatch.delenv("SPARK_GRAFT_PR_LOCAL_EDGES", raising=False)
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src int, dst int")
     df = pagerank_integer(edges, iters=2)
     assert "Join" in df._jdf.queryExecution().executedPlan().toString()

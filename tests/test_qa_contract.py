@@ -145,3 +145,38 @@ def test_digits_respected(synthetic):
     )
     means = [r["mean"] for r in res.values.filter(F.col("vartype") == "Continuous").collect()]
     assert means and all(round(m, 1) == m for m in means if m is not None)
+
+
+def test_uncached_base_branch_matches_cached(spark, orders, monkeypatch):
+    """Past ``QA_CACHE_MAX_BYTES`` the base table is not cached: the
+    melt and the standards check rescan the source instead. Both
+    branches must return the same missingness, values and chi frames."""
+    from apde_etl_spark.operators.cache import release_scope
+    from apde_etl_spark.plans import qa_pipeline as QP
+
+    std = spark.createDataFrame(
+        [("o_orderstatus", v) for v in ["O", "F", "P", "X"]], ["varname", "group"]
+    )
+    cfg = QaConfig(
+        time_var="o_orderdate",
+        time_expr=F.year("o_orderdate").cast("int"),
+        cols=["o_orderstatus", "o_orderpriority", "o_totalprice", "o_custkey"],
+        standards=std,
+    )
+
+    def run():
+        res = run_qa_pipeline(orders, cfg)
+        plan = res.chi_standards._jdf.queryExecution().executedPlan().toString()
+        out = [sorted(repr(tuple(r)) for r in f.collect())
+               for f in (res.missingness, res.values, res.chi_standards)]
+        res.release()
+        release_scope("qa")
+        return plan, out
+
+    cached_plan, cached = run()
+    assert "InMemoryTableScan" in cached_plan
+    monkeypatch.setattr(QP, "QA_CACHE_MAX_BYTES", 0)
+    plan, uncached = run()
+    assert "InMemoryTableScan" not in plan
+    assert all(cached), cached
+    assert uncached == cached

@@ -2,8 +2,7 @@
 
 On the shuffle candidate path the scorer is arrow_pair_cosine (numpy
 per-dimension accumulation); on the broadcast path it stays the in-plan
-JVM HOF fold. The two must be BIT-IDENTICAL — same IEEE-754 op order —
-and SPARK_GRAFT_ANN_ARROW=0 must force the fold everywhere.
+JVM HOF fold. The two must be BIT-IDENTICAL — same IEEE-754 op order.
 """
 from __future__ import annotations
 
@@ -24,13 +23,14 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_arrow_seam_bit_exact_and_gated(spark, sf_dir, monkeypatch):
+def test_arrow_seam_bit_exact_and_gated(spark, sf_dir):
+    """The scorer follows ``strategy`` alone: fold on broadcast, Arrow
+    on shuffle, identical rows."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     for fn, kw in [
         (SIM.ann_lsh_topk, dict(k=5, num_planes=6, dim=64)),
         (SIM.embed_neardup_pairs, dict(threshold=0.3, num_planes=6, dim=64)),
     ]:
-        monkeypatch.delenv("SPARK_GRAFT_ANN_ARROW", raising=False)
         fold_df = fn(emb, strategy="broadcast", **kw)
         assert "MapInPandas" not in _plan(fold_df)
         fold = _canon(fold_df.collect())
@@ -38,11 +38,6 @@ def test_arrow_seam_bit_exact_and_gated(spark, sf_dir, monkeypatch):
         arrow_df = fn(emb, strategy="shuffle", **kw)
         assert "MapInPandas" in _plan(arrow_df), fn.__name__
         assert fold == _canon(arrow_df.collect()), fn.__name__
-
-        monkeypatch.setenv("SPARK_GRAFT_ANN_ARROW", "0")
-        off_df = fn(emb, strategy="shuffle", **kw)
-        assert "MapInPandas" not in _plan(off_df)
-        assert fold == _canon(off_df.collect()), fn.__name__
 
 
 def test_arrow_pair_cosine_direct_matches_fold(spark, sf_dir):
