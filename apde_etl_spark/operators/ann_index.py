@@ -526,12 +526,14 @@ def build_knn_graph(
 # op order via per-dimension accumulation, same (cos DESC, id ASC)
 # cuts, same distinct/union semantics; parity is test-pinned against
 # the iterative walk and the gate entries' oracle hashes). Past the
-# gate — or with ``local_serve_max_rows=0`` — the iterative
-# join-per-hop plan below serves unchanged; that is the path a corpus
-# too large to replicate must take, and the two produce identical rows.
+# gate — or with ``ann_graph_search_layered(local_serve_max_rows=0)``
+# — the iterative join-per-hop plan below serves unchanged; that is
+# the path a corpus too large to replicate must take, and the two
+# produce identical rows.
 
 #: row gate of the local serve: a corpus with more rows takes the
-#: iterative walk (``local_serve_max_rows`` overrides it per call).
+#: iterative walk (``ann_graph_search_layered(local_serve_max_rows=)``
+#: overrides it per call).
 LOCAL_SERVE_MAX_ROWS = 200_000
 
 #: byte budget for the replicated-index payload (round-10 verdict #3):
@@ -873,7 +875,6 @@ def ann_graph_search(
     hops: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    local_serve_max_rows: int = LOCAL_SERVE_MAX_ROWS,
 ) -> DataFrame:
     """Serve queries from the FROZEN k-NN graph: fixed-hop beam search.
 
@@ -895,16 +896,16 @@ def ann_graph_search(
     graph/graph_meta parquet and the two input frames — no
     construction scan (test-asserted).
 
-    A corpus of at most ``local_serve_max_rows`` rows (0 = never)
-    serves from the broadcast index in one Arrow stage instead, with
-    identical rows (see :func:`_try_local_serve`).
+    A corpus of at most :data:`LOCAL_SERVE_MAX_ROWS` rows serves from
+    the broadcast index in one Arrow stage instead, with identical rows
+    (see :func:`_try_local_serve`).
 
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_query_prebuilt`."""
     fast = _try_local_serve(
         spark, index_dir, queries_df, corpus_df, k=k, beam=beam,
         hops=hops, descend_beam=0, hops_per_layer=0, id_col=id_col,
-        vec_col=vec_col, layered=False, max_rows=local_serve_max_rows)
+        vec_col=vec_col, layered=False, max_rows=LOCAL_SERVE_MAX_ROWS)
     if fast is not None:
         return fast
     graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
@@ -994,8 +995,8 @@ def ann_graph_search_layered(
     neighborhood in O(log n) hops, so the fixed layer-0 budget is
     spent refining, not traveling.
 
-    ``local_serve_max_rows`` gates the broadcast-index serve as in
-    :func:`ann_graph_search`.
+    A corpus of at most ``local_serve_max_rows`` rows (0 = never)
+    serves from the broadcast index as in :func:`ann_graph_search`.
 
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_graph_search`."""

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators.cache import tracked_persist
-from apde_etl_spark.operators.graph import PR_LOCAL_MAX_EDGES, pagerank_integer
+from apde_etl_spark.operators.graph import pagerank_integer
 from apde_etl_spark.plans.catalog import _sql_round, load, materialize_ctes, register
 from apde_etl_spark.plans.catalog_r5b import _SQ8_QUANT_SQL
 
@@ -292,18 +292,19 @@ def graph_pagerank_directed_sinks(spark: SparkSession, sf_dir: str) -> DataFrame
     (asserted in tests/test_graph.py). Per iteration the extra cost is
     one |V_sink|-row aggregate broadcast as a 1-row literal; everything
     else is the same join + groupBy on the node id."""
-    return _pagerank_directed_sinks(spark, sf_dir, PR_LOCAL_MAX_EDGES)
+    return _pagerank_directed_sinks(spark, sf_dir)
 
 
 def _pagerank_directed_sinks(spark: SparkSession, sf_dir: str,
-                             local_max_edges: int) -> DataFrame:
-    """Body of :func:`graph_pagerank_directed_sinks` with the driver
-    path's edge gate passed in (0 forces the distributed loop)."""
+                             **pr_kw) -> DataFrame:
+    """Body of :func:`graph_pagerank_directed_sinks`; ``pr_kw`` reaches
+    :func:`pagerank_integer` (``local_max_edges=0`` forces the
+    distributed loop)."""
     edges = tracked_persist(_edges_directed(spark, sf_dir), scope="graph")
     pr = pagerank_integer(
         edges, iters=_PR_ITERS, scale=_PR_SCALE,
         dangling="redistribute", cache_scope="graph",
-        broadcast_below=2_000_000, local_max_edges=local_max_edges)
+        broadcast_below=2_000_000, **pr_kw)
     return pr.select("node", F.col("rank").alias("pr_rank"))
 
 

@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apde_etl_spark.operators.ann_index import LOCAL_SERVE_MAX_ROWS
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
@@ -223,13 +222,14 @@ def ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests/test_plan_shapes.py). Oracle rebuilds levels and
     per-layer adjacencies from first principles and unrolls the
     identical descent + hops."""
-    return _ann_hnsw_topk(spark, sf_dir, LOCAL_SERVE_MAX_ROWS)
+    return _ann_hnsw_topk(spark, sf_dir)
 
 
 def _ann_hnsw_topk(spark: SparkSession, sf_dir: str,
-                   local_serve_max_rows: int) -> DataFrame:
-    """Body of :func:`ann_hnsw_topk` with the local-serve row gate
-    passed in (0 forces the iterative walk)."""
+                   **serve_kw) -> DataFrame:
+    """Body of :func:`ann_hnsw_topk`; ``serve_kw`` reaches
+    :func:`ann_graph_search_layered` (``local_serve_max_rows=0`` forces
+    the iterative walk)."""
     from apde_etl_spark.functions.core import round_half_away
     from apde_etl_spark.operators.ann_index import ann_graph_search_layered
 
@@ -238,8 +238,7 @@ def _ann_hnsw_topk(spark: SparkSession, sf_dir: str,
     queries = emb.filter(F.expr(_H_QUERY_PRED))
     out = ann_graph_search_layered(
         spark, d, queries, emb, k=_H_K, beam=_H_BEAM, hops=_H_HOPS,
-        descend_beam=_H_DBEAM, hops_per_layer=_H_HPL,
-        local_serve_max_rows=local_serve_max_rows)
+        descend_beam=_H_DBEAM, hops_per_layer=_H_HPL, **serve_kw)
     return out.select(
         "query_id", "rank", "vec_id",
         round_half_away(F.col("cosine_raw"), 6).alias("cosine_sim"),

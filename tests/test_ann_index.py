@@ -265,7 +265,8 @@ def test_hnsw_recall_floor_and_beats_nothing_lost(spark, sf_dir):
     assert r["recall_at_k"] >= 0.35
 
 
-def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path):
+def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
+                                     monkeypatch):
     """The size-gated broadcast-index serve (round 10) must reproduce
     the iterative join-per-hop walk BIT-FOR-BIT — flat and layered,
     including the float64 cosines — and must respect its row gate
@@ -275,6 +276,7 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path):
 
     import pyspark.sql.functions as F
 
+    import apde_etl_spark.operators.ann_index as AI
     from apde_etl_spark.operators.ann_index import (
         ann_graph_search,
         ann_graph_search_layered,
@@ -292,23 +294,30 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path):
             tuple(struct.pack(">d", v).hex() if isinstance(v, float)
                   else v for v in r) for r in rows)
 
-    for fn, kw in [
-        (ann_graph_search, dict(k=3, beam=6, hops=2)),
-        (ann_graph_search_layered,
-         dict(k=3, beam=6, hops=2, descend_beam=4, hops_per_layer=1)),
+    def iterative_flat(*a, **kw):
+        # the flat serve has no gate parameter: make the gate decline
+        with monkeypatch.context() as m:
+            m.setattr(AI, "_try_local_serve", lambda *a, **kw: None)
+            return ann_graph_search(*a, **kw)
+
+    layered_kw = dict(k=3, beam=6, hops=2, descend_beam=4,
+                      hops_per_layer=1)
+    for fast_df, it_df in [
+        (ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2),
+         iterative_flat(spark, d, queries, emb, k=3, beam=6, hops=2)),
+        (ann_graph_search_layered(spark, d, queries, emb, **layered_kw),
+         ann_graph_search_layered(spark, d, queries, emb,
+                                  local_serve_max_rows=0, **layered_kw)),
     ]:
-        fast_df = fn(spark, d, queries, emb, **kw)
         # the fast path IS taken: single Arrow stage, no per-hop joins
         plan = fast_df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan and "Join" not in plan
-        fast = fast_df.collect()
-        it_df = fn(spark, d, queries, emb, local_serve_max_rows=0, **kw)
         assert "MapInPandas" not in \
             it_df._jdf.queryExecution().executedPlan().toString()
-        assert canon(fast) == canon(it_df.collect())
+        assert canon(fast_df.collect()) == canon(it_df.collect())
     # rows gate: a cap below the corpus size forces the iterative path
-    gated = ann_graph_search(spark, d, queries, emb, k=3, beam=6, hops=2,
-                             local_serve_max_rows=3)
+    gated = ann_graph_search_layered(spark, d, queries, emb,
+                                     local_serve_max_rows=3, **layered_kw)
     assert "MapInPandas" not in \
         gated._jdf.queryExecution().executedPlan().toString()
 
