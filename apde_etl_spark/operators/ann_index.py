@@ -526,10 +526,12 @@ def build_knn_graph(
 # op order via per-dimension accumulation, same (cos DESC, id ASC)
 # cuts, same distinct/union semantics; parity is test-pinned against
 # the iterative walk and the gate entries' oracle hashes). Past the
-# gate — or with ``ann_graph_search_layered(local_serve_max_rows=0)``
-# — the iterative join-per-hop plan below serves unchanged; that is
-# the path a corpus too large to replicate must take, and the two
-# produce identical rows.
+# gate both serve functions run ONE iterative join-per-hop walk,
+# :func:`_serve_walk`; that is the path a corpus too large to
+# replicate must take, and the two produce identical rows. Force the
+# walk with ``ann_graph_search_layered(local_serve_max_rows=0)``, or
+# for either function by monkeypatching ``_try_local_serve`` to
+# return None.
 
 #: row gate of the local serve: a corpus with more rows takes the
 #: iterative walk (``ann_graph_search_layered(local_serve_max_rows=)``
@@ -685,11 +687,9 @@ def _try_local_serve(
                 "layer_meta", ["n_layers", "layer_factor"])
             n_layers = int(lm_pdf["n_layers"].iloc[0])
             layer_factor = int(lm_pdf["layer_factor"].iloc[0])
-            try:
+            if not _upper_absent(spark, index_dir):
                 upper_pdf = artifact_pdf(
                     "graph_upper", ["layer", "src", "dst"])
-            except Exception:
-                upper_pdf = None  # every upper layer was < 2 nodes
             top = n_layers if upper_pdf is not None else 0
 
         cor = corpus_df.select(
@@ -813,6 +813,10 @@ def _try_local_serve(
             return np.concatenate(
                 [dst[indptr[c]:indptr[c + 1]] for c in cand])
 
+        def hop(bidx, csr, width, qv, qn):
+            cand = np.unique(np.concatenate([bidx, neigh(bidx, csr)]))
+            return cut(cand, score(cand, qv, qn), width)
+
         for pdf in batches:
             m = len(pdf)
             out_qid, out_rank, out_vid, out_cos = [], [], [], []
@@ -831,29 +835,21 @@ def _try_local_serve(
                     bidx, bcos = cut(
                         seeds_idx, score(seeds_idx, qv, qn), dbeam)
                     for lyr in range(top, 0, -1):
-                        u_csr = uppers[lyr]
                         for _ in range(hpl):
-                            cand = np.unique(np.concatenate(
-                                [bidx, neigh(bidx, u_csr)]))
-                            bidx, bcos = cut(
-                                cand, score(cand, qv, qn), dbeam)
-                    start = np.concatenate([bidx, e_idx])
+                            bidx, bcos = hop(bidx, uppers[lyr], dbeam,
+                                             qv, qn)
+                    bidx = np.concatenate([bidx, e_idx])
                 else:
-                    start = e_idx
-                bidx, bcos = start, None
+                    bidx = e_idx
                 for _ in range(hops_n):
-                    cand = np.unique(np.concatenate(
-                        [bidx, neigh(bidx, g_csr)]))
-                    bidx, bcos = cut(cand, score(cand, qv, qn), beam_w)
+                    bidx, bcos = hop(bidx, g_csr, beam_w, qv, qn)
                 mask = cids[bidx] != qid
-                fi, fc = bidx[mask], bcos[mask]
-                key = np.where(np.isnan(fc), -np.inf, -fc)
-                oo = np.lexsort((cids[fi], key))[:kk]
-                for rk, j in enumerate(oo, 1):
+                fi, fc = cut(bidx[mask], bcos[mask], kk)
+                for rk, (vi, c) in enumerate(zip(fi, fc), 1):
                     out_qid.append(qid)
                     out_rank.append(rk)
-                    out_vid.append(cids[fi[j]])
-                    out_cos.append(fc[j])
+                    out_vid.append(cids[vi])
+                    out_cos.append(c)
             yield pd.DataFrame({
                 "query_id": pd.Series(out_qid,
                                       dtype=pdf["query_id"].dtype),
@@ -863,6 +859,140 @@ def _try_local_serve(
             }).rename(columns={"vec_id_out": out_schema[2].name})
 
     return q_src.mapInPandas(serve, out_schema)
+
+
+def _upper_absent(spark: SparkSession, index_dir: str) -> bool:
+    """True when the build wrote no ``graph_upper`` (every upper layer
+    had < 2 nodes: a tiny corpus). Decided by absence alone — no
+    directory on a local index, the Spark reader's PATH_NOT_FOUND on
+    any other store — so a corrupt or unreadable upper layer raises
+    instead of serving the flat walk's different rows."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    if os.path.isdir(index_dir):
+        return not os.path.isdir(f"{index_dir}/graph_upper")
+    try:
+        spark.read.parquet(f"{index_dir}/graph_upper")
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return True
+        raise
+    return False
+
+
+def _beam_cut(scored: DataFrame, width: int) -> DataFrame:
+    """Per-query top-``width`` of (query_id, __cid, __cos) by (cosine
+    desc, id asc) — the cut of every expand-score-cut round, in the
+    serve walk and in the insertion build."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("__cos"), F.asc("__cid"))
+    return (
+        scored.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= width)
+        .select("query_id", "__cid", "__cos")
+    )
+
+
+def _serve_walk(
+    spark: SparkSession,
+    index_dir: str,
+    queries_df: DataFrame,
+    corpus_df: DataFrame,
+    k: int,
+    beam: int,
+    hops: int,
+    descend_beam: int,
+    hops_per_layer: int,
+    id_col: str,
+    vec_col: str,
+    layered: bool,
+) -> DataFrame:
+    """The iterative join-per-hop serve behind :func:`ann_graph_search`
+    (``layered=False``) and :func:`ann_graph_search_layered`: the
+    layered descent when asked for and the index has upper layers, then
+    the flat layer-0 walk. Every round is one equi-join against the
+    persisted adjacency + an exact-cosine window cut."""
+    graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
+    meta = spark.read.parquet(f"{index_dir}/graph_meta")
+    top = 0
+    if layered:
+        lmeta = spark.read.parquet(f"{index_dir}/layer_meta").first()
+        n_layers = int(lmeta["n_layers"])
+        layer_factor = int(lmeta["layer_factor"])
+        upper = None
+        if not _upper_absent(spark, index_dir):
+            upper = spark.read.parquet(f"{index_dir}/graph_upper")
+        # descend from layer_meta's n_layers whenever upper artifacts
+        # exist: seeds come from the LEVEL assignment (corpus nodes
+        # with lvl >= top), not from the edge table, so an edge-sparse
+        # top layer just no-ops its hop rounds. Identical to probing
+        # max(layer) PROVIDED the top layer's lvl>= set is populated
+        # (true at every gate/stress corpus here); on a hash-unlucky
+        # corpus whose top layer is empty the descent degrades to the
+        # layer below seeded through empty rounds plus the entry points
+        # — recall-safe but not result-identical to a max(layer) probe
+        # (round-9 ADVICE #1). The branch-free form is what the
+        # unrolled SQL oracles (and the insert-built index, whose top
+        # layer bootstraps gradually) restate
+        top = n_layers if upper is not None else 0
+
+    q = queries_df.select(
+        F.col(id_col).alias("query_id"),
+        as_double_array(vec_col).alias("__qv"),
+    ).withColumn("__qn", l2_norm(F.col("__qv")))
+    corpus = corpus_df.select(
+        F.col(id_col).alias("__cid"), as_double_array(vec_col).alias("__cv")
+    ).withColumn("__cn", l2_norm(F.col("__cv")))
+
+    def score(cand: DataFrame) -> DataFrame:
+        return (
+            cand.join(corpus, "__cid")
+            .join(q, "query_id")
+            .select(
+                "query_id", "__cid",
+                (dot(F.col("__cv"), F.col("__qv"))
+                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"),
+            )
+        )
+
+    def hop(beam_df: DataFrame, edges: DataFrame, width: int) -> DataFrame:
+        expanded = beam_df.select("query_id", "__cid").unionAll(
+            beam_df.join(
+                edges, beam_df["__cid"] == edges["src"]
+            ).select("query_id", F.col("dst").alias("__cid"))
+        ).distinct()
+        # bound lineage growth across hops (the PageRank/BFS discipline)
+        return _beam_cut(score(expanded), width).localCheckpoint(eager=False)
+
+    # layer 0 seeds with every stored entry point (n_entries rows
+    # broadcast), plus the descent beam on a layered index
+    beam_df = q.select("query_id").crossJoin(
+        F.broadcast(meta.select(F.col("entry_id").alias("__cid"))))
+    if top > 0:
+        lv = node_levels(corpus_df, id_col, n_layers, layer_factor)
+        seeds = lv.filter(F.col("lvl") >= top).select(
+            F.col(id_col).alias("__cid"))
+        down = _beam_cut(score(
+            q.select("query_id").crossJoin(F.broadcast(seeds))),
+            descend_beam).localCheckpoint(eager=False)
+        for l in range(top, 0, -1):
+            edges_l = upper.filter(F.col("layer") == l).select("src", "dst")
+            for _ in range(hops_per_layer):
+                down = hop(down, edges_l, descend_beam)
+        beam_df = down.select("query_id", "__cid").unionAll(beam_df)
+    for _ in range(hops):
+        beam_df = hop(beam_df, graph, beam)
+    wf = Window.partitionBy("query_id").orderBy(
+        F.desc("__cos"), F.asc("__cid"))
+    return (
+        beam_df.filter(F.col("__cid") != F.col("query_id"))
+        .withColumn("rank", F.row_number().over(wf).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", F.col("__cid").alias(id_col),
+                F.col("__cos").alias("cosine_raw"))
+    )
 
 
 def ann_graph_search(
@@ -897,8 +1027,11 @@ def ann_graph_search(
     construction scan (test-asserted).
 
     A corpus of at most :data:`LOCAL_SERVE_MAX_ROWS` rows serves from
-    the broadcast index in one Arrow stage instead, with identical rows
-    (see :func:`_try_local_serve`).
+    the broadcast index in one Arrow stage (see :func:`_try_local_serve`);
+    anything else runs the iterative walk :func:`_serve_walk`, which
+    :func:`ann_graph_search_layered` shares. The two give identical
+    rows; force the walk by monkeypatching ``_try_local_serve`` to
+    return None.
 
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_query_prebuilt`."""
@@ -908,54 +1041,8 @@ def ann_graph_search(
         vec_col=vec_col, layered=False, max_rows=LOCAL_SERVE_MAX_ROWS)
     if fast is not None:
         return fast
-    graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
-    meta = spark.read.parquet(f"{index_dir}/graph_meta")
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    corpus = corpus_df.select(
-        F.col(id_col).alias("__cid"), as_double_array(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(corpus, "__cid")
-            .join(q, "query_id")
-            .select(
-                "query_id", "__cid",
-                (dot(F.col("__cv"), F.col("__qv"))
-                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"),
-            )
-        )
-
-    # seed with every stored entry point (n_entries rows broadcast)
-    beam_df = q.select("query_id").crossJoin(
-        F.broadcast(meta.select(F.col("entry_id").alias("__cid"))))
-    for _ in range(hops):
-        expanded = beam_df.select("query_id", "__cid").unionAll(
-            beam_df.join(
-                graph, beam_df["__cid"] == graph["src"]
-            ).select("query_id", F.col("dst").alias("__cid"))
-        ).distinct()
-        scored = score(expanded).withColumn(
-            "__rk", F.row_number().over(wb))
-        beam_df = scored.filter(F.col("__rk") <= beam).select(
-            "query_id", "__cid", "__cos")
-        # bound lineage growth across hops (the PageRank/BFS discipline)
-        beam_df = beam_df.localCheckpoint(eager=False)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-    return (
-        beam_df.filter(F.col("__cid") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wf).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("__cid").alias(id_col),
-                F.col("__cos").alias("cosine_raw"))
-    )
+    return _serve_walk(spark, index_dir, queries_df, corpus_df, k, beam,
+                       hops, 0, 0, id_col, vec_col, layered=False)
 
 
 def ann_graph_search_layered(
@@ -995,8 +1082,10 @@ def ann_graph_search_layered(
     neighborhood in O(log n) hops, so the fixed layer-0 budget is
     spent refining, not traveling.
 
-    A corpus of at most ``local_serve_max_rows`` rows (0 = never)
-    serves from the broadcast index as in :func:`ann_graph_search`.
+    A corpus of at most ``local_serve_max_rows`` rows serves from the
+    broadcast index as in :func:`ann_graph_search`; 0 (or a
+    monkeypatched ``_try_local_serve`` returning None) forces the
+    shared iterative walk :func:`_serve_walk`, with identical rows.
 
     Returns (query_id, rank, vec_id, cosine_raw) — ``cosine_raw``
     unrounded, as in :func:`ann_graph_search`."""
@@ -1007,104 +1096,9 @@ def ann_graph_search_layered(
         layered=True, max_rows=local_serve_max_rows)
     if fast is not None:
         return fast
-    graph = spark.read.parquet(f"{index_dir}/graph").select("src", "dst")
-    meta = spark.read.parquet(f"{index_dir}/graph_meta")
-    lmeta = spark.read.parquet(f"{index_dir}/layer_meta").first()
-    n_layers = int(lmeta["n_layers"])
-    layer_factor = int(lmeta["layer_factor"])
-    try:
-        upper = spark.read.parquet(f"{index_dir}/graph_upper")
-    except Exception:
-        upper = None  # every upper layer was < 2 nodes (tiny corpus)
-
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        as_double_array(vec_col).alias("__qv"),
-    ).withColumn("__qn", l2_norm(F.col("__qv")))
-    corpus = corpus_df.select(
-        F.col(id_col).alias("__cid"), as_double_array(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm(F.col("__cv")))
-
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(corpus, "__cid")
-            .join(q, "query_id")
-            .select(
-                "query_id", "__cid",
-                (dot(F.col("__cv"), F.col("__qv"))
-                 / (F.col("__cn") * F.col("__qn"))).alias("__cos"),
-            )
-        )
-
-    def cut(scored: DataFrame, width: int) -> DataFrame:
-        return (
-            scored.withColumn("__rk", F.row_number().over(wb))
-            .filter(F.col("__rk") <= width)
-            .select("query_id", "__cid", "__cos")
-        )
-
-    # ---- descent: top-layer seeds, expand-score-cut per layer
-    lv = node_levels(corpus_df, id_col, n_layers, layer_factor)
-    # descend from layer_meta's n_layers whenever upper artifacts exist:
-    # seeds come from the LEVEL assignment (corpus nodes with lvl >=
-    # top), not from the edge table, so an edge-sparse top layer just
-    # no-ops its hop rounds. Identical to probing max(layer) PROVIDED
-    # the top layer's lvl>= set is populated (true at every gate/stress
-    # corpus here); on a hash-unlucky corpus whose top layer is empty
-    # the descent degrades to the layer below seeded through empty
-    # rounds plus the entry points — recall-safe but not result-
-    # identical to a max(layer) probe (round-9 ADVICE #1). The
-    # branch-free form is what the unrolled SQL oracles (and the
-    # insert-built index, whose top layer bootstraps gradually) restate
-    top = n_layers if upper is not None else 0
-    if top > 0:
-        seeds = lv.filter(F.col("lvl") >= top).select(
-            F.col(id_col).alias("__cid"))
-        beam_df = cut(score(
-            q.select("query_id").crossJoin(F.broadcast(seeds))),
-            descend_beam)
-        beam_df = beam_df.localCheckpoint(eager=False)
-        for l in range(top, 0, -1):
-            edges_l = upper.filter(F.col("layer") == l).select("src", "dst")
-            for _ in range(hops_per_layer):
-                expanded = beam_df.select("query_id", "__cid").unionAll(
-                    beam_df.join(
-                        edges_l, beam_df["__cid"] == edges_l["src"]
-                    ).select("query_id", F.col("dst").alias("__cid"))
-                ).distinct()
-                beam_df = cut(score(expanded), descend_beam)
-                # bound lineage growth across rounds (the flat walk's
-                # localCheckpoint discipline)
-                beam_df = beam_df.localCheckpoint(eager=False)
-        seed0 = beam_df.select("query_id", "__cid")
-    else:
-        seed0 = None
-
-    # ---- layer 0: the flat fixed-hop walk, seeded by descent + entries
-    ent = q.select("query_id").crossJoin(
-        F.broadcast(meta.select(F.col("entry_id").alias("__cid"))))
-    beam_ids = ent if seed0 is None else seed0.unionAll(ent)
-    beam_df = beam_ids
-    for _ in range(hops):
-        expanded = beam_df.select("query_id", "__cid").unionAll(
-            beam_df.join(
-                graph, beam_df["__cid"] == graph["src"]
-            ).select("query_id", F.col("dst").alias("__cid"))
-        ).distinct()
-        beam_df = cut(score(expanded), beam)
-        beam_df = beam_df.localCheckpoint(eager=False)
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-    return (
-        beam_df.filter(F.col("__cid") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wf).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("__cid").alias(id_col),
-                F.col("__cos").alias("cosine_raw"))
-    )
+    return _serve_walk(spark, index_dir, queries_df, corpus_df, k, beam,
+                       hops, descend_beam, hops_per_layer, id_col, vec_col,
+                       layered=True)
 
 
 def _knn_edges_cos(sub: DataFrame, k: int) -> DataFrame:
@@ -1148,6 +1142,61 @@ def _prune_adj(edges: DataFrame, k: int,
         .filter(F.col("__rk") <= k)
         .select(*keys, "dst", "__cos")
     )
+
+
+def _ckpt(frame: DataFrame) -> DataFrame:
+    """Eager localCheckpoint + ORIGIN-STATS STRIP — the round-10 fix for
+    the ≥100k insertion-build wall. `Dataset.localCheckpoint` preserves
+    the source plan's size estimate on the resulting LogicalRDD; inside
+    the build's batch loop that estimate is itself a product of
+    per-round join estimates, so each batch's adjacency carries a size
+    ~(previous batch's size)^(rounds) — the DIGIT COUNT of the
+    BigInteger grows geometrically per batch, and by ~100k vectors
+    Catalyst stats evaluation (one Toom-Cook multiply per visited plan
+    node, single-threaded on the driver) dominates the whole build
+    (thread-dump evidence in BASELINE.md round 10). Rebinding the
+    checkpointed RDD through internalCreateDataFrame drops originStats
+    — the frame reads the same checkpoint blocks and returns the
+    identical rows; only the ESTIMATE resets (to defaultSizeInBytes),
+    and AQE re-picks join strategies from true runtime sizes."""
+    spark = frame.sparkSession
+    ck = frame.localCheckpoint(eager=True)
+    try:
+        # PRIVATE JVM APIs (Spark 4.x signatures): guarded so a
+        # Spark build/Connect session without them degrades to the
+        # plain eager checkpoint — correct rows, only slower past
+        # ~100k rows where the stats-growth wall returns
+        # (round-10 ADVICE, low).
+        jdf = ck._jdf
+        jnew = spark._jsparkSession.internalCreateDataFrame(
+            jdf.queryExecution().toRdd(), jdf.schema(), False)
+        return DataFrame(jnew, spark)
+    except Exception:
+        return ck
+
+
+def _walk_round(beam: DataFrame, visited: DataFrame, edges: DataFrame,
+                width: int, score) -> tuple[DataFrame, DataFrame]:
+    """One expand-score-cut round of the insertion build (batch inserts
+    and refresh passes) with a per-query VISITED set (the HNSW visited
+    list): only never-scored candidates pay the cosine via ``score``
+    ((query_id, __cid) -> (query_id, __cid, __cos)), the carried beam
+    keeps its known scores. RESULT-IDENTICAL to rescore-everything
+    within a fixed-width phase — a candidate dropped from a
+    top-``width`` beam lost to ``width`` still-present better ones and
+    can never re-enter the top-``width`` of a superset — and the
+    scoring volume drops by the revisit factor (most expansions near
+    convergence are revisits). ``visited`` must reset at width-change
+    boundaries (a width-8 reject may be a width-16 keeper)."""
+    new = (
+        beam.join(edges, beam["__cid"] == edges["src"])
+        .select("query_id", F.col("dst").alias("__cid"))
+        .distinct()
+        .join(visited, ["query_id", "__cid"], "left_anti")
+    )
+    beam2 = _ckpt(_beam_cut(beam.unionAll(score(new)), width))
+    visited2 = _ckpt(visited.unionAll(new.select("query_id", "__cid")))
+    return beam2, visited2
 
 
 def build_knn_graph_insert(
@@ -1242,36 +1291,6 @@ def build_knn_graph_insert(
     from apde_etl_spark.operators.similarity import arrow_pair_cosine
 
     spark = df.sparkSession
-
-    def _ckpt(frame: DataFrame) -> DataFrame:
-        """Eager localCheckpoint + ORIGIN-STATS STRIP — the round-10
-        fix for the ≥100k build wall. `Dataset.localCheckpoint`
-        preserves the source plan's size estimate on the resulting
-        LogicalRDD; inside this loop that estimate is itself a product
-        of per-round join estimates, so each batch's adjacency carries
-        a size ~(previous batch's size)^(rounds) — the DIGIT COUNT of
-        the BigInteger grows geometrically per batch, and by ~100k
-        vectors Catalyst stats evaluation (one Toom-Cook multiply per
-        visited plan node, single-threaded on the driver) dominates
-        the whole build (thread-dump evidence in BASELINE.md round
-        10). Rebinding the checkpointed RDD through
-        internalCreateDataFrame drops originStats — the frame reads
-        the same checkpoint blocks and returns the identical rows;
-        only the ESTIMATE resets (to defaultSizeInBytes), and AQE
-        re-picks join strategies from true runtime sizes."""
-        ck = frame.localCheckpoint(eager=True)
-        try:
-            # PRIVATE JVM APIs (Spark 4.x signatures): guarded so a
-            # Spark build/Connect session without them degrades to the
-            # plain eager checkpoint — correct rows, only slower past
-            # ~100k rows where the stats-growth wall returns
-            # (round-10 ADVICE, low).
-            jdf = ck._jdf
-            jnew = spark._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False)
-            return DataFrame(jnew, spark)
-        except Exception:
-            return ck
     e = df.select(
         F.col(id_col).cast("long").alias("__id"),
         as_double_array(vec_col).alias("__v"),
@@ -1297,9 +1316,6 @@ def build_knn_graph_insert(
     ent0 = _ckpt(_entry_frame(boot, "__id", n_entries, n_neighbors)
                  .select(F.col("entry_id").alias("__cid")))
 
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("__cid"))
-
     start = boot_rows
     n_batches = 0
     while start < n_nodes:
@@ -1321,38 +1337,6 @@ def build_knn_graph_insert(
                 cand.join(corpus, "__cid")
                 .join(q.select("query_id", "__qv", "__qn"), "query_id"))
 
-        def cut(scored: DataFrame, width: int) -> DataFrame:
-            return (
-                scored.withColumn("__rk", F.row_number().over(wq))
-                .filter(F.col("__rk") <= width)
-                .select("query_id", "__cid", "__cos")
-            )
-
-        def walk_round(beam: DataFrame, visited: DataFrame,
-                       edges: DataFrame, width: int
-                       ) -> tuple[DataFrame, DataFrame]:
-            """One expand-score-cut round with a per-query VISITED set
-            (the HNSW visited list): only never-scored candidates pay
-            the cosine, the carried beam keeps its known scores.
-            RESULT-IDENTICAL to rescore-everything within a fixed-width
-            phase — a candidate dropped from a top-``width`` beam lost
-            to ``width`` still-present better ones and can never
-            re-enter the top-``width`` of a superset — and the scoring
-            volume drops by the revisit factor (most expansions near
-            convergence are revisits). ``visited`` must reset at
-            width-change boundaries (a width-8 reject may be a width-16
-            keeper)."""
-            new = (
-                beam.join(edges, beam["__cid"] == edges["src"])
-                .select("query_id", F.col("dst").alias("__cid"))
-                .distinct()
-                .join(visited, ["query_id", "__cid"], "left_anti")
-            )
-            beam2 = _ckpt(cut(beam.unionAll(score(new)), width))
-            visited2 = _ckpt(
-                visited.unionAll(new.select("query_id", "__cid")))
-            return beam2, visited2
-
         # seeds: bootstrap entries ∪ every current top-level node
         seeds = (
             ent0.unionAll(
@@ -1360,7 +1344,7 @@ def build_knn_graph_insert(
                 .select("__cid"))
             .distinct()
         )
-        beam = _ckpt(cut(
+        beam = _ckpt(_beam_cut(
             score(q.select("query_id").crossJoin(seeds)), descend_beam))
         # descent phase: constant width, so ONE visited set spans layers
         visited = _ckpt(q.select("query_id").crossJoin(seeds)
@@ -1370,8 +1354,8 @@ def build_knn_graph_insert(
         for l in range(n_layers, 0, -1):
             edges_l = adjU.filter(F.col("layer") == l).select("src", "dst")
             for _ in range(hops_per_layer):
-                beam, visited = walk_round(beam, visited, edges_l,
-                                           descend_beam)
+                beam, visited = _walk_round(beam, visited, edges_l,
+                                            descend_beam, score)
             layer_beams[l] = beam
         # layer-0 expansion graph = current adjacency ∪ LONG LINKS over
         # the current state (same hash-mix formula as the final index,
@@ -1401,9 +1385,10 @@ def build_knn_graph_insert(
         # the visited set RESETS to the incoming beam's ids
         visited = _ckpt(beam.select("query_id", "__cid"))
         for _ in range(insert_hops):
-            beam, visited = walk_round(beam, visited, edges0, insert_beam)
+            beam, visited = _walk_round(beam, visited, edges0, insert_beam,
+                                        score)
 
-        out0 = cut(beam, n_neighbors).select(
+        out0 = _beam_cut(beam, n_neighbors).select(
             F.col("query_id").alias("src"), F.col("__cid").alias("dst"),
             "__cos")
         rev0 = out0.select(
@@ -1421,7 +1406,7 @@ def build_knn_graph_insert(
                 .filter(F.col("__clvl") >= l)
                 .select("query_id", "__cid", "__cos")
             )
-            oU = cut(bl, layer_neighbors).select(
+            oU = _beam_cut(bl, layer_neighbors).select(
                 F.lit(l).cast("int").alias("layer"),
                 F.col("query_id").alias("src"),
                 F.col("__cid").alias("dst"), "__cos")
@@ -1453,45 +1438,30 @@ def build_knn_graph_insert(
             F.col("__id").alias("query_id"),
             F.col("__v").alias("__qv"), F.col("__n").alias("__qn"))
         ll_full = _long_link_edges(df, id_col, 0, n_long_links)
+
+        def score_all(cand: DataFrame) -> DataFrame:
+            return arrow_pair_cosine(
+                cand.join(corpus_all, "__cid").join(q_all, "query_id"))
+
         for _ in range(refresh_passes):
             edges = adj0.select("src", "dst")
             if ll_full is not None:
                 edges = edges.unionAll(ll_full.select("src", "dst"))
-            beam = _ckpt(
+            beam = _ckpt(_beam_cut(
                 adj0.select(
                     F.col("src").alias("query_id"),
-                    F.col("dst").alias("__cid"), "__cos")
-                .withColumn("__rk", F.row_number().over(wq))
-                .filter(F.col("__rk") <= refresh_beam)
-                .select("query_id", "__cid", "__cos")
-            )
-            # visited set (reset per pass): only never-scored candidates
-            # pay the cosine — see walk_round in the batch loop for the
-            # equivalence argument (fixed width within the pass)
+                    F.col("dst").alias("__cid"), "__cos"),
+                refresh_beam))
+            # visited set resets per pass (fixed width within the pass)
             visited = _ckpt(beam.select("query_id", "__cid"))
             for _ in range(refresh_hops):
-                new = (
-                    beam.join(edges, beam["__cid"] == edges["src"])
-                    .select("query_id", F.col("dst").alias("__cid"))
-                    .distinct()
-                    .join(visited, ["query_id", "__cid"], "left_anti")
-                )
-                scored = arrow_pair_cosine(
-                    new.join(corpus_all, "__cid").join(q_all, "query_id"))
-                beam = _ckpt(
-                    beam.unionAll(scored)
-                    .withColumn("__rk", F.row_number().over(wq))
-                    .filter(F.col("__rk") <= refresh_beam)
-                    .select("query_id", "__cid", "__cos")
-                )
-                visited = _ckpt(visited.unionAll(new))
-            ro = (
-                beam.filter(F.col("__cid") != F.col("query_id"))
-                .withColumn("__rk", F.row_number().over(wq))
-                .filter(F.col("__rk") <= n_neighbors)
-                .select(F.col("query_id").alias("src"),
-                        F.col("__cid").alias("dst"), "__cos")
-            )
+                beam, visited = _walk_round(beam, visited, edges,
+                                            refresh_beam, score_all)
+            ro = _beam_cut(
+                beam.filter(F.col("__cid") != F.col("query_id")),
+                n_neighbors,
+            ).select(F.col("query_id").alias("src"),
+                     F.col("__cid").alias("dst"), "__cos")
             rvo = ro.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"),
                 "__cos")

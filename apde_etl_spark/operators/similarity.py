@@ -666,6 +666,17 @@ def lsh_bucket(vec: Column, planes: list[list[int]]) -> Column:
     return bucket.cast("int")
 
 
+def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, __v, __n): the vector as array<double> plus its L2 norm.
+    The norm rides as a SCALAR column instead of pre-normalizing the
+    array: `transform(v, x -> x / l2_norm(v))` re-evaluates the norm
+    fold per ELEMENT (O(d^2) interpreted work per row), while
+    dot/(na*nb) per pair costs the same one fold plus two scalar ops —
+    and the norm is computed once per vector."""
+    return df.select(F.col(id_col), as_double_array(vec_col).alias("__v")) \
+        .withColumn("__n", l2_norm(F.col("__v")))
+
+
 def ann_lsh_topk(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -719,17 +730,8 @@ def ann_lsh_topk(
     if multi_probe > num_planes:
         raise ValueError("multi_probe cannot exceed num_planes")
     planes = hyperplanes(num_planes, dim, seed)
-    # Carry the per-vector norm as a SCALAR column instead of
-    # pre-normalizing the array: `transform(v, x -> x / l2_norm(v))`
-    # re-evaluates the norm fold per ELEMENT (O(d^2) interpreted work per
-    # row), while dot/(na*nb) per pair costs the same one fold plus two
-    # scalar ops — and the norm is computed once per vector.
-    raw = as_double_array(vec_col)
-    e = (
-        df.select(F.col(id_col), raw.alias("__v"))
-        .withColumn("__n", l2_norm(F.col("__v")))
-        .withColumn("__bucket", lsh_bucket(F.col("__v"), planes))
-    )
+    e = _with_norm(df, id_col, vec_col).withColumn(
+        "__bucket", lsh_bucket(F.col("__v"), planes))
     if num_tables > 1:
         return _ann_lsh_topk_multitable(
             e, id_col, k, num_planes, dim, seed, strategy,
@@ -762,6 +764,15 @@ def ann_lsh_topk(
         broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
+    return _cosine_topk(cand, k, strategy)
+
+
+def _cosine_topk(cand: DataFrame, k: int,
+                 strategy: str = "broadcast") -> DataFrame:
+    """(id_a, id_b, cosine_sim): per query ``id_a`` the top ``k``
+    candidates by exact cosine (desc, id_b asc), scored by
+    :func:`_pair_cosine_scored` — the tail of every raw-vector ANN
+    search here."""
     scored = _pair_cosine_scored(cand, out_col="cosine_sim",
                                  strategy=strategy)
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine_sim"), F.asc("id_b"))
@@ -867,15 +878,7 @@ def _ann_lsh_topk_multitable(
                           F.col("__n").alias("__na"))
     vb = with_keys.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"),
                           F.col("__n").alias("__nb"))
-    scored = _pair_cosine_scored(
-        cand.join(va, "id_a").join(vb, "id_b"), out_col="cosine_sim",
-        strategy=strategy)
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine_sim"), F.asc("id_b"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _cosine_topk(cand.join(va, "id_a").join(vb, "id_b"), k, strategy)
 
 
 def embed_neardup_pairs(
@@ -904,12 +907,8 @@ def embed_neardup_pairs(
     shuffle large).
     """
     planes = hyperplanes(num_planes, dim, seed)
-    raw = as_double_array(vec_col)
-    e = (
-        df.select(F.col(id_col), raw.alias("__v"))
-        .withColumn("__n", l2_norm(F.col("__v")))
-        .withColumn("__bucket", lsh_bucket(F.col("__v"), planes))
-    )
+    e = _with_norm(df, id_col, vec_col).withColumn(
+        "__bucket", lsh_bucket(F.col("__v"), planes))
     strategy = resolve_candidate_strategy(e, strategy, broadcast_threshold_bytes)
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     probe = e.repartition(nparts, id_col) if strategy == "broadcast" else e
@@ -1189,13 +1188,7 @@ def ann_ivf_topk(
     fit (:func:`candidate_join` size gate), salted shuffle on the cell id
     at scale.
     """
-    # Norm carried as a scalar column (NOT per-element pre-normalization,
-    # which costs O(d^2) interpreted work per row): cosine per pair =
-    # one dot fold + two scalar ops.
-    raw = as_double_array(vec_col)
-    e = df.select(F.col(id_col), raw.alias("__v")).withColumn(
-        "__n", l2_norm(F.col("__v"))
-    )
+    e = _with_norm(df, id_col, vec_col)
     stride = centroid_stride or 1
     if train_iters > 0:
         # persist the projection for the training loop: seed collect +
@@ -1258,17 +1251,7 @@ def ann_ivf_topk(
         broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
-    scored = cand.select(
-        "id_a", "id_b",
-        (dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")))
-            .alias("cosine_sim"),
-    )
-    wk = Window.partitionBy("id_a").orderBy(F.desc("cosine_sim"), F.asc("id_b"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(wk))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _cosine_topk(cand, k)
 
 
 def knn_label_vote(
@@ -1658,6 +1641,94 @@ def pq_distance_table_col(vec_name: str, codebooks: list[list[list[float]]]) -> 
     return F.expr(f"flatten({dists})")
 
 
+def _unit_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id_col, __v) with every vector scaled to unit L2 norm, persisted
+    (scope "similarity"): the corpus every PQ path trains, encodes and
+    reranks on — squared L2 on the unit sphere ranks like cosine."""
+    raw = df.select(
+        F.col(id_col), as_double_array(vec_col).alias("__r")
+    ).withColumn("__nrm", l2_norm(F.col("__r")))
+    return tracked_persist(
+        raw.select(
+            F.col(id_col),
+            F.transform("__r", lambda x: x / F.col("__nrm")).alias("__v"),
+        ),
+        scope="similarity",
+    )
+
+
+def _pq_code_lists(
+    df: DataFrame,
+    id_col: str,
+    vec: str,
+    books: list[list[list[float]]],
+    n_rows: int,
+    passthrough: list[str],
+) -> DataFrame:
+    """(*passthrough, id_b, __codes) — PQ codes of ``vec`` over an
+    ``n_rows``-row corpus: :func:`pq_codes_blas` from
+    :data:`PQ_ENCODE_BLAS_MIN_ROWS` rows, the in-plan
+    :func:`pq_encode_col` below it."""
+    if n_rows >= PQ_ENCODE_BLAS_MIN_ROWS:
+        return pq_codes_blas(df, id_col, vec, books, passthrough=passthrough) \
+            .select(*passthrough, F.col(id_col).alias("id_b"), "__codes")
+    return df.select(*passthrough, F.col(id_col).alias("id_b"),
+                     pq_encode_col(vec, books).alias("__codes"))
+
+
+def _adc_topk(
+    pairs: DataFrame,
+    e: DataFrame,
+    id_col: str,
+    m: int,
+    k_codes: int,
+    k: int,
+    rerank: int | None,
+) -> DataFrame:
+    """(id_a, id_b) per query's top ``k`` from candidate ``pairs``
+    carrying the query's flat distance table ``__dt`` and the
+    candidate's ``__codes``: ADC distance (m table lookups, asc, id_b
+    asc), then with ``rerank`` an exact cosine over the unit vectors
+    ``e`` (id_col, __v) for the top-``rerank`` shortlist only."""
+    idx = F.sequence(F.lit(0), F.lit(m - 1))
+    approx = F.aggregate(
+        F.zip_with(
+            F.col("__codes"), idx,
+            lambda c, i: F.element_at(F.col("__dt"), (i * k_codes + c + 1).cast("int")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy("id_a").orderBy(F.asc("__ad"), F.asc("id_b"))
+    shortlist_n = max(rerank, k) if rerank else k
+    # project down to (id_a, id_b, __ad) BEFORE the ranking window: the
+    # row_number shuffle would otherwise carry the per-query distance
+    # table (m*k_codes doubles, ~1 KiB/row) and the code array through
+    # the exchange — at 4M pairs that is gigabytes of shuffle for three
+    # needed columns (measured 60s -> 8s at sf0.1).
+    shortlist = (
+        pairs.select("id_a", "id_b", approx.alias("__ad"))
+        .withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= shortlist_n)
+        .select("id_a", "id_b")
+    )
+    if not rerank:
+        return shortlist
+    va = e.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
+    vb = e.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
+    exact = (
+        shortlist.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("__cos", dot(F.col("__va"), F.col("__vb")))  # unit vectors
+    )
+    w2 = Window.partitionBy("id_a").orderBy(F.desc("__cos"), F.asc("id_b"))
+    return (
+        exact.withColumn("__rk2", F.row_number().over(w2))
+        .filter(F.col("__rk2") <= k)
+        .select("id_a", "id_b")
+    )
+
+
 def pq_train_books(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1675,16 +1746,7 @@ def pq_train_books(
     Lloyd loop is several driver round-trips, so training once and
     passing the result via ``codebooks=`` halves the per-method setup
     cost without changing any output (the training is deterministic)."""
-    raw = df.select(
-        F.col(id_col), as_double_array(vec_col).alias("__r")
-    ).withColumn("__nrm", l2_norm(F.col("__r")))
-    e = tracked_persist(
-        raw.select(
-            F.col(id_col),
-            F.transform("__r", lambda x: x / F.col("__nrm")).alias("__v"),
-        ),
-        scope="similarity",
-    )
+    e = _unit_vectors(df, id_col, vec_col)
     try:
         return train_pq_codebooks(e, id_col, dim, m, k_codes, train_iters,
                                   exact_mean=exact_mean)
@@ -1759,14 +1821,7 @@ def ann_pq_topk(
     once and share."""
     if on_overflow not in ("ivfpq", "error"):
         raise ValueError(f"ann_pq_topk: unknown on_overflow={on_overflow!r}")
-    raw = df.select(
-        F.col(id_col), as_double_array(vec_col).alias("__r")
-    ).withColumn("__nrm", l2_norm(F.col("__r")))
-    e = raw.select(
-        F.col(id_col),
-        F.transform("__r", lambda x: x / F.col("__nrm")).alias("__v"),
-    )
-    e = tracked_persist(e, scope="similarity")
+    e = _unit_vectors(df, id_col, vec_col)
     n_rows = e.count()  # materializes the cache training reuses anyway
     if resolve_pq_route(n_rows, m, broadcast_threshold_bytes) == "ivfpq":
         tracked_release(e)
@@ -1789,57 +1844,13 @@ def ann_pq_topk(
         e, id_col, dim, m, k_codes, train_iters,
         exact_mean=train_exact_mean)
     k_codes = len(books[0])  # may have clamped to the corpus size
-    if n_rows >= PQ_ENCODE_BLAS_MIN_ROWS:
-        codes = pq_codes_blas(e, id_col, "__v", books).select(
-            F.col(id_col).alias("id_b"), "__codes"
-        )
-    else:
-        codes = e.select(
-            F.col(id_col).alias("id_b"),
-            pq_encode_col("__v", books).alias("__codes"),
-        )
+    codes = _pq_code_lists(e, id_col, "__v", books, n_rows, [])
     q = e.select(
         F.col(id_col).alias("id_a"),
         pq_distance_table_col("__v", books).alias("__dt"),
     )
     pairs = q.join(F.broadcast(codes), F.col("id_a") != F.col("id_b"))
-    idx = F.sequence(F.lit(0), F.lit(m - 1))
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("__codes"), idx,
-            lambda c, i: F.element_at(F.col("__dt"), (i * k_codes + c + 1).cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("id_a").orderBy(F.asc("__ad"), F.asc("id_b"))
-    shortlist_n = max(rerank, k) if rerank else k
-    # project down to (id_a, id_b, __ad) BEFORE the ranking window: the
-    # row_number shuffle would otherwise carry the per-query distance
-    # table (m*k_codes doubles, ~1 KiB/row) and the code array through
-    # the exchange — at 4M pairs that is gigabytes of shuffle for three
-    # needed columns (measured 60s -> 8s at sf0.1).
-    shortlist = (
-        pairs.select("id_a", "id_b", approx.alias("__ad"))
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= shortlist_n)
-        .select("id_a", "id_b")
-    )
-    if not rerank:
-        return shortlist
-    va = e.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
-    vb = e.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
-    exact = (
-        shortlist.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("__cos", dot(F.col("__va"), F.col("__vb")))  # unit vectors
-    )
-    w2 = Window.partitionBy("id_a").orderBy(F.desc("__cos"), F.asc("id_b"))
-    return (
-        exact.withColumn("__rk2", F.row_number().over(w2))
-        .filter(F.col("__rk2") <= k)
-        .select("id_a", "id_b")
-    )
+    return _adc_topk(pairs, e, id_col, m, k_codes, k, rerank)
 
 
 def ann_ivfpq_topk(
@@ -1895,14 +1906,7 @@ def ann_ivfpq_topk(
     the cache until their own first action."""
     if n_probe < 1:
         raise ValueError("ann_ivfpq_topk: n_probe must be >= 1")
-    raw = df.select(
-        F.col(id_col), as_double_array(vec_col).alias("__r")
-    ).withColumn("__nrm", l2_norm(F.col("__r")))
-    e = raw.select(
-        F.col(id_col),
-        F.transform("__r", lambda x: x / F.col("__nrm")).alias("__v"),
-    )
-    e = tracked_persist(e, scope="similarity")
+    e = _unit_vectors(df, id_col, vec_col)
     cent = (
         e.orderBy(id_col).limit(n_cells)
         .select(
@@ -1944,16 +1948,8 @@ def ann_ivfpq_topk(
         exact_mean=pq_train_exact_mean,
     )
     k_codes = len(books[0])  # may have clamped to the corpus size
-    if n_corpus >= PQ_ENCODE_BLAS_MIN_ROWS:
-        lists = pq_codes_blas(
-            res1, id_col, "__res", books, passthrough=["cell_id"]
-        ).select("cell_id", F.col(id_col).alias("id_b"), "__codes")
-    else:
-        lists = res1.select(
-            "cell_id",
-            F.col(id_col).alias("id_b"),
-            pq_encode_col("__res", books).alias("__codes"),
-        )
+    lists = _pq_code_lists(res1, id_col, "__res", books, n_corpus,
+                           ["cell_id"])
     # query_filter narrows the PROBE side only (the realistic workload:
     # a query set searching the full corpus); the corpus lists, books,
     # and cell assignment always cover every vector. The query's
@@ -1980,40 +1976,7 @@ def ann_ivfpq_topk(
         broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
-    idx = F.sequence(F.lit(0), F.lit(m - 1))
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("__codes"), idx,
-            lambda c, i: F.element_at(F.col("__dt"), (i * k_codes + c + 1).cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wk = Window.partitionBy("id_a").orderBy(F.asc("__ad"), F.asc("id_b"))
-    shortlist_n = max(rerank, k) if rerank else k
-    # same projection-before-window rule as ann_pq_topk: drop the
-    # per-cell distance tables and code arrays before the ranking
-    # exchange — only (id_a, id_b, __ad) shuffles.
-    shortlist = (
-        cand.select("id_a", "id_b", approx.alias("__ad"))
-        .withColumn("__rn", F.row_number().over(wk))
-        .filter(F.col("__rn") <= shortlist_n)
-        .select("id_a", "id_b")
-    )
-    if not rerank:
-        return shortlist
-    va = e.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
-    vb = e.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
-    exact = (
-        shortlist.join(va, "id_a").join(vb, "id_b")
-        .withColumn("__cos", dot(F.col("__va"), F.col("__vb")))
-    )
-    w2 = Window.partitionBy("id_a").orderBy(F.desc("__cos"), F.asc("id_b"))
-    return (
-        exact.withColumn("__rk2", F.row_number().over(w2))
-        .filter(F.col("__rk2") <= k)
-        .select("id_a", "id_b")
-    )
+    return _adc_topk(cand, e, id_col, m, k_codes, k, rerank)
 
 
 #: Hard cap on the corpus side of the exact ground-truth scan — it is
@@ -2177,12 +2140,8 @@ def semantic_dedup_incremental(
     planes = hyperplanes(num_planes, dim, seed)
 
     def prep(df: DataFrame) -> DataFrame:
-        raw = as_double_array(vec_col)
-        return (
-            df.select(F.col(id_col), raw.alias("__v"))
-            .withColumn("__n", l2_norm(F.col("__v")))
-            .withColumn("__b", lsh_bucket(F.col("__v"), planes))
-        )
+        return _with_norm(df, id_col, vec_col).withColumn(
+            "__b", lsh_bucket(F.col("__v"), planes))
 
     # the batch projection feeds three consumers (probe, build half,
     # final decision join) — persist so one scan serves all; release

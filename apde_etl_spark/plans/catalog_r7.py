@@ -326,41 +326,37 @@ def _sql_g_cos(av: str, an: str, bv: str, bn: str) -> str:
             f"p -> p[1]*p[2])) / ({an} * {bn})")
 
 
-def _sql_graph_search_ctes(corpus_where: str = "TRUE",
-                           query_pred: str | None = None) -> str:
-    """Shared oracle CTEs: rebuild the small-world graph (exact k-NN +
-    hash-derived long links) from first principles over the
-    ``corpus_where``-filtered corpus, then unroll the fixed-hop beam
-    search for queries matching ``query_pred`` (drawn from the FULL
-    raw table, so incremental-add batches outside the corpus can
-    query it). Ends at ``beam{H}(query_id, cid, cos)``."""
-    query_pred = query_pred or _G_QUERY_PRED
-    hops = []
-    for i in range(1, _G_HOPS + 1):
-        hops.append(f"""
-cand{i} AS (
+def _hop(i_prev: str, i_new: str, graph_cte: str, width: int) -> str:
+    """One expand-score-cut round: candidates = previous beam ∪ its
+    ``graph_cte`` neighbors, exact-cosine scored, top ``width`` kept
+    (cosine desc, id asc) — the SQL twin of one round of the serve walk
+    (ann_index._serve_walk), flat or layered."""
+    return f"""
+cand{i_new} AS (
   SELECT DISTINCT query_id, cid FROM (
-    SELECT query_id, cid FROM beam{i - 1}
+    SELECT query_id, cid FROM beam{i_prev}
     UNION ALL
     SELECT b.query_id, g.dst AS cid
-    FROM beam{i - 1} b JOIN graph g ON g.src = b.cid) u
-), beam{i} AS (
+    FROM beam{i_prev} b JOIN {graph_cte} g ON g.src = b.cid) u
+), beam{i_new} AS (
   SELECT query_id, cid, cos FROM (
     SELECT c.query_id, c.cid,
            {_sql_g_cos('ce.v', 'ce.n', 'q.qv', 'q.qn')} AS cos,
            row_number() OVER (PARTITION BY c.query_id
              ORDER BY {_sql_g_cos('ce.v', 'ce.n', 'q.qv', 'q.qn')} DESC,
                       c.cid ASC) AS rk
-    FROM cand{i} c
+    FROM cand{i_new} c
     JOIN e ce ON ce.vec_id = c.cid
     JOIN q ON q.query_id = c.query_id) s
-  WHERE rk <= {_G_BEAM}
-)""")
+  WHERE rk <= {width}
+)"""
+
+
+def _sql_graph_ctes(m: int, n_long: int) -> str:
+    """``knn``/``rk``/``nn``/``longl``/``graph``: the small-world graph
+    rebuilt over CTE ``e`` as build_knn_graph writes it — exact k-NN
+    top-``m`` plus ``n_long`` hash-derived long links per node."""
     return f"""
-raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-e AS (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, y -> y*y))) AS n FROM raw
-      WHERE {corpus_where}),
 knn AS (
   SELECT a.vec_id AS src, b.vec_id AS dst,
          row_number() OVER (PARTITION BY a.vec_id
@@ -373,13 +369,19 @@ rk AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS rn2
 nn AS (SELECT count(*) AS n FROM e),
 longl AS (
   SELECT a.vec_id AS src, b.vec_id AS dst
-  FROM rk a CROSS JOIN nn CROSS JOIN range(1, {_G_LONG + 1}) t(r)
+  FROM rk a CROSS JOIN nn CROSS JOIN range(1, {n_long + 1}) t(r)
   INNER JOIN rk b
     ON b.rn2 = (a.rn2 * 2654435761 + r * 40503 + 12345) % nn.n
    AND b.vec_id != a.vec_id
 ),
-graph AS (SELECT src, dst FROM knn WHERE rn <= {_G_M}
-          UNION ALL SELECT src, dst FROM longl),
+graph AS (SELECT src, dst FROM knn WHERE rn <= {m}
+          UNION ALL SELECT src, dst FROM longl)"""
+
+
+def _sql_query_ctes(query_pred: str, n_entries: int) -> str:
+    """``q`` (the ``query_pred`` rows of ``raw`` with their norms) and
+    ``ent`` (the ``n_entries`` hash-stratified entry points of ``e``)."""
+    return f"""
 q AS (SELECT vec_id AS query_id, v AS qv,
              sqrt(list_sum(list_transform(v, y -> y*y))) AS qn
       FROM raw WHERE {query_pred}),
@@ -388,8 +390,28 @@ ent AS (
     SELECT vec_id, row_number() OVER (ORDER BY
       CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
            AS BIGINT), vec_id) AS hrn
-    FROM e) s WHERE hrn <= {_G_ENTRIES}
-),
+    FROM e) s WHERE hrn <= {n_entries}
+)"""
+
+
+def _sql_graph_search_ctes(corpus_where: str = "TRUE",
+                           query_pred: str | None = None) -> str:
+    """Shared oracle CTEs: rebuild the small-world graph (exact k-NN +
+    hash-derived long links) from first principles over the
+    ``corpus_where``-filtered corpus, then unroll the fixed-hop beam
+    search for queries matching ``query_pred`` (drawn from the FULL
+    raw table, so incremental-add batches outside the corpus can
+    query it). Ends at ``beam{H}(query_id, cid, cos)``."""
+    query_pred = query_pred or _G_QUERY_PRED
+    graph = _sql_graph_ctes(_G_M, _G_LONG)
+    q_ent = _sql_query_ctes(query_pred, _G_ENTRIES)
+    hops = [_hop(str(i - 1), str(i), "graph", _G_BEAM)
+            for i in range(1, _G_HOPS + 1)]
+    return f"""
+raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+e AS (SELECT vec_id, v,
+             sqrt(list_sum(list_transform(v, y -> y*y))) AS n FROM raw
+      WHERE {corpus_where}),{graph},{q_ent},
 beam0 AS (SELECT query_id, eid AS cid, CAST(NULL AS DOUBLE) AS cos
           FROM q, ent),{",".join(hops)}"""
 

@@ -35,7 +35,13 @@ from apde_etl_spark.plans.catalog import (
     materialize_ctes,
     register,
 )
-from apde_etl_spark.plans.catalog_r7 import _cached_workdir, _sql_g_cos
+from apde_etl_spark.plans.catalog_r7 import (
+    _cached_workdir,
+    _hop,
+    _sql_g_cos,
+    _sql_graph_ctes,
+    _sql_query_ctes,
+)
 from apde_etl_spark.sources.readers import local_frame
 
 # gate parameters — layer 0 matches the flat-graph entry (M=8, 2 long
@@ -69,32 +75,6 @@ def _ensure_hnsw_index(spark: SparkSession, sf_dir: str) -> str:
             layer_factor=_H_FACTOR, layer_neighbors=_H_LM)
 
     return _cached_workdir(_HNSW_CACHE, sf_dir, "apde_hnsw_", build)
-
-
-def _hop(i_prev: str, i_new: str, graph_cte: str, width: int) -> str:
-    """One expand-score-cut round: candidates = previous beam ∪ its
-    ``graph_cte`` neighbors, exact-cosine scored, top ``width`` kept
-    (cosine desc, id asc) — the SQL twin of one loop iteration in
-    ann_graph_search_layered."""
-    return f"""
-cand{i_new} AS (
-  SELECT DISTINCT query_id, cid FROM (
-    SELECT query_id, cid FROM beam{i_prev}
-    UNION ALL
-    SELECT b.query_id, g.dst AS cid
-    FROM beam{i_prev} b JOIN {graph_cte} g ON g.src = b.cid) u
-), beam{i_new} AS (
-  SELECT query_id, cid, cos FROM (
-    SELECT c.query_id, c.cid,
-           {_sql_g_cos('ce.v', 'ce.n', 'q.qv', 'q.qn')} AS cos,
-           row_number() OVER (PARTITION BY c.query_id
-             ORDER BY {_sql_g_cos('ce.v', 'ce.n', 'q.qv', 'q.qn')} DESC,
-                      c.cid ASC) AS rk
-    FROM cand{i_new} c
-    JOIN e ce ON ce.vec_id = c.cid
-    JOIN q ON q.query_id = c.query_id) s
-  WHERE rk <= {width}
-)"""
 
 
 def _sql_hnsw_search_ctes() -> str:
@@ -141,46 +121,19 @@ beam0 AS (
 )"""]
     for i in range(1, _H_HOPS + 1):
         hops.append(_hop(str(i - 1), str(i), "graph", _H_BEAM))
+    graph = _sql_graph_ctes(_H_M, _H_LONG)
+    q_ent = _sql_query_ctes(_H_QUERY_PRED, _H_ENTRIES)
     return f"""
 raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 e AS (SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, y -> y*y))) AS n FROM raw),
-knn AS (
-  SELECT a.vec_id AS src, b.vec_id AS dst,
-         row_number() OVER (PARTITION BY a.vec_id
-           ORDER BY {_sql_g_cos('a.v', 'a.n', 'b.v', 'b.n')} DESC,
-                    b.vec_id ASC) AS rn
-  FROM e a JOIN e b ON a.vec_id != b.vec_id
-),
-rk AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS rn2
-       FROM e),
-nn AS (SELECT count(*) AS n FROM e),
-longl AS (
-  SELECT a.vec_id AS src, b.vec_id AS dst
-  FROM rk a CROSS JOIN nn CROSS JOIN range(1, {_H_LONG + 1}) t(r)
-  INNER JOIN rk b
-    ON b.rn2 = (a.rn2 * 2654435761 + r * 40503 + 12345) % nn.n
-   AND b.vec_id != a.vec_id
-),
-graph AS (SELECT src, dst FROM knn WHERE rn <= {_H_M}
-          UNION ALL SELECT src, dst FROM longl),
+             sqrt(list_sum(list_transform(v, y -> y*y))) AS n FROM raw),{graph},
 lvl AS (
   SELECT vec_id, {lvl_case} AS lvl FROM (
     SELECT vec_id,
            CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
                 AS BIGINT) AS h
     FROM e) z
-),{",".join(layer_ctes)},
-q AS (SELECT vec_id AS query_id, v AS qv,
-             sqrt(list_sum(list_transform(v, y -> y*y))) AS qn
-      FROM raw WHERE {_H_QUERY_PRED}),
-ent AS (
-  SELECT vec_id AS eid FROM (
-    SELECT vec_id, row_number() OVER (ORDER BY
-      CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-           AS BIGINT), vec_id) AS hrn
-    FROM e) s WHERE hrn <= {_H_ENTRIES}
-),
+),{",".join(layer_ctes)},{q_ent},
 beamd0 AS (
   SELECT query_id, cid, cos FROM (
     SELECT q.query_id, s.vec_id AS cid,

@@ -401,3 +401,55 @@ def test_local_serve_level_seeds_match_node_levels(spark, sf_dir):
         return lvl
 
     assert got and all(py_lvl(c) == lv for c, lv in got.items())
+
+
+def test_graph_upper_absence_checked_not_assumed(spark, sf_dir, tmp_path):
+    """``graph_upper`` counts as absent only when the build wrote none.
+    With no upper layer of >= 2 nodes both layered serve paths walk the
+    flat graph (the rows of ann_graph_search); a corrupt upper-layer
+    file makes both paths raise instead of silently serving those
+    flat-walk rows."""
+    import os
+
+    import pytest
+
+    from apde_etl_spark.operators.ann_index import (
+        LOCAL_SERVE_MAX_ROWS,
+        ann_graph_search,
+        ann_graph_search_layered,
+        build_knn_graph,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    kw = dict(k=3, beam=6, hops=2)
+    lkw = dict(descend_beam=4, hops_per_layer=1)
+
+    # a factor far past the corpus size leaves < 2 level-1 nodes, so
+    # the build writes layer_meta but no graph_upper
+    flat = str(tmp_path / "no_upper")
+    build_knn_graph(emb, flat, n_neighbors=4, n_entries=8, n_long_links=2,
+                    n_layers=1, layer_factor=10 ** 9, layer_neighbors=3)
+    assert os.path.isdir(f"{flat}/layer_meta")
+    assert not os.path.exists(f"{flat}/graph_upper")
+    want = sorted(map(tuple, ann_graph_search(
+        spark, flat, queries, emb, **kw).collect()))
+    assert want
+    for cap in (LOCAL_SERVE_MAX_ROWS, 0):
+        got = ann_graph_search_layered(spark, flat, queries, emb,
+                                       local_serve_max_rows=cap, **kw, **lkw)
+        assert sorted(map(tuple, got.collect())) == want
+
+    bad = str(tmp_path / "bad_upper")
+    build_knn_graph(emb, bad, n_neighbors=4, n_entries=8, n_long_links=2,
+                    n_layers=2, layer_factor=8, layer_neighbors=3)
+    part = next(os.path.join(r, f)
+                for r, _, fs in sorted(os.walk(f"{bad}/graph_upper"))
+                for f in sorted(fs) if f.endswith(".parquet"))
+    with open(part, "wb") as fh:
+        fh.write(b"not a parquet file" * 8)
+    for cap in (LOCAL_SERVE_MAX_ROWS, 0):
+        with pytest.raises(Exception):
+            ann_graph_search_layered(spark, bad, queries, emb,
+                                     local_serve_max_rows=cap,
+                                     **kw, **lkw).collect()

@@ -128,3 +128,19 @@ def test_train_pq_codebooks_clamps_small_corpus(spark):
     assert len(books[0]) == 5  # clamped to the row count
     with pytest.raises(ValueError, match="no input vectors"):
         SIM.train_pq_codebooks(e.filter(F.lit(False)), "vec_id", dim=8, m=4)
+
+
+def test_pq_shared_codebooks_match_internal_training(spark):
+    """pq_train_books is the share point for several PQ runs over one
+    corpus: books passed via ``codebooks=`` must give exactly the rows
+    ann_pq_topk's own training gives, with and without rerank."""
+    emb = _emb(spark, n=40)
+    books = SIM.pq_train_books(emb, dim=8, m=4, k_codes=8)
+    for rerank in (None, 6):
+        internal = SIM.ann_pq_topk(emb, k=3, dim=8, m=4, k_codes=8,
+                                   rerank=rerank).collect()
+        shared = SIM.ann_pq_topk(emb, k=3, dim=8, m=4, k_codes=8,
+                                 rerank=rerank, codebooks=books).collect()
+        assert len(internal) == 40 * 3
+        assert sorted(map(tuple, shared)) == sorted(map(tuple, internal))
+    release_scope("similarity")
