@@ -33,6 +33,7 @@ codes table — the ``semantic_dedup_incremental`` admission pattern.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -132,64 +133,42 @@ def load_centroids(spark: SparkSession, index_dir: str) -> DataFrame:
         "cell_id", F.col("centroid").alias("__c"))
 
 
-def _local_parquet_rows(path: str) -> int | None:
-    """Row count from LOCAL parquet footer metadata — no Spark job.
-    The serve paths need tiny index-metadata scalars (n_cells) at
-    plan-build time; when the index dir is plain local storage a
-    footer read answers in ~1 ms where a ``count()`` job costs a full
-    driver scheduling round trip (~150-250 ms of the serve's wall).
-    Returns None for non-local stores (caller falls back to count())."""
+def _read_artifact(spark: SparkSession, path: str,
+                   cols: list[str]) -> pa.Table:
+    """Columns ``cols`` of one index artifact as a pyarrow Table.
+
+    The artifacts read here (centroid ids, bounds, codebooks, graph
+    tables) are small and bounded by the build. A local directory is
+    read with pyarrow directly: a KB-scale table read through
+    ``spark.read`` costs a full driver job (~150-250 ms of scheduling).
+    Any other store goes through the Spark reader. A corrupt or
+    unreadable artifact raises on both paths."""
     import os
 
-    if not os.path.isdir(path):
-        return None
-    try:
+    if os.path.isdir(path):
         import pyarrow.parquet as pq
 
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)).metadata.num_rows
-        return total
-    except Exception:
-        return None
+        return pq.read_table(path, columns=cols)
+    return spark.read.parquet(path).select(*cols).toArrow()
 
 
 def load_bounds(spark: SparkSession, index_dir: str) -> tuple[list, list]:
     """SQ8 (mins, maxs) as Python lists — 2*dim scalars of metadata
     collected at plan-build time (the quantize expression needs them as
-    literals; this is an index-metadata read, not a training scan).
-    Local index dirs are read with pyarrow directly (the KB-scale
-    bounds table costs a full driver job via spark.read + collect);
-    non-local stores keep the Spark reader."""
-    import os
-
-    path = f"{index_dir}/bounds"
-    if os.path.isdir(path):
-        try:
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(path, columns=["pos", "lo", "hi"]).to_pylist()
-            t.sort(key=lambda r: r["pos"])
-            return ([float(r["lo"]) for r in t],
-                    [float(r["hi"]) for r in t])
-        except Exception:
-            pass
-    rows = spark.read.parquet(path).collect()
-    rows.sort(key=lambda r: r["pos"])
-    return [float(r["lo"]) for r in rows], [float(r["hi"]) for r in rows]
+    literals; this is an index-metadata read, not a training scan)."""
+    t = _read_artifact(spark, f"{index_dir}/bounds",
+                       ["pos", "lo", "hi"]).sort_by("pos")
+    return t.column("lo").to_pylist(), t.column("hi").to_pylist()
 
 
 def load_codebooks(spark: SparkSession, index_dir: str) -> list:
     """``codebooks[subspace][code] = centroid`` — the structure
     :func:`pq_encode_col` consumes, rebuilt from the parquet table."""
-    rows = spark.read.parquet(f"{index_dir}/codebooks").collect()
+    rows = _read_artifact(spark, f"{index_dir}/codebooks",
+                          ["subspace", "code", "centroid"]).to_pylist()
     by: dict[int, dict[int, list[float]]] = {}
     for r in rows:
-        by.setdefault(int(r["subspace"]), {})[int(r["code"])] = list(
-            r["centroid"])
+        by.setdefault(r["subspace"], {})[r["code"]] = r["centroid"]
     return [
         [by[s][c] for c in sorted(by[s])] for s in sorted(by)
     ]
@@ -207,8 +186,8 @@ def encode_against_index(
     anywhere in the plan — the incremental-add primitive. Returns
     (id, sq8_code, cell_id)."""
     cent_df = load_centroids(spark, index_dir)
-    nloc = _local_parquet_rows(f"{index_dir}/centroids")
-    n_cells = nloc if nloc is not None else cent_df.count()
+    n_cells = _read_artifact(
+        spark, f"{index_dir}/centroids", ["cell_id"]).num_rows
     mins, maxs = load_bounds(spark, index_dir)
     e = new_df.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
     assigned = assign_topn_cells(
@@ -262,8 +241,8 @@ def ann_query_prebuilt(
     from apde_etl_spark.operators.similarity import sq8_dequantize
 
     cent_df = load_centroids(spark, index_dir)
-    nloc = _local_parquet_rows(f"{index_dir}/centroids")
-    n_cells = nloc if nloc is not None else cent_df.count()
+    n_cells = _read_artifact(
+        spark, f"{index_dir}/centroids", ["cell_id"]).num_rows
     mins, maxs = load_bounds(spark, index_dir)
     qe = queries_df.select(
         F.col(id_col).alias("query_id"),
@@ -370,6 +349,33 @@ def _ranked_knn_edges(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
+def _id_rank(ids: DataFrame) -> tuple[DataFrame, int]:
+    """(__id, __rn) over a frame of distinct ``__id`` longs, and its row
+    count. ``__rn`` is the 0-based ascending id rank: the values of
+    ``row_number().over(Window.orderBy("__id")) - 1``, built in parallel.
+    A window with no partition key ranks the whole corpus in one task;
+    here a range-partitioned sort puts the ids in ordered partitions,
+    one job counts each partition, and a row's rank is the row count of
+    all lower partitions plus its row_number within its own. The
+    partitioned ids are checkpointed, so the partitions that were
+    counted are the ones that are ranked."""
+    spark = ids.sparkSession
+    part = (
+        ids.select("__id")
+        .repartitionByRange(spark.sparkContext.defaultParallelism, "__id")
+        .withColumn("__p", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    counts = dict(part.groupBy("__p").count().collect())
+    offsets, n = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(n)
+        n += counts.get(p, 0)
+    within = F.row_number().over(Window.partitionBy("__p").orderBy("__id"))
+    rn = F.element_at(F.lit(offsets), F.col("__p") + 1) + within - 1
+    return part.select("__id", rn.cast("int").alias("__rn")), n
+
+
 def _long_link_edges(df: DataFrame, id_col: str, n_neighbors: int,
                      n_long_links: int) -> DataFrame | None:
     """(src, dst, rank) — ``n_long_links`` deterministic long-range
@@ -378,11 +384,7 @@ def _long_link_edges(df: DataFrame, id_col: str, n_neighbors: int,
     oracle restates them as one modular expression."""
     if n_long_links <= 0:
         return None
-    rk = df.select(F.col(id_col).cast("long").alias("__id")) \
-        .withColumn(
-            "__rn",
-            F.row_number().over(Window.orderBy("__id")) - 1)
-    n_nodes = rk.count()
+    rk, n_nodes = _id_rank(df.select(F.col(id_col).cast("long").alias("__id")))
     links = None
     for r in range(1, n_long_links + 1):
         tgt = (F.col("__rn") * F.lit(2654435761)
@@ -593,7 +595,6 @@ def _try_local_serve(
       against :func:`node_levels`).
     """
     import logging
-    import os
 
     if max_rows <= 0:
         return None
@@ -664,32 +665,23 @@ def _try_local_serve(
 
         import numpy as np
 
-        def artifact_pdf(sub: str, cols: list[str]):
-            # The frozen artifacts are bounded by the gate; when the
-            # index dir is plain local storage, read them with pyarrow
-            # directly — each spark.read+toPandas of a KB-scale table
-            # is a full driver job (~150-250 ms of pure scheduling).
-            # Non-local index stores keep the Spark reader.
-            path = f"{index_dir}/{sub}"
-            if os.path.isdir(path):
-                import pyarrow.parquet as pq
-
-                return pq.read_table(path, columns=cols).to_pandas()
-            return spark.read.parquet(path).select(*cols).toPandas()
-
-        graph_pdf = artifact_pdf("graph", ["src", "dst"])
-        meta_pdf = artifact_pdf("graph_meta", ["entry_id"])
+        # the frozen artifacts are bounded by the gate
+        graph_pdf = _read_artifact(
+            spark, f"{index_dir}/graph", ["src", "dst"]).to_pandas()
+        meta_pdf = _read_artifact(
+            spark, f"{index_dir}/graph_meta", ["entry_id"]).to_pandas()
         upper_pdf = None
         top = 0
         layer_factor = 0
         if layered:
-            lm_pdf = artifact_pdf(
-                "layer_meta", ["n_layers", "layer_factor"])
+            lm_pdf = _read_artifact(spark, f"{index_dir}/layer_meta",
+                                    ["n_layers", "layer_factor"]).to_pandas()
             n_layers = int(lm_pdf["n_layers"].iloc[0])
             layer_factor = int(lm_pdf["layer_factor"].iloc[0])
             if not _upper_absent(spark, index_dir):
-                upper_pdf = artifact_pdf(
-                    "graph_upper", ["layer", "src", "dst"])
+                upper_pdf = _read_artifact(
+                    spark, f"{index_dir}/graph_upper",
+                    ["layer", "src", "dst"]).to_pandas()
             top = n_layers if upper_pdf is not None else 0
 
         cor = corpus_df.select(
@@ -1295,14 +1287,10 @@ def build_knn_graph_insert(
         F.col(id_col).cast("long").alias("__id"),
         as_double_array(vec_col).alias("__v"),
     ).withColumn("__n", l2_norm(F.col("__v")))
-    lv = node_levels(
-        df.select(F.col(id_col).cast("long").alias("__id")),
-        "__id", n_layers, layer_factor)
-    nodes = _ckpt(
-        e.join(lv, "__id")
-        .withColumn("__rn", F.row_number().over(Window.orderBy("__id")) - 1)
-    )
-    n_nodes = nodes.count()
+    ids = df.select(F.col(id_col).cast("long").alias("__id"))
+    lv = node_levels(ids, "__id", n_layers, layer_factor)
+    rk, n_nodes = _id_rank(ids)
+    nodes = _ckpt(e.join(lv, "__id").join(rk, "__id"))
 
     boot = nodes.filter(F.col("__rn") < boot_rows)
     adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors))

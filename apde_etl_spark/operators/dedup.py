@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from apde_etl_spark.sources.readers import local_frame
+from apde_etl_spark.sources.readers import collect_bounded, local_frame
+
+#: byte cap of the connected-components driver path's edge collect. The
+#: edge gate (``driver_edge_threshold``) assumes long-ish ids; string
+#: doc ids can be 10x wider, so the collected Arrow table must also fit
+#: this before union-find expands it into Python objects.
+CC_DRIVER_MAX_BYTES = 64 << 20
 
 
 def keep_newest(df: DataFrame, key_cols: Sequence[str], order_col: str,
@@ -151,7 +157,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     driver_edge_threshold: int = 2_000_000,
-    driver_probe_max_bytes: int = 64 << 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """Group near-duplicate pairs into clusters: iterative min-label
@@ -183,10 +188,11 @@ def connected_components(
     with a single collect + union-find (path compression, min-root) on
     the driver and shipped back as a DataFrame — O(E α(E)) with zero
     per-round job overhead, vs ~3 Spark jobs per propagation round. The
-    threshold is measured (one count on the deduped edge list), not
-    guessed: at 2M edges the collect is ~32 MB of longs, well under
-    driver headroom, while the distributed loop remains the fallback for
-    genuinely huge duplicate graphs.
+    threshold is measured (one bounded collect of the raw edge list,
+    capped at :data:`CC_DRIVER_MAX_BYTES`), not guessed: at 2M edges the
+    collect is ~32 MB of longs, well under driver headroom, while the
+    distributed loop remains the fallback for genuinely huge duplicate
+    graphs.
 
     ``stats``: pass a dict to receive observability fields — ``path``
     ("driver" | "distributed") and, on the distributed path, ``rounds``
@@ -202,21 +208,15 @@ def connected_components(
     if driver_edge_threshold <= 0:
         return _distributed_components(pairs, id_a, id_b, max_iter, stats)
 
-    # Fast-path probe: ONE job, no shuffle — union-find is insensitive to
-    # duplicate or directed edges, so the raw pair list is collected as-is
-    # (limit thr+1 detects overflow without a separate count job). Arrow
-    # transfer keeps 2M edges at ~32 MB of packed ints on the driver, not
-    # hundreds of MB of Row objects. The row threshold assumes long-ish
-    # ids; string doc ids can be 10x wider, so the collected batch is
-    # ALSO gated by its actual Arrow byte size (driver_probe_max_bytes)
-    # before the to_pylist expansion doubles it.
-    probe_tbl = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .limit(driver_edge_threshold + 1)
-        .toArrow()
-    )
-    if (probe_tbl.num_rows <= driver_edge_threshold
-            and probe_tbl.nbytes <= driver_probe_max_bytes):
+    # Fast-path probe: ONE job, no shuffle. Union-find is insensitive to
+    # duplicate or directed edges, so the raw pair list is collected
+    # as-is; the bounded Arrow collect is both the size probe and the
+    # payload, ~32 MB of packed ints at 2M edges rather than hundreds of
+    # MB of Row objects, and CC_DRIVER_MAX_BYTES caps wide (string) ids.
+    probe_tbl = collect_bounded(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        driver_edge_threshold, CC_DRIVER_MAX_BYTES)
+    if probe_tbl is not None:
         parent: dict = {}
 
         def find(x):

@@ -53,6 +53,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apde_etl_spark.sources.readers import collect_bounded
+
 __all__ = ["pagerank_integer", "degree_table", "bfs_min_hop"]
 
 SCALE = 10**12
@@ -69,6 +71,11 @@ def degree_table(edges: DataFrame, src: str = "src") -> DataFrame:
 #: the distributed superstep loop (``local_max_edges`` overrides it
 #: per call).
 PR_LOCAL_MAX_EDGES = 2_000_000
+
+#: node gate of the distributed loop's broadcast joins: with at most
+#: this many nodes the per-iteration joins broadcast the node-sized
+#: frames (ranks, degrees, sums). Read at call time.
+PR_BROADCAST_MAX_NODES = 2_000_000
 
 
 def _pagerank_local_try(
@@ -91,7 +98,8 @@ def _pagerank_local_try(
 ) -> DataFrame | None:
     """Driver-side twin of the superstep loop, or None past the
     ``max_edges`` gate (<= 0 turns it off) / on any structural surprise
-    (non-long node ids, null endpoints, duplicate universe rows).
+    (non-long node ids, null endpoints, duplicate universe rows). The
+    edges come in one bounded Arrow collect, which is also the gate.
 
     Fidelity: ranks/degrees/sums are int64 throughout; ``a // b`` on
     non-negative int64 == SQL ``div``; the per-dst contribution sum is
@@ -112,13 +120,15 @@ def _pagerank_local_try(
             return None
         if not isinstance(edges.schema[dst].dataType, LongType):
             return None
-        if edges.select(src).limit(max_edges + 1).count() > max_edges:
-            return None
+        et = collect_bounded(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
+            max_edges)
+        if et is None or et["s"].null_count or et["d"].null_count:
+            return None  # past the gate, or null endpoints (joins define)
+        es, ed = et["s"].to_numpy(), et["d"].to_numpy()  # int64: LongType
 
         import numpy as np
 
-        ep = edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("d")).toPandas()
         nd = nodes.select(
             F.col("node"), is_seed.alias("sd")).toPandas()
         ids = nd["node"].to_numpy(dtype="int64")
@@ -128,8 +138,6 @@ def _pagerank_local_try(
         if n != n_nodes or (n > 1 and (np.diff(ids) == 0).any()):
             return None  # duplicate/NULL universe rows: joins define it
         seed_mask = nd["sd"].to_numpy(dtype="bool")[order]
-        es = ep["s"].to_numpy(dtype="int64")
-        ed = ep["d"].to_numpy(dtype="int64")
 
         si = np.searchsorted(ids, es)
         if not bool(((si < n) & (ids[np.minimum(si, n - 1)] == es)).all()):
@@ -199,7 +207,6 @@ def pagerank_integer(
     damp_den: int = 100,
     seed_pred: Column | None = None,
     cache_scope: str | None = None,
-    broadcast_below: int = 0,
     dangling: str = "drop",
     checkpoint_every: int = 0,
     tol: int | None = None,
@@ -238,9 +245,10 @@ def pagerank_integer(
     teleport constants (n, n_seed) come from ONE tiny driver-side
     aggregate, doubling as the seed validation.
 
-    ``broadcast_below`` is the size gate for the rank/degree side: when
-    |V| (counted once, off the persisted degree table) is at or under
-    it, the per-iteration joins broadcast the node-sized frames so the
+    :data:`PR_BROADCAST_MAX_NODES` is the size gate for the rank/degree
+    side: when |V| (the ``n`` of the teleport aggregate above, counted
+    over the same frame the joins key on) is at or under it, the
+    per-iteration joins broadcast the node-sized frames so the
     only shuffle left per iteration is the groupBy(dst) — the right
     plan while ranks fit an executor. Past the gate the joins stay
     shuffle joins; at 100 TB the answer is co-partitioning edges and
@@ -331,17 +339,11 @@ def pagerank_integer(
             F.when(is_seed, F.lit(scale // n_seed))
             .otherwise(F.lit(0)).cast("long").alias("rank"),
         )
-    # Size-gate on the frames node_sized actually hints: with
-    # dangling="redistribute" the per-iteration frames (ranks/sums) are
-    # keyed by the FULL src∪dst universe, which on sink-heavy graphs —
-    # the exact case redistribute targets — can be far larger than deg
-    # (nodes with out-edges). Gating on deg there would broadcast frames
-    # past the configured cap (round-6 advice).
-    gate_frame = nodes if dangling == "redistribute" else deg
-    small = (
-        broadcast_below > 0
-        and gate_frame.limit(broadcast_below + 1).count() <= broadcast_below
-    )
+    # Size-gate on the frames node_sized actually hints: n_nodes counts
+    # `nodes`, which is deg's rows in drop mode and the FULL src∪dst
+    # universe in redistribute mode, where sink-heavy graphs can be far
+    # larger than deg (round-6 advice).
+    small = n_nodes <= PR_BROADCAST_MAX_NODES
 
     def node_sized(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

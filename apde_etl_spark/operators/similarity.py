@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 
 from apde_etl_spark.operators.cache import tracked_persist, tracked_release
 from apde_etl_spark.operators.skew import replicated_salted_join
-from apde_etl_spark.sources.readers import local_frame
+from apde_etl_spark.sources.readers import collect_bounded, local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -551,10 +551,11 @@ def brute_force_topk(
 # Hyperplane-LSH bucketed ANN — the cosine-similarity scale path
 # ---------------------------------------------------------------------------
 
-#: Default broadcast budget for the candidate-generation joins below.
-#: Above this, pinning the corpus projection in every executor stops being
-#: a plan and starts being an OOM — the join falls back to a salted
-#: shuffle on the bucket key.
+#: Broadcast budget for the candidate-generation joins below and the PQ
+#: route. Above this, pinning the corpus projection in every executor
+#: stops being a plan and starts being an OOM — the join falls back to a
+#: salted shuffle on the bucket key. Read at call time; ``strategy=``
+#: forces either join path per call.
 ANN_BROADCAST_THRESHOLD_BYTES = 256 << 20
 
 
@@ -573,14 +574,18 @@ def plan_size_bytes(df: DataFrame) -> int:
 def resolve_candidate_strategy(
     corpus: DataFrame,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
+    broadcast_threshold_bytes: int | None = None,
 ) -> str:
     """Resolve ``"auto"`` to ``"broadcast"``/``"shuffle"`` by the corpus
-    plan's size estimate; pass explicit strategies through unchanged."""
+    plan's size estimate against ``broadcast_threshold_bytes`` (default
+    :data:`ANN_BROADCAST_THRESHOLD_BYTES`); pass explicit strategies
+    through unchanged."""
     if strategy != "auto":
         if strategy not in ("broadcast", "shuffle"):
             raise ValueError(f"unknown candidate_join strategy: {strategy!r}")
         return strategy
+    if broadcast_threshold_bytes is None:
+        broadcast_threshold_bytes = ANN_BROADCAST_THRESHOLD_BYTES
     return (
         "broadcast"
         if plan_size_bytes(corpus) <= broadcast_threshold_bytes
@@ -593,7 +598,6 @@ def candidate_join(
     corpus: DataFrame,
     key: str,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
     probe_salt_source: str = "id_a",
 ) -> DataFrame:
@@ -618,7 +622,7 @@ def candidate_join(
     plan (unknown ⇒ shuffle, the conservatively-correct path). Both
     strategies produce identical rows — tests assert it.
     """
-    strategy = resolve_candidate_strategy(corpus, strategy, broadcast_threshold_bytes)
+    strategy = resolve_candidate_strategy(corpus, strategy)
     if strategy == "broadcast":
         return probe.join(F.broadcast(corpus), key)
     if strategy == "shuffle":
@@ -686,7 +690,6 @@ def ann_lsh_topk(
     dim: int = 64,
     seed: int = 424242,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
     multi_probe: int = 0,
     num_tables: int = 1,
@@ -722,8 +725,8 @@ def ann_lsh_topk(
     precision is 1; recall is traded for the join-volume reduction.
 
     The bucket join is size-gated by :func:`candidate_join`: corpus
-    broadcasts under ``broadcast_threshold_bytes``, else a salted
-    shuffle on the bucket key — same rows either way.
+    broadcasts under :data:`ANN_BROADCAST_THRESHOLD_BYTES`, else a
+    salted shuffle on the bucket key — same rows either way.
     """
     if num_tables < 1:
         raise ValueError("num_tables must be >= 1")
@@ -735,12 +738,12 @@ def ann_lsh_topk(
     if num_tables > 1:
         return _ann_lsh_topk_multitable(
             e, id_col, k, num_planes, dim, seed, strategy,
-            broadcast_threshold_bytes, salt_buckets, multi_probe, num_tables,
+            salt_buckets, multi_probe, num_tables,
         )
     # Probe side spread by id (uniform, skew-free) ONLY on the broadcast
     # path — the shuffle path re-partitions on (bucket, salt) in the join
     # itself, so a prior id-repartition would be a wasted full exchange.
-    strategy = resolve_candidate_strategy(e, strategy, broadcast_threshold_bytes)
+    strategy = resolve_candidate_strategy(e, strategy)
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     probe = e.repartition(nparts, id_col) if strategy == "broadcast" else e
     if multi_probe:
@@ -761,7 +764,6 @@ def ann_lsh_topk(
                  F.col("__n").alias("__nb"), F.col("__bucket").alias("__b"))
     cand = candidate_join(
         a, b, "__b", strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
     return _cosine_topk(cand, k, strategy)
@@ -821,7 +823,6 @@ def _ann_lsh_topk_multitable(
     dim: int,
     seed: int,
     strategy: str,
-    broadcast_threshold_bytes: int,
     salt_buckets: int,
     multi_probe: int,
     num_tables: int,
@@ -852,7 +853,7 @@ def _ann_lsh_topk_multitable(
     # the corpus side is L x bigger than single-table — scale the
     # broadcast budget down accordingly before resolving "auto"
     strategy = resolve_candidate_strategy(
-        e, strategy, broadcast_threshold_bytes // num_tables
+        e, strategy, ANN_BROADCAST_THRESHOLD_BYTES // num_tables
     )
     corpus = with_keys.select(
         F.col(id_col).alias("id_b"), F.explode(F.array(*kcols)).alias("__b")
@@ -867,7 +868,6 @@ def _ann_lsh_topk_multitable(
     cand = (
         candidate_join(
             probes, corpus, "__b", strategy=strategy,
-            broadcast_threshold_bytes=broadcast_threshold_bytes // num_tables,
             salt_buckets=salt_buckets,
         )
         .filter(F.col("id_a") != F.col("id_b"))
@@ -890,7 +890,6 @@ def embed_neardup_pairs(
     dim: int = 64,
     seed: int = 424242,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: hyperplane-LSH bucketed
@@ -909,7 +908,7 @@ def embed_neardup_pairs(
     planes = hyperplanes(num_planes, dim, seed)
     e = _with_norm(df, id_col, vec_col).withColumn(
         "__bucket", lsh_bucket(F.col("__v"), planes))
-    strategy = resolve_candidate_strategy(e, strategy, broadcast_threshold_bytes)
+    strategy = resolve_candidate_strategy(e, strategy)
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     probe = e.repartition(nparts, id_col) if strategy == "broadcast" else e
     a = probe.select(
@@ -919,7 +918,6 @@ def embed_neardup_pairs(
                  F.col("__n").alias("__nb"), F.col("__bucket").alias("__b"))
     cand = candidate_join(
         a, b, "__b", strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") < F.col("id_b"))
     scored = _pair_cosine_scored(cand, out_col="cosine_sim",
@@ -1161,7 +1159,6 @@ def ann_ivf_topk(
     n_probe: int = 2,
     centroid_stride: int | None = None,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
     train_iters: int = 0,
     assign_strategy: str = "auto",
@@ -1239,7 +1236,7 @@ def ann_ivf_topk(
     # cross join is left_bytes x right_rows — ~n_cells-fold inflated, so
     # gating on it made the broadcast path unreachable even for tiny
     # corpora (caught by the PLANS.md audit flipping this entry to SMJ)
-    strategy = resolve_candidate_strategy(e, strategy, broadcast_threshold_bytes)
+    strategy = resolve_candidate_strategy(e, strategy)
     nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     qside = probed.repartition(nparts, id_col) if strategy == "broadcast" else probed
     queries = qside.select(
@@ -1248,7 +1245,6 @@ def ann_ivf_topk(
     )
     cand = candidate_join(
         queries, lists, "cell_id", strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
     return _cosine_topk(cand, k)
@@ -1754,18 +1750,14 @@ def pq_train_books(
         tracked_release(e)
 
 
-def resolve_pq_route(
-    n_rows: int,
-    m: int,
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
-) -> str:
+def resolve_pq_route(n_rows: int, m: int) -> str:
     """Gate for :func:`ann_pq_topk`: ``"flat"`` while the encoded corpus
     (one m-byte-ish code array per row, ~24B array overhead + 4B/int)
-    fits the broadcast budget, else ``"ivfpq"``. Mirrors
+    fits :data:`ANN_BROADCAST_THRESHOLD_BYTES`, else ``"ivfpq"``. Mirrors
     :func:`resolve_candidate_strategy` — the decision is an explicit,
     testable function, not a docstring warning."""
     est = n_rows * (24 + 4 * m)
-    return "flat" if est <= broadcast_threshold_bytes else "ivfpq"
+    return "flat" if est <= ANN_BROADCAST_THRESHOLD_BYTES else "ivfpq"
 
 
 def ann_pq_topk(
@@ -1778,7 +1770,6 @@ def ann_pq_topk(
     k_codes: int = 16,
     train_iters: int = 1,
     rerank: int | None = None,
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     on_overflow: str = "ivfpq",
     codebooks: list[list[list[float]]] | None = None,
     train_exact_mean: bool = False,
@@ -1800,7 +1791,7 @@ def ann_pq_topk(
     path that bounds the pair count is :func:`ann_ivfpq_topk` (IVF
     cells restrict candidates; PQ codes price them) — and the gate is
     ENFORCED, not advisory: when the encoded corpus outgrows
-    ``broadcast_threshold_bytes`` (:func:`resolve_pq_route`), the call
+    :data:`ANN_BROADCAST_THRESHOLD_BYTES` (:func:`resolve_pq_route`), the call
     auto-composes :func:`ann_ivfpq_topk` with sqrt(n) cells
     (``on_overflow="ivfpq"``, default) or raises with guidance
     (``on_overflow="error"``), mirroring :func:`candidate_join`'s
@@ -1823,12 +1814,12 @@ def ann_pq_topk(
         raise ValueError(f"ann_pq_topk: unknown on_overflow={on_overflow!r}")
     e = _unit_vectors(df, id_col, vec_col)
     n_rows = e.count()  # materializes the cache training reuses anyway
-    if resolve_pq_route(n_rows, m, broadcast_threshold_bytes) == "ivfpq":
+    if resolve_pq_route(n_rows, m) == "ivfpq":
         tracked_release(e)
         if on_overflow == "error":
             raise ValueError(
                 f"ann_pq_topk: encoded corpus of {n_rows} rows exceeds the "
-                f"{broadcast_threshold_bytes}B broadcast budget — flat ADC "
+                f"{ANN_BROADCAST_THRESHOLD_BYTES}B broadcast budget — flat ADC "
                 "enumeration is O(queries x corpus); use ann_ivfpq_topk "
                 "(IVF cells bound the candidates) or raise the threshold"
             )
@@ -1837,7 +1828,6 @@ def ann_pq_topk(
             df, id_col, vec_col, k=k, dim=dim,
             n_cells=n_cells, n_probe=max(2, n_cells // 8),
             m=m, k_codes=k_codes, pq_train_iters=train_iters, rerank=rerank,
-            broadcast_threshold_bytes=broadcast_threshold_bytes,
             pq_train_exact_mean=train_exact_mean,
         )
     books = codebooks if codebooks is not None else train_pq_codebooks(
@@ -1866,7 +1856,6 @@ def ann_ivfpq_topk(
     pq_train_iters: int = 1,
     rerank: int | None = None,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
     query_filter: Column | None = None,
     assign_strategy: str = "auto",
@@ -1973,7 +1962,6 @@ def ann_ivfpq_topk(
     )
     cand = candidate_join(
         probes, lists, "cell_id", strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("id_a") != F.col("id_b"))
     return _adc_topk(cand, e, id_col, m, k_codes, k, rerank)
@@ -2021,20 +2009,21 @@ def exact_topk_pairs(
     import numpy as np
 
     e = df.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
-    # size-gate BEFORE the collect — checking len(collect()) after the
-    # fact cannot prevent the driver-memory blowup the cap exists for.
-    # limit(cap+1).count() reads at most cap+1 ids, never the vectors.
-    probe = e.select(id_col).limit(EXACT_TOPK_MAX_ROWS + 1).count()
-    if probe > EXACT_TOPK_MAX_ROWS:
+    # ONE bounded collect is the size gate and the corpus: past the cap
+    # it brings cap+1 rows to the driver, never the whole table.
+    corpus = collect_bounded(e, EXACT_TOPK_MAX_ROWS)
+    if corpus is None:
         raise ValueError(
             f"exact_topk_pairs: corpus exceeds the "
             f"{EXACT_TOPK_MAX_ROWS}-row harness cap — ground-truth a "
             "query sample against the full corpus instead"
         )
-    corpus = e.collect()
-    corpus.sort(key=lambda r: r[id_col])  # stable argsort => id asc on ties
-    ids = np.array([r[id_col] for r in corpus], dtype=np.int64)
-    C = np.array([list(r["__v"]) for r in corpus], dtype=np.float64)
+    ids = corpus.column(id_col).to_numpy()
+    order = np.argsort(ids, kind="stable")  # stable => id asc on ties
+    ids = ids[order].astype(np.int64)
+    vecs = corpus.column("__v").combine_chunks()
+    C = vecs.flatten().to_numpy(zero_copy_only=False).astype(
+        np.float64).reshape(len(vecs), -1)[order]
     Cn = np.linalg.norm(C, axis=1)
     n_keep = min(k, len(ids) - 1)
     # rows per matmul chunk: ~64 MB of score doubles (8M cells)
@@ -2073,7 +2062,6 @@ def semantic_dedup(
     dim: int = 64,
     seed: int = 424242,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column:
     partition the corpus into semantic buckets (hyperplane-LSH sign
@@ -2104,7 +2092,6 @@ def semantic_dedup(
     return semantic_dedup_incremental(
         df, df.limit(0), id_col, vec_col, threshold=threshold,
         num_planes=num_planes, dim=dim, seed=seed, strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
     )
 
 
@@ -2118,7 +2105,6 @@ def semantic_dedup_incremental(
     dim: int = 64,
     seed: int = 424242,
     strategy: str = "auto",
-    broadcast_threshold_bytes: int = ANN_BROADCAST_THRESHOLD_BYTES,
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Incremental SemDeDup: admit only the batch vectors that are NOT
@@ -2163,13 +2149,11 @@ def semantic_dedup_incremental(
         F.col("__n").alias("__nb"), "__b", F.lit(False).alias("__is_corpus"))
     build = ec.unionByName(eb_b)
 
-    strategy = resolve_candidate_strategy(build, strategy,
-                                          broadcast_threshold_bytes)
+    strategy = resolve_candidate_strategy(build, strategy)
     if strategy == "broadcast":
         a = a.repartition(nparts, "id_a")
     cand = candidate_join(
         a, build, "__b", strategy=strategy,
-        broadcast_threshold_bytes=broadcast_threshold_bytes,
         salt_buckets=salt_buckets,
     ).filter(F.col("__is_corpus") | (F.col("id_b") < F.col("id_a")))
     dropped = (

@@ -108,7 +108,7 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (co-partition edges by src at 100 TB and the join is shuffle-free)."""
     edges = tracked_persist(_edges_df(spark, sf_dir), scope="graph")
     pr = pagerank_integer(edges, iters=_PR_ITERS, scale=_PR_SCALE,
-                           cache_scope="graph", broadcast_below=2_000_000)
+                           cache_scope="graph")
     return pr.select("node", F.col("rank").alias("pr_rank"))
 
 
@@ -165,7 +165,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = (F.col("node") % 2 == 0) & (F.col("node") < 20)
     pr = pagerank_integer(
         edges, iters=_PR_ITERS, scale=_PR_SCALE, seed_pred=seed,
-        cache_scope="graph", broadcast_below=2_000_000)
+        cache_scope="graph")
     return pr.filter(F.col("rank") > 0).select(
         "node", F.col("rank").alias("pr_rank"))
 
@@ -195,9 +195,9 @@ def graph_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring you can trust across engines and retries."""
     edges = tracked_persist(_edges_df(spark, sf_dir), scope="graph")
     r_prev = pagerank_integer(edges, iters=_PR_ITERS - 1, scale=_PR_SCALE,
-                              cache_scope="graph", broadcast_below=2_000_000)
+                              cache_scope="graph")
     r_last = pagerank_integer(edges, iters=_PR_ITERS, scale=_PR_SCALE,
-                              cache_scope="graph", broadcast_below=2_000_000)
+                              cache_scope="graph")
     j = r_last.select("node", F.col("rank").alias("ra")).join(
         r_prev.select("node", F.col("rank").alias("rb")), "node")
     return j.agg(

@@ -303,8 +303,7 @@ def _pagerank_directed_sinks(spark: SparkSession, sf_dir: str,
     edges = tracked_persist(_edges_directed(spark, sf_dir), scope="graph")
     pr = pagerank_integer(
         edges, iters=_PR_ITERS, scale=_PR_SCALE,
-        dangling="redistribute", cache_scope="graph",
-        broadcast_below=2_000_000, **pr_kw)
+        dangling="redistribute", cache_scope="graph", **pr_kw)
     return pr.select("node", F.col("rank").alias("pr_rank"))
 
 

@@ -73,6 +73,28 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def collect_bounded(df: DataFrame, max_rows: int,
+                    max_bytes: int | None = None) -> pa.Table | None:
+    """The rows of ``df`` as one ``pyarrow.Table``, or None when there
+    are more than ``max_rows`` of them or their Arrow buffers take more
+    than ``max_bytes``: the reverse trip of :func:`local_frame`, for the
+    driver fast paths that take a frame only while it is small.
+
+    One job, ``df.limit(max_rows + 1).toArrow()``: the collect is both
+    the size probe and the payload, so a frame under the cap is read
+    once and a frame over it brings at most ``max_rows + 1`` rows to the
+    driver. The byte cap is checked on the collected table, before a
+    caller expands it (``to_pylist`` roughly doubles it). An empty frame
+    gives an empty table with the frame's schema, not None.
+    """
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        return None
+    if max_bytes is not None and table.nbytes > max_bytes:
+        return None
+    return table
+
+
 def read_delimited(
     spark: SparkSession,
     path: str,

@@ -68,37 +68,39 @@ def test_hash_priority_cap_cache_releases(spark):
     assert release_scope("skew") >= 1
 
 
-def test_pq_route_gate_thresholds():
+def test_pq_route_gate_thresholds(monkeypatch):
     # 1000 rows x (24 + 32)B = 56kB
-    assert SIM.resolve_pq_route(1000, 8, broadcast_threshold_bytes=100_000) == "flat"
-    assert SIM.resolve_pq_route(1000, 8, broadcast_threshold_bytes=10_000) == "ivfpq"
-    assert SIM.resolve_pq_route(0, 8, broadcast_threshold_bytes=0) == "flat"
+    monkeypatch.setattr(SIM, "ANN_BROADCAST_THRESHOLD_BYTES", 100_000)
+    assert SIM.resolve_pq_route(1000, 8) == "flat"
+    monkeypatch.setattr(SIM, "ANN_BROADCAST_THRESHOLD_BYTES", 10_000)
+    assert SIM.resolve_pq_route(1000, 8) == "ivfpq"
+    monkeypatch.setattr(SIM, "ANN_BROADCAST_THRESHOLD_BYTES", 0)
+    assert SIM.resolve_pq_route(0, 8) == "flat"
 
 
-def test_ann_pq_topk_routes_to_ivfpq_past_threshold(spark):
+def test_ann_pq_topk_routes_to_ivfpq_past_threshold(spark, monkeypatch):
     """Past the broadcast budget the flat path must NOT run: the call
-    composes ann_ivfpq_topk and returns its (deterministic) result."""
+    composes ann_ivfpq_topk and returns its (deterministic) result. The
+    zero budget also sends the composed call's candidate join down the
+    shuffle path; the direct call is forced onto the broadcast one."""
     emb = _emb(spark)
     n = emb.count()
-    gated = SIM.ann_pq_topk(
-        emb, k=3, dim=8, m=4, k_codes=8, broadcast_threshold_bytes=0
-    )
+    monkeypatch.setattr(SIM, "ANN_BROADCAST_THRESHOLD_BYTES", 0)
+    gated = SIM.ann_pq_topk(emb, k=3, dim=8, m=4, k_codes=8)
     n_cells = max(16, int(n ** 0.5))
     direct = SIM.ann_ivfpq_topk(
         emb, k=3, dim=8, n_cells=n_cells, n_probe=max(2, n_cells // 8),
-        m=4, k_codes=8,
+        m=4, k_codes=8, strategy="broadcast",
     )
     assert sorted(map(tuple, gated.collect())) == sorted(map(tuple, direct.collect()))
     release_scope("similarity")
 
 
-def test_ann_pq_topk_error_mode_past_threshold(spark):
+def test_ann_pq_topk_error_mode_past_threshold(spark, monkeypatch):
     emb = _emb(spark, n=20)
+    monkeypatch.setattr(SIM, "ANN_BROADCAST_THRESHOLD_BYTES", 0)
     with pytest.raises(ValueError, match="broadcast budget"):
-        SIM.ann_pq_topk(
-            emb, k=3, dim=8, m=4, k_codes=8,
-            broadcast_threshold_bytes=0, on_overflow="error",
-        )
+        SIM.ann_pq_topk(emb, k=3, dim=8, m=4, k_codes=8, on_overflow="error")
     with pytest.raises(ValueError, match="on_overflow"):
         SIM.ann_pq_topk(emb, k=3, dim=8, on_overflow="bogus")
     release_scope("similarity")

@@ -424,7 +424,7 @@ def test_multi_probe_bounded_by_planes(spark, sf_dir):
         SIM.ann_lsh_topk(emb, multi_probe=7, num_planes=6).collect()
 
 
-def test_connected_components_probe_gates(spark):
+def test_connected_components_probe_gates(spark, monkeypatch):
     """driver_edge_threshold=0 must skip the probe collect entirely, and
     a tiny byte cap must push wide (string-id) edge lists to the
     distributed path — all three paths agree on the labels."""
@@ -434,7 +434,8 @@ def test_connected_components_probe_gates(spark):
     expect = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
     fast = D.connected_components(pairs)
     no_probe = D.connected_components(pairs, driver_edge_threshold=0)
-    byte_capped = D.connected_components(pairs, driver_probe_max_bytes=1)
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_BYTES", 1)
+    byte_capped = D.connected_components(pairs)
     for out in (fast, no_probe, byte_capped):
         assert {(r["id"], r["component"]) for r in out.collect()} == expect
 

@@ -224,3 +224,43 @@ def test_local_fast_path_declines_int_ids(spark):
     df = pagerank_integer(edges, iters=2)
     assert "Join" in df._jdf.queryExecution().executedPlan().toString()
     assert set(_ranks(df)) == {1, 2}
+
+
+def test_local_fast_path_collects_edges_once(spark):
+    """The driver path's edge gate is its edge collect: one bounded
+    Arrow collect is both the probe and the payload, so constructing
+    the ranks of this graph runs 6 jobs (a separate probe made it 8)."""
+    from test_local_frame import _jobs_of
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 5), (2, 5),
+         (6, 1), (6, 7), (7, 8)],
+        "src long, dst long")
+    df, jobs = _jobs_of(spark, "pagerank_local_jobs",
+                        lambda: pagerank_integer(edges, iters=5))
+    assert len(jobs) == 6
+    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_distributed_loop_broadcast_gate_parity(spark, monkeypatch):
+    """The distributed loop gives identical ranks with its node-sized
+    joins broadcast (the default gate) and with the gate at 0."""
+    from apde_etl_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 5), (2, 5),
+         (6, 1), (6, 7), (7, 8)],
+        "src long, dst long")
+    default = G.PR_BROADCAST_MAX_NODES
+    for kw in (dict(iters=4), dict(iters=4, dangling="redistribute")):
+        runs = {}
+        for gate in (default, 0):
+            monkeypatch.setattr(G, "PR_BROADCAST_MAX_NODES", gate)
+            df = pagerank_integer(edges, local_max_edges=0, **kw)
+            if "dangling" not in kw:  # redistribute checkpoints each step
+                hinted = "strategy=broadcast" in \
+                    df._jdf.queryExecution().analyzed().toString()
+                assert hinted == (gate > 0), gate
+            runs[gate] = _ranks(df)
+        broadcast, shuffled = runs.values()
+        assert broadcast == shuffled, kw

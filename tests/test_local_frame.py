@@ -4,6 +4,10 @@
 RDD, so every execution runs Python-worker tasks. ``local_frame`` hands
 Spark an Arrow table instead, which becomes a ``LocalTableScan`` that
 runs no job, while rejecting the same bad rows ``createDataFrame`` does.
+
+``collect_bounded`` is the reverse trip: a frame comes to the driver as
+one Arrow table only while it is under a row (and byte) cap, in one job
+that is both the size probe and the payload.
 """
 
 from __future__ import annotations
@@ -13,9 +17,10 @@ import glob
 import os
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from apde_etl_spark.sources.readers import local_frame
+from apde_etl_spark.sources.readers import collect_bounded, local_frame
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "apde_etl_spark")
@@ -105,4 +110,64 @@ def test_no_other_create_data_frame_in_engine():
     assert set(_create_data_frame_callers()) == {
         ("sources/readers.py", "local_frame"),
         ("operators/graph.py", "_pagerank_local_try"),
+    }
+
+
+def _frame(spark, n):
+    """n rows (id, y) over 4 scan partitions."""
+    return spark.range(0, n, numPartitions=4).select(
+        F.col("id"), (F.col("id") * 2).alias("y"))
+
+
+@pytest.mark.parametrize("n,max_rows,max_bytes,want_rows", [
+    (50, 50, None, 50),      # exactly at the row cap: collected
+    (51, 50, None, None),    # one row over: declined
+    (50, 50, 100, None),     # under the rows, over the bytes: declined
+    (50, 50, 1 << 20, 50),   # under both caps
+    (0, 50, None, 0),        # empty frame: an empty table, not None
+])
+def test_collect_bounded_caps_in_one_job(spark, n, max_rows, max_bytes,
+                                         want_rows):
+    df = _frame(spark, n)
+    out, jobs = _jobs_of(spark, f"bounded_{n}_{max_rows}_{max_bytes}",
+                         lambda: collect_bounded(df, max_rows, max_bytes))
+    assert len(jobs) == 1
+    if want_rows is None:
+        assert out is None
+        return
+    assert out.num_rows == want_rows
+    assert out.column_names == ["id", "y"]
+    assert sorted(out.column("id").to_pylist()) == list(range(n))
+
+
+def _bounded_probe_sites():
+    """(module, top-level def) of every ``.limit(<cap> + 1)`` call whose
+    cap is a name or an attribute: the shape of a size probe. A top-N
+    such as ``.limit(n - rank + 1)`` is not one."""
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "limit" and node.args):
+                    continue
+                arg = node.args[0]
+                if (isinstance(arg, ast.BinOp) and isinstance(arg.op, ast.Add)
+                        and isinstance(arg.left, (ast.Name, ast.Attribute))
+                        and isinstance(arg.right, ast.Constant)
+                        and arg.right.value == 1):
+                    yield rel, getattr(top, "name", "<module>")
+
+
+def test_size_probes_go_through_collect_bounded():
+    """A driver fast path sizes its input with ``collect_bounded``, whose
+    collect is also the payload. The one other probe is the ANN local
+    serve's shape aggregate, which must bound the vectors' bytes before
+    it collects them."""
+    assert set(_bounded_probe_sites()) == {
+        ("sources/readers.py", "collect_bounded"),
+        ("operators/ann_index.py", "_try_local_serve"),
     }
