@@ -264,3 +264,26 @@ def test_distributed_loop_broadcast_gate_parity(spark, monkeypatch):
             runs[gate] = _ranks(df)
         broadcast, shuffled = runs.values()
         assert broadcast == shuffled, kw
+
+
+def test_local_fast_path_declines_null_endpoints(spark, monkeypatch):
+    """An edge with a null endpoint declines the driver path: the null
+    is seen in the collected column before any cast to int64 (a cast
+    would turn it into an arbitrary id). The distributed loop's joins
+    then define the ranks."""
+    from apde_etl_spark.operators import graph as G
+
+    taken = []
+    real = G._pagerank_local_try
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(G, "_pagerank_local_try", spy)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, None)], "src long, dst long")
+    got = _ranks(pagerank_integer(edges, iters=3))
+    assert taken == [False]
+    assert got == _ranks(pagerank_integer(edges, iters=3, local_max_edges=0))
