@@ -349,33 +349,6 @@ def _ranked_knn_edges(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def _id_rank(ids: DataFrame) -> tuple[DataFrame, int]:
-    """(__id, __rn) over a frame of distinct ``__id`` longs, and its row
-    count. ``__rn`` is the 0-based ascending id rank: the values of
-    ``row_number().over(Window.orderBy("__id")) - 1``, built in parallel.
-    A window with no partition key ranks the whole corpus in one task;
-    here a range-partitioned sort puts the ids in ordered partitions,
-    one job counts each partition, and a row's rank is the row count of
-    all lower partitions plus its row_number within its own. The
-    partitioned ids are checkpointed, so the partitions that were
-    counted are the ones that are ranked."""
-    spark = ids.sparkSession
-    part = (
-        ids.select("__id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "__id")
-        .withColumn("__p", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = dict(part.groupBy("__p").count().collect())
-    offsets, n = [], 0
-    for p in range(max(counts, default=0) + 1):
-        offsets.append(n)
-        n += counts.get(p, 0)
-    within = F.row_number().over(Window.partitionBy("__p").orderBy("__id"))
-    rn = F.element_at(F.lit(offsets), F.col("__p") + 1) + within - 1
-    return part.select("__id", rn.cast("int").alias("__rn")), n
-
-
 def _long_link_edges(df: DataFrame, id_col: str, n_neighbors: int,
                      n_long_links: int) -> DataFrame | None:
     """(src, dst, rank) — ``n_long_links`` deterministic long-range
@@ -384,7 +357,11 @@ def _long_link_edges(df: DataFrame, id_col: str, n_neighbors: int,
     oracle restates them as one modular expression."""
     if n_long_links <= 0:
         return None
-    rk, n_nodes = _id_rank(df.select(F.col(id_col).cast("long").alias("__id")))
+    rk = df.select(F.col(id_col).cast("long").alias("__id")) \
+        .withColumn(
+            "__rn",
+            F.row_number().over(Window.orderBy("__id")) - 1)
+    n_nodes = rk.count()
     links = None
     for r in range(1, n_long_links + 1):
         tgt = (F.col("__rn") * F.lit(2654435761)
@@ -1287,10 +1264,14 @@ def build_knn_graph_insert(
         F.col(id_col).cast("long").alias("__id"),
         as_double_array(vec_col).alias("__v"),
     ).withColumn("__n", l2_norm(F.col("__v")))
-    ids = df.select(F.col(id_col).cast("long").alias("__id"))
-    lv = node_levels(ids, "__id", n_layers, layer_factor)
-    rk, n_nodes = _id_rank(ids)
-    nodes = _ckpt(e.join(lv, "__id").join(rk, "__id"))
+    lv = node_levels(
+        df.select(F.col(id_col).cast("long").alias("__id")),
+        "__id", n_layers, layer_factor)
+    nodes = _ckpt(
+        e.join(lv, "__id")
+        .withColumn("__rn", F.row_number().over(Window.orderBy("__id")) - 1)
+    )
+    n_nodes = nodes.count()
 
     boot = nodes.filter(F.col("__rn") < boot_rows)
     adj0 = _ckpt(_knn_edges_cos(boot, n_neighbors))

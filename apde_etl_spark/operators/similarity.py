@@ -2009,8 +2009,13 @@ def exact_topk_pairs(
     import numpy as np
 
     e = df.select(F.col(id_col), as_double_array(vec_col).alias("__v"))
-    # ONE bounded collect is the size gate and the corpus: past the cap
-    # it brings cap+1 rows to the driver, never the whole table.
+    # ONE bounded collect is the size gate and the corpus: no separate
+    # count job under the cap. The price is on the error path: past the
+    # cap each partition ships up to cap+1 rows WITH their vectors into
+    # one partition, and cap+1 of them reach the driver before the
+    # raise, where an id-only probe read no vectors. Callers that may
+    # hold a large table check its size first, as
+    # tools/scale_stress_anngraph.py does before its exact truth.
     corpus = collect_bounded(e, EXACT_TOPK_MAX_ROWS)
     if corpus is None:
         raise ValueError(

@@ -453,22 +453,3 @@ def test_graph_upper_absence_checked_not_assumed(spark, sf_dir, tmp_path):
             ann_graph_search_layered(spark, bad, queries, emb,
                                      local_serve_max_rows=cap,
                                      **kw, **lkw).collect()
-
-
-def test_id_rank_equals_row_number(spark):
-    """The parallel dense id rank gives the ranks of a window with no
-    partition key, over ids that arrive unordered in several partitions."""
-    from pyspark.sql import Window
-
-    from apde_etl_spark.operators.ann_index import _id_rank
-
-    ids = spark.range(0, 500, numPartitions=5).select(
-        ((F.col("id") * 7919) % 100003).alias("__id"))
-    assert spark.sparkContext.defaultParallelism >= 4  # ranged partitions
-    rk, n = _id_rank(ids)
-    want = ids.withColumn(
-        "__rn", F.row_number().over(Window.orderBy("__id")) - 1)
-    assert n == 500
-    assert rk.dtypes == want.dtypes
-    assert sorted(map(tuple, rk.collect())) == \
-        sorted(map(tuple, want.collect()))

@@ -268,9 +268,9 @@ def test_distributed_loop_broadcast_gate_parity(spark, monkeypatch):
 
 def test_local_fast_path_declines_null_endpoints(spark, monkeypatch):
     """An edge with a null endpoint declines the driver path: the null
-    is seen in the collected column before any cast to int64 (a cast
-    would turn it into an arbitrary id). The distributed loop's joins
-    then define the ranks."""
+    is seen in the collected column, not left to a cast to int64 (which
+    makes it INT64_MIN and relies on that never being a node id). The
+    distributed loop's joins then define the ranks."""
     from apde_etl_spark.operators import graph as G
 
     taken = []
