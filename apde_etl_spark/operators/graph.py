@@ -50,8 +50,11 @@ action per iteration, only when requested).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from apde_etl_spark.sources.readers import collect_bounded
 
@@ -78,123 +81,121 @@ PR_LOCAL_MAX_EDGES = 2_000_000
 PR_BROADCAST_MAX_NODES = 2_000_000
 
 
+def _teleport_term(n_nodes: int, n_seed: int, scale: int, damp_num: int,
+                   damp_den: int) -> int:
+    """Teleport mass of one seed node per iteration, after the two
+    checks both paths share: an empty universe and an empty seed set
+    are errors."""
+    if n_nodes == 0:
+        raise ValueError("pagerank_integer: empty edge list (no nodes)")
+    if n_seed == 0:
+        raise ValueError(
+            "pagerank_integer: seed_pred matches zero nodes — the "
+            "personalized teleport mass has nowhere to go"
+        )
+    # ((den-num)*scale) // (den*|teleport set|), zero off-seed. Python
+    # // on positive ints == SQL div — same integers the round-5
+    # crossJoin formulation produced, now literals.
+    return ((damp_den - damp_num) * scale) // (damp_den * n_seed)
+
+
 def _pagerank_local_try(
     edges: DataFrame,
     src: str,
     dst: str,
-    nodes: DataFrame,
-    is_seed: Column,
-    uniform_init: bool,
+    seed_pred: Column | None,
     dangling: str,
     iters: int,
     scale: int,
     damp_num: int,
     damp_den: int,
-    n_nodes: int,
-    n_seed: int,
-    tp_seed: int,
     tol: int | None,
     max_edges: int,
 ) -> DataFrame | None:
-    """Driver-side twin of the superstep loop, or None past the
-    ``max_edges`` gate (<= 0 turns it off) / on any structural surprise
-    (non-long node ids, null endpoints, duplicate universe rows). The
-    edges come in one bounded Arrow collect, which is also the gate.
+    """Driver-side twin of the superstep loop, or None when it declines:
+    past the ``max_edges`` gate (<= 0 turns it off), non-long node ids,
+    a null endpoint or an empty edge list. The distributed path then
+    defines the ranks, or raises its "empty edge list" error.
+
+    The edges come in one bounded Arrow collect, which is both the gate
+    and the whole input: the node universe (``np.unique`` of src in
+    drop mode, of src ∪ dst in redistribute mode), the out-degrees, n
+    and the teleport constants are all taken from it in numpy, so no
+    other job runs before the recurrence. Only ``seed_pred`` goes back
+    to Spark, as a filter over the collected ids in a driver-local
+    Arrow frame, so arbitrary Column predicates keep engine semantics
+    (NULL is "not a seed", as in the distributed aggregate); the filter
+    folds into the ``LocalTableScan`` and runs no job.
 
     Fidelity: ranks/degrees/sums are int64 throughout; ``a // b`` on
     non-negative int64 == SQL ``div``; the per-dst contribution sum is
-    an exact integer scatter-add (np.add.at — NOT bincount, whose
-    float64 weights would round); sums are order-independent by
+    an exact integer scatter-add (np.add.at — NOT a weighted bincount,
+    whose float64 weights would round); sums are order-independent by
     integer associativity, exactly the property that makes the
-    distributed loop hash-gateable in the first place. The seed
-    predicate is evaluated by Spark itself inside the one nodes
-    collect, so arbitrary Column predicates keep engine semantics."""
-    import logging
-
+    distributed loop hash-gateable in the first place."""
     if max_edges <= 0:
         return None
-    from pyspark.sql.types import LongType
+    if not all(isinstance(edges.schema[c].dataType, LongType)
+               for c in (src, dst)):
+        return None  # the driver path would change the output schema
+    et = collect_bounded(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
+        max_edges)
+    if (et is None or et.num_rows == 0
+            or et["s"].null_count or et["d"].null_count):
+        return None  # past the gate, no edges, or null endpoints
+    es, ed = et["s"].to_numpy(), et["d"].to_numpy()  # int64: LongType
 
-    try:
-        if not isinstance(edges.schema[src].dataType, LongType):
-            return None
-        if not isinstance(edges.schema[dst].dataType, LongType):
-            return None
-        et = collect_bounded(
-            edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
-            max_edges)
-        if et is None or et["s"].null_count or et["d"].null_count:
-            return None  # past the gate, or null endpoints (joins define)
-        es, ed = et["s"].to_numpy(), et["d"].to_numpy()  # int64: LongType
-
-        import numpy as np
-
-        nd = nodes.select(
-            F.col("node"), is_seed.alias("sd")).toPandas()
-        ids = nd["node"].to_numpy(dtype="int64")
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        n = len(ids)
-        if n != n_nodes or (n > 1 and (np.diff(ids) == 0).any()):
-            return None  # duplicate/NULL universe rows: joins define it
-        seed_mask = nd["sd"].to_numpy(dtype="bool")[order]
-
-        si = np.searchsorted(ids, es)
-        if not bool(((si < n) & (ids[np.minimum(si, n - 1)] == es)).all()):
-            return None  # an edge source outside the node universe
-        di = np.searchsorted(ids, ed)
+    ids = np.unique(es if dangling == "drop" else np.concatenate([es, ed]))
+    n = len(ids)
+    si = np.searchsorted(ids, es)
+    deg = np.bincount(si, minlength=n)
+    di = np.searchsorted(ids, ed)
+    if dangling == "drop":
+        # universe = out-edge nodes; mass into pure sinks vanishes —
+        # drop those edges from the scatter.
         d_ok = (di < n) & (ids[np.minimum(di, n - 1)] == ed)
-        if dangling == "redistribute":
-            if not bool(d_ok.all()):
-                return None  # universe = src ∪ dst: every dst resolves
-        else:
-            # drop mode: universe = out-edge nodes; mass into pure
-            # sinks vanishes — drop those edges from the scatter.
-            si, di = si[d_ok], di[d_ok]
-
-        deg = np.zeros(n, dtype="int64")
-        np.add.at(deg, np.searchsorted(ids, es), 1)
-        has_out = deg > 0
-        sinks = ~has_out
-        tp_vec = np.where(seed_mask, np.int64(tp_seed), np.int64(0))
-        ranks = (np.full(n, scale // n_nodes, dtype="int64")
-                 if uniform_init else
-                 np.where(seed_mask, np.int64(scale // n_seed),
-                          np.int64(0)))
-
-        shares = np.zeros(n, dtype="int64")
-        for _ in range(iters):
-            np.floor_divide(ranks, deg, out=shares, where=has_out)
-            shares[sinks] = 0
-            sums = np.zeros(n, dtype="int64")
-            np.add.at(sums, di, shares[si])
-            if dangling == "redistribute":
-                dm = int(ranks[sinks].sum())
-                new_ranks = tp_vec + (damp_num
-                                      * (sums + dm // n_nodes)) // damp_den
-            else:
-                new_ranks = tp_vec + (damp_num * sums) // damp_den
-            if tol is not None:
-                delta = int(np.abs(new_ranks - ranks).sum())
-                ranks = new_ranks
-                if delta <= tol:
-                    break
-            else:
-                ranks = new_ranks
-    except Exception:
-        logging.getLogger(__name__).warning(
-            "pagerank local fast path failed; using the distributed "
-            "loop", exc_info=True)
-        return None
-
-    import pandas as pd
-
+        si, di = si[d_ok], di[d_ok]
     spark = edges.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame({"node": pd.Series(ids, dtype="int64"),
-                      "rank": pd.Series(ranks, dtype="int64")}),
-        schema="node bigint, rank bigint",
-    )
+    if seed_pred is None:
+        seed_mask = np.ones(n, dtype="bool")
+    else:
+        seeds = (spark.createDataFrame(pa.table({"node": ids}),
+                                       schema="node bigint")
+                 .filter(seed_pred).collect())
+        seed_mask = np.isin(ids, np.array([r[0] for r in seeds],
+                                          dtype="int64"))
+    n_seed = int(seed_mask.sum())
+    tp_seed = _teleport_term(n, n_seed, scale, damp_num, damp_den)
+
+    has_out = deg > 0
+    sinks = ~has_out
+    tp_vec = np.where(seed_mask, np.int64(tp_seed), np.int64(0))
+    ranks = (np.full(n, scale // n, dtype="int64")
+             if seed_pred is None else
+             np.where(seed_mask, np.int64(scale // n_seed), np.int64(0)))
+
+    shares = np.zeros(n, dtype="int64")
+    for _ in range(iters):
+        np.floor_divide(ranks, deg, out=shares, where=has_out)
+        shares[sinks] = 0
+        sums = np.zeros(n, dtype="int64")
+        np.add.at(sums, di, shares[si])
+        if dangling == "redistribute":
+            dm = int(ranks[sinks].sum())
+            new_ranks = tp_vec + (damp_num * (sums + dm // n)) // damp_den
+        else:
+            new_ranks = tp_vec + (damp_num * sums) // damp_den
+        if tol is not None:
+            delta = int(np.abs(new_ranks - ranks).sum())
+            ranks = new_ranks
+            if delta <= tol:
+                break
+        else:
+            ranks = new_ranks
+
+    return spark.createDataFrame(pa.table({"node": ids, "rank": ranks}),
+                                 schema="node bigint, rank bigint")
 
 
 def pagerank_integer(
@@ -239,15 +240,16 @@ def pagerank_integer(
     <= tol; implies per-iteration checkpointing (the delta aggregate is
     an action, and re-running un-truncated lineage would be quadratic).
 
-    Plan: degree once, then per iteration one join (ranks x edges on the
-    node key) and one groupBy(dst) sum — 2 shuffles per iteration, both
-    on the node id, AQE-coalesced; no per-row Python, no floats. The
-    teleport constants (n, n_seed) come from ONE tiny driver-side
-    aggregate, doubling as the seed validation.
+    Distributed plan: degree once, then per iteration one join (ranks x
+    edges on the node key) and one groupBy(dst) sum — 2 shuffles per
+    iteration, both on the node id, AQE-coalesced; no per-row Python, no
+    floats. On this path the teleport constants (n, n_seed) come from
+    ONE tiny driver-side aggregate, doubling as the seed validation.
 
     :data:`PR_BROADCAST_MAX_NODES` is the size gate for the rank/degree
-    side: when |V| (the ``n`` of the teleport aggregate above, counted
-    over the same frame the joins key on) is at or under it, the
+    side of that loop: when |V| (the ``n`` of the teleport aggregate
+    above, counted over the same frame the joins key on, and only once
+    the driver path has declined) is at or under it, the
     per-iteration joins broadcast the node-sized frames so the
     only shuffle left per iteration is the groupBy(dst) — the right
     plan while ranks fit an executor. Past the gate the joins stay
@@ -256,9 +258,11 @@ def pagerank_integer(
     way (integer arithmetic; the unit suite pins partitioning
     invariance).
 
-    ``local_max_edges`` gates the driver-side twin of the loop: a graph
-    of at most that many edges (0 = never) runs in numpy on one collect
-    and returns the identical ranks.
+    ``local_max_edges`` gates the driver-side twin of the loop, which is
+    tried first: a graph of at most that many edges (0 = never) runs in
+    numpy on one bounded edge collect, which also gives it the node
+    universe, the degrees and n, and returns the identical ranks. No
+    degree, node or count job runs unless that path declines.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -270,6 +274,25 @@ def pagerank_integer(
         raise ValueError("checkpoint_every must be >= 0")
     if tol is not None and tol < 0:
         raise ValueError("tol must be >= 0")
+    # Size-gated driver fast path (the connected_components precedent),
+    # tried before anything else runs: a post-join edge list is two
+    # longs per row, so up to the gate the whole fixed-point recurrence
+    # runs in numpy on ONE bounded collect — int64 floor division /
+    # scatter-add / sums, the identical integers in the identical
+    # order-independent arithmetic — instead of ~2 shuffle stages + 2
+    # broadcast builds PER ITERATION whose fixed scheduling cost
+    # dominates at driver-scale graphs. Past the gate (or with
+    # local_max_edges=0) the distributed loop below is unchanged — that
+    # is the 100 TB path (co-partition edges and ranks on the node id).
+    # Results are bit-identical (parity test-pinned in
+    # tests/test_graph.py; every entry hash-gated).
+    local = _pagerank_local_try(
+        edges, src, dst, seed_pred, dangling=dangling, iters=iters,
+        scale=scale, damp_num=damp_num, damp_den=damp_den, tol=tol,
+        max_edges=local_max_edges,
+    )
+    if local is not None:
+        return local
     deg = degree_table(edges, src)
     if cache_scope is not None:
         # deg (|V| rows) is referenced twice per iteration — share→free
@@ -296,38 +319,7 @@ def pagerank_integer(
     ).first()
     n_nodes = int(counts["n"] or 0)
     n_seed = int(counts["n_seed"] or 0)
-    if n_nodes == 0:
-        raise ValueError("pagerank_integer: empty edge list (no nodes)")
-    if n_seed == 0:
-        raise ValueError(
-            "pagerank_integer: seed_pred matches zero nodes — the "
-            "personalized teleport mass has nowhere to go"
-        )
-    # teleport term: ((den-num)*scale) // (den*|teleport set|), zero
-    # off-seed. Python // on positive ints == SQL div — same integers
-    # the round-5 crossJoin formulation produced, now literals.
-    tp_seed = ((damp_den - damp_num) * scale) // (damp_den * n_seed)
-
-    # Size-gated driver fast path (the connected_components precedent):
-    # a post-join edge list is two longs per row, so up to the gate the
-    # whole fixed-point recurrence runs in numpy on ONE collect —
-    # int64 floor division / scatter-add / sums, the identical integers
-    # in the identical order-independent arithmetic — instead of ~2
-    # shuffle stages + 2 broadcast builds PER ITERATION whose fixed
-    # scheduling cost dominates at driver-scale graphs. Past the gate
-    # (or with local_max_edges=0) the distributed loop below is
-    # unchanged — that is the 100 TB path (co-partition edges and ranks
-    # on the node id). Results are bit-identical (parity test-pinned in
-    # tests/test_graph.py; every entry hash-gated).
-    local = _pagerank_local_try(
-        edges, src, dst, nodes, is_seed,
-        uniform_init=(seed_pred is None), dangling=dangling, iters=iters,
-        scale=scale, damp_num=damp_num, damp_den=damp_den,
-        n_nodes=n_nodes, n_seed=n_seed, tp_seed=tp_seed, tol=tol,
-        max_edges=local_max_edges,
-    )
-    if local is not None:
-        return local
+    tp_seed = _teleport_term(n_nodes, n_seed, scale, damp_num, damp_den)
     if seed_pred is None:
         ranks = nodes.select(
             "node", F.lit(scale // n_nodes).cast("long").alias("rank")

@@ -24,6 +24,23 @@ def _ranks(df):
     return {r["node"]: r["rank"] for r in df.collect()}
 
 
+def _spy_local_path(monkeypatch):
+    """A list that records, per ``pagerank_integer`` call, whether the
+    driver path returned the ranks (True) or declined (False)."""
+    from apde_etl_spark.operators import graph as G
+
+    taken = []
+    real = G._pagerank_local_try
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        taken.append(out is not None)
+        return out
+
+    monkeypatch.setattr(G, "_pagerank_local_try", spy)
+    return taken
+
+
 def test_symmetric_graph_equal_ranks(spark):
     # triangle: all nodes equivalent -> identical integer ranks
     edges = _undirected(spark, [(1, 2), (2, 3), (3, 1)])
@@ -180,17 +197,7 @@ def test_local_fast_path_parity_bit_exact(spark, monkeypatch):
     respect its ``local_max_edges`` gate."""
     from pyspark.sql import functions as F
 
-    from apde_etl_spark.operators import graph as G
-
-    taken = []
-    real = G._pagerank_local_try
-
-    def spy(*a, **kw):
-        out = real(*a, **kw)
-        taken.append(out is not None)
-        return out
-
-    monkeypatch.setattr(G, "_pagerank_local_try", spy)
+    taken = _spy_local_path(monkeypatch)
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 5), (2, 5),
@@ -227,19 +234,64 @@ def test_local_fast_path_declines_int_ids(spark):
 
 
 def test_local_fast_path_collects_edges_once(spark):
-    """The driver path's edge gate is its edge collect: one bounded
-    Arrow collect is both the probe and the payload, so constructing
-    the ranks of this graph runs 6 jobs (a separate probe made it 8)."""
+    """The driver path runs on its one bounded Arrow edge collect, which
+    is the gate and the whole input: the node universe, the degrees and
+    n come from it, and a seed predicate filters the collected ids in a
+    driver-local frame, which runs no job. Constructing the ranks of
+    this graph therefore runs 1 job in either dangling mode, with or
+    without seeds: no degree, node or count job runs before the gate."""
+    from pyspark.sql import functions as F
     from test_local_frame import _jobs_of
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 5), (2, 5),
          (6, 1), (6, 7), (7, 8)],
         "src long, dst long")
-    df, jobs = _jobs_of(spark, "pagerank_local_jobs",
-                        lambda: pagerank_integer(edges, iters=5))
-    assert len(jobs) == 6
-    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
+    for name, kw in (
+        ("pagerank_local_jobs", dict()),
+        ("pagerank_local_jobs_redistribute", dict(dangling="redistribute")),
+        ("pagerank_local_jobs_seeded", dict(seed_pred=F.col("node") > 3)),
+    ):
+        df, jobs = _jobs_of(spark, name,
+                            lambda: pagerank_integer(edges, iters=5, **kw))
+        assert len(jobs) == 1, name
+        assert "Join" not in \
+            df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("pairs,kw,null_seeds", [
+    # duplicate edges count twice in the out-degree and the scatter
+    ([(1, 2), (1, 2), (1, 3), (2, 1), (3, 1), (3, 2), (3, 2)], dict(),
+     False),
+    # self-loops: a node is its own in- and out-neighbour
+    ([(1, 1), (1, 2), (2, 2), (2, 3), (3, 1), (3, 3)], dict(), False),
+    # drop mode: 3, 4 and 5 are pure sinks, outside the universe
+    ([(1, 2), (2, 1), (1, 3), (2, 4), (2, 5), (1, 5)], dict(), False),
+    # redistribute: every node but 1 is a sink
+    ([(1, 2), (1, 3), (1, 4), (1, 5)], dict(dangling="redistribute"),
+     False),
+    # a seed predicate that is NULL for nodes <= 3 (NULL = not a seed)
+    ([(1, 2), (2, 3), (3, 4), (4, 5), (5, 1), (2, 5), (6, 1)], dict(),
+     True),
+], ids=["duplicate_edges", "self_loops", "drop_into_sinks",
+        "redistribute_all_sinks_but_one", "null_seed_pred"])
+def test_driver_path_parity_reordered(spark, monkeypatch, pairs, kw,
+                                      null_seeds):
+    """The driver path takes the universe, degrees, n and n_seed from
+    its edge collect instead of the distributed path's aggregates; on
+    the shapes where those are easiest to get wrong it must still give
+    the distributed loop's ranks exactly."""
+    from pyspark.sql import functions as F
+
+    if null_seeds:
+        kw = dict(kw, seed_pred=F.when(F.col("node") > 3, True))
+    taken = _spy_local_path(monkeypatch)
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    fast = _ranks(pagerank_integer(edges, iters=6, **kw))
+    assert taken == [True]
+    slow = _ranks(pagerank_integer(edges, iters=6, local_max_edges=0, **kw))
+    assert taken == [True, False]
+    assert fast == slow
 
 
 def test_distributed_loop_broadcast_gate_parity(spark, monkeypatch):
@@ -271,17 +323,7 @@ def test_local_fast_path_declines_null_endpoints(spark, monkeypatch):
     is seen in the collected column, not left to a cast to int64 (which
     makes it INT64_MIN and relies on that never being a node id). The
     distributed loop's joins then define the ranks."""
-    from apde_etl_spark.operators import graph as G
-
-    taken = []
-    real = G._pagerank_local_try
-
-    def spy(*a, **kw):
-        out = real(*a, **kw)
-        taken.append(out is not None)
-        return out
-
-    monkeypatch.setattr(G, "_pagerank_local_try", spy)
+    taken = _spy_local_path(monkeypatch)
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, None)], "src long, dst long")
     got = _ranks(pagerank_integer(edges, iters=3))

@@ -106,7 +106,7 @@ def _create_data_frame_callers():
 
 def test_no_other_create_data_frame_in_engine():
     """Driver-side rows go through ``local_frame``; the one other caller
-    is graph.py, whose pandas input already takes the Arrow path."""
+    is graph.py's driver path, whose input is already an Arrow table."""
     assert set(_create_data_frame_callers()) == {
         ("sources/readers.py", "local_frame"),
         ("operators/graph.py", "_pagerank_local_try"),
