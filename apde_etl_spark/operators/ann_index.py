@@ -37,6 +37,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apde_etl_spark.operators.arrow_stage import arrow_stage, vectors
 from apde_etl_spark.operators.similarity import (
     as_double_array,
     assign_topn_cells,
@@ -620,7 +621,7 @@ def _try_local_serve(
             return None
         # query-side shape probe (round-10 ADVICE, low): a null or
         # ragged query vector — or a query dim != corpus dim — would
-        # crash the mapInPandas task at EXECUTION time, past the point
+        # crash the Arrow stage at EXECUTION time, past the point
         # where falling back to the join path is possible. Validate the
         # whole query side in one job and decline the fast plan when
         # anything is off; the join path's null-cosine semantics then
@@ -664,16 +665,18 @@ def _try_local_serve(
         cor = corpus_df.select(
             F.col(id_col).cast("long").alias("cid"),
             as_double_array(vec_col).alias("v"),
-        ).toPandas()
-        if len(cor) == 0:
+        ).toArrow()
+        if cor.num_rows == 0:
             return None
-        cids = cor["cid"].to_numpy(dtype="int64")
+        V, v_ok = vectors(cor.column("v").combine_chunks(), dim_c)
+        if not v_ok.all():
+            return None  # a null element: the join path defines it
+        cids = cor.column("cid").to_numpy()
         order = np.argsort(cids, kind="stable")
         cids = cids[order]
         if len(cids) > 1 and (np.diff(cids) == 0).any():
             return None  # duplicate ids: let the join path define it
-        V = np.stack(cor["v"].to_numpy())[order].astype(
-            "float64", copy=False)
+        V = V[order]
         n, dim = V.shape
         # corpus norms: the l2_norm fold, per-dimension-vectorized
         accn = np.zeros(n, dtype="float64")
@@ -755,9 +758,8 @@ def _try_local_serve(
         as_double_array(vec_col).alias("__qv"),
     )
 
-    def serve(batches):
+    def serve(batch):
         import numpy as np
-        import pandas as pd
 
         (cids, V, norms, g_csr, uppers, e_idx, seeds_idx, top, hpl,
          dbeam, beam_w, hops_n, kk) = bc.value
@@ -786,48 +788,46 @@ def _try_local_serve(
             cand = np.unique(np.concatenate([bidx, neigh(bidx, csr)]))
             return cut(cand, score(cand, qv, qn), width)
 
-        for pdf in batches:
-            m = len(pdf)
-            out_qid, out_rank, out_vid, out_cos = [], [], [], []
-            if m:
-                Q = np.stack(pdf["__qv"].to_numpy()).astype(
-                    "float64", copy=False)
-                accq = np.zeros(m, dtype="float64")
-                for i in range(dim):
-                    qc = Q[:, i]
-                    accq = accq + qc * qc
-                qns = np.sqrt(accq)
-            for r in range(m):
-                qv, qn = Q[r], qns[r]
-                qid = pdf["query_id"].iloc[r]
-                if top > 0:
-                    bidx, bcos = cut(
-                        seeds_idx, score(seeds_idx, qv, qn), dbeam)
-                    for lyr in range(top, 0, -1):
-                        for _ in range(hpl):
-                            bidx, bcos = hop(bidx, uppers[lyr], dbeam,
-                                             qv, qn)
-                    bidx = np.concatenate([bidx, e_idx])
-                else:
-                    bidx = e_idx
-                for _ in range(hops_n):
-                    bidx, bcos = hop(bidx, g_csr, beam_w, qv, qn)
-                mask = cids[bidx] != qid
-                fi, fc = cut(bidx[mask], bcos[mask], kk)
-                for rk, (vi, c) in enumerate(zip(fi, fc), 1):
-                    out_qid.append(qid)
-                    out_rank.append(rk)
-                    out_vid.append(cids[vi])
-                    out_cos.append(c)
-            yield pd.DataFrame({
-                "query_id": pd.Series(out_qid,
-                                      dtype=pdf["query_id"].dtype),
-                "rank": pd.Series(out_rank, dtype="int32"),
-                "vec_id_out": pd.Series(out_vid, dtype="int64"),
-                "cosine_raw": pd.Series(out_cos, dtype="float64"),
-            }).rename(columns={"vec_id_out": out_schema[2].name})
+        # every row is held: the query-shape probe declined the plan
+        # for a null, holed or ragged query vector
+        Q, _ = vectors(batch.column("__qv"), dim)
+        accq = np.zeros(len(Q), dtype="float64")
+        for i in range(dim):
+            qc = Q[:, i]
+            accq = accq + qc * qc
+        qns = np.sqrt(accq)
+        qids = batch.column("query_id")
+        out_row, out_vid, out_cos = [], [], []
+        for r in range(len(Q)):
+            qv, qn = Q[r], qns[r]
+            qid = qids[r].as_py()
+            if top > 0:
+                bidx, bcos = cut(
+                    seeds_idx, score(seeds_idx, qv, qn), dbeam)
+                for lyr in range(top, 0, -1):
+                    for _ in range(hpl):
+                        bidx, bcos = hop(bidx, uppers[lyr], dbeam,
+                                         qv, qn)
+                bidx = np.concatenate([bidx, e_idx])
+            else:
+                bidx = e_idx
+            for _ in range(hops_n):
+                bidx, bcos = hop(bidx, g_csr, beam_w, qv, qn)
+            mask = cids[bidx] != qid
+            fi, fc = cut(bidx[mask], bcos[mask], kk)
+            out_row.append(np.full(len(fi), r))
+            out_vid.append(cids[fi])
+            out_cos.append(fc)
+        rows = np.concatenate(out_row)
+        return {
+            "query_id": qids.take(rows),
+            "rank": np.concatenate(
+                [np.arange(1, len(f) + 1, dtype=np.int32) for f in out_row]),
+            out_schema[2].name: np.concatenate(out_vid),
+            "cosine_raw": np.concatenate(out_cos),
+        }
 
-    return q_src.mapInPandas(serve, out_schema)
+    return arrow_stage(q_src, out_schema, serve)
 
 
 def _upper_absent(spark: SparkSession, index_dir: str) -> bool:

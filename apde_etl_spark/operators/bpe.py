@@ -38,11 +38,13 @@ not hand-typed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from apde_etl_spark.operators.arrow_stage import arrow_stage
 
 #: token separator in the string state; excluded from the word pattern
 #: below so no input character can ever collide with it
@@ -163,22 +165,13 @@ def bpe_word_token_counts(
     out_schema = T.StructType(
         [words.schema[word_col], T.StructField("n_bpe_tokens", T.IntegerType())]
     )
-    src = words.select(word_col)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def run(batch):
+        col = batch.column(word_col)
+        return {word_col: col, "n_bpe_tokens": [
+            bpe_token_count(w, rules) for w in col.to_pylist()]}
 
-        memo: dict[str, int] = {}
-        for pdf in batches:
-            counts = []
-            for w in pdf[word_col]:
-                n = memo.get(w)
-                if n is None:
-                    n = memo[w] = bpe_token_count(w, rules)
-                counts.append(n)
-            yield pd.DataFrame({word_col: pdf[word_col], "n_bpe_tokens": counts})
-
-    return src.mapInPandas(run, out_schema)
+    return arrow_stage(words.select(word_col), out_schema, run)
 
 
 #: Above this many distinct words the encoded-vocabulary join-back stops
@@ -207,7 +200,7 @@ def bpe_doc_token_counts(
     vocabulary count (one cheap native job — the Arrow encode stage it
     precedes dwarfs it): <= ``BPE_VOCAB_BROADCAST_MAX_WORDS`` distinct
     words pin the counts in every executor; above that the join runs as
-    a word-keyed shuffle, because mapInPandas output has no size stats
+    a word-keyed shuffle, because an Arrow stage's output has no size stats
     and an unconditional broadcast hint would OOM the driver on a
     web-scale vocabulary. Pass True/False to skip the count when the
     caller already knows the regime."""

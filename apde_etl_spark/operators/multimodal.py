@@ -3,8 +3,10 @@ pipelines (extension surface; BASELINE.json north star).
 
 Design: media ride as opaque ``binary`` columns with typed metadata
 columns beside them. Decode / feature-extraction / resize / frame-sample
-run as Arrow-batched ``mapInPandas`` stages — the only places Python
-touches data, sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+run through the engine's one Arrow stage (``operators/arrow_stage.py``),
+the only place Python touches data. The five decode stages are one,
+:func:`_decode_stage`: decoder dict keys become typed columns. A
+payload the decoder rejects fails the task, as a bad file fails a scan.
 
 Codecs: WAV, BMP, PNG and baseline JPEG decode FOR REAL with nothing
 but the standard library (the JPEG decoder lives in
@@ -20,11 +22,13 @@ remains for pure-plumbing tests.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from apde_etl_spark.operators.arrow_stage import arrow_stage
 
 #: schema of a decoded-image record appended by ``decode_images``
 IMAGE_META_SCHEMA = T.StructType(
@@ -89,19 +93,27 @@ def decode_images(
 ) -> DataFrame:
     """Append decoded metadata (width/height/channels/format) to each row.
 
-    ``mapInPandas`` keeps the full row, adds the meta columns; Arrow
+    The stage keeps the full row and adds the meta columns; Arrow
     moves the binary payloads in columnar batches. Partitioning is
     whatever the upstream scan produced — no shuffle is introduced."""
-    out_schema = T.StructType(df.schema.fields + list(IMAGE_META_SCHEMA.fields))
+    return _decode_stage(df, df.columns, content_col, decoder,
+                         IMAGE_META_SCHEMA.fields)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            metas = [decoder(bytes(p)) for p in pdf[content_col]]
-            for k in ("width", "height", "channels", "format"):
-                pdf[k] = [m[k] for m in metas]
-            yield pdf
 
-    return df.mapInPandas(run, out_schema)
+def _decode_stage(df, keep, content_col, decoder, fields) -> DataFrame:
+    """Columns ``keep`` of ``df`` plus, per field of ``fields``, the
+    ``decoder(payload)[field.name]`` of each row's ``content_col``
+    payload. Only ``keep`` and the payload cross the Arrow boundary."""
+    src = df.select(*dict.fromkeys([*keep, content_col]))
+    out_schema = T.StructType([df.schema[c] for c in keep] + list(fields))
+
+    def run(batch):
+        metas = [decoder(p) for p in batch.column(content_col).to_pylist()]
+        cols = {c: batch.column(c) for c in keep}
+        cols.update({f.name: [m[f.name] for m in metas] for f in fields})
+        return cols
+
+    return arrow_stage(src, out_schema, run)
 
 
 def extract_features(
@@ -113,26 +125,9 @@ def extract_features(
     """(id, features array<double>) per media row — the input the
     similarity operators consume. Projection happens INSIDE the stage:
     only (id, content) cross the Arrow boundary, not the full row."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    src = df.select(id_col, content_col)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "features": [decoder(bytes(p))["features"] for p in pdf[content_col]],
-                }
-            )
-
-    return src.mapInPandas(run, out_schema)
+    return _decode_stage(
+        df, [id_col], content_col, decoder,
+        [T.StructField("features", T.ArrayType(T.DoubleType()))])
 
 
 def frame_sample_plan(
@@ -143,7 +138,7 @@ def frame_sample_plan(
     """Video frame-sampling *plan*: emit (media_id, frame_index) rows for
     every ``every_n``-th frame given a frame_count metadata column. Pure
     native expressions (sequence + explode); the actual frame decode is a
-    later ``mapInPandas`` stage over this plan."""
+    later Arrow stage over this plan (:func:`extract_frame_stats`)."""
     idx = F.sequence(F.lit(0), F.col("frame_count") - 1, F.lit(every_n))
     return df.select(id_col, F.explode(idx).alias("frame_index"))
 
@@ -164,23 +159,20 @@ def resize_images(
     stage pipelines directly after the scan."""
     out_schema = T.StructType(
         [f for f in df.schema.fields if f.name != content_col]
-        + [
-            T.StructField(content_col, T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
+        + [T.StructField(content_col, T.BinaryType())]
+        + [T.StructField(c, T.IntegerType()) for c in ("width", "height")])
     fn = resizer if resizer is not None else _default_resizer
+    keep = df.columns
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[content_col] = [fn(bytes(p), target_w, target_h) for p in pdf[content_col]]
-            pdf["width"] = target_w
-            pdf["height"] = target_h
-            yield pdf[[f.name for f in out_schema.fields]]
+    def run(batch):
+        cols = {c: batch.column(c) for c in keep}
+        cols[content_col] = [fn(p, target_w, target_h)
+                             for p in batch.column(content_col).to_pylist()]
+        cols["width"] = [target_w] * batch.num_rows
+        cols["height"] = [target_h] * batch.num_rows
+        return cols
 
-    return df.mapInPandas(run, out_schema)
+    return arrow_stage(df, out_schema, run)
 
 
 def _default_resizer(payload: bytes, w: int, h: int) -> bytes:
@@ -251,7 +243,7 @@ def audio_chunk_plan(
     end_sample) rows covering ``n_samples`` in fixed windows — the audio
     twin of :func:`frame_sample_plan`. Pure native expressions
     (sequence + explode); the waveform decode consuming this plan is a
-    later ``mapInPandas`` stage. No shuffle: the explode happens in the
+    later Arrow stage. No shuffle: the explode happens in the
     scan stage and each chunk row carries only ids and offsets."""
     n = F.col(n_samples_col)
     starts = F.sequence(F.lit(0), n - 1, F.lit(chunk_samples))
@@ -271,27 +263,11 @@ def extract_audio_features(
     content_col: str = "content",
     decoder: Callable[[bytes], dict] = default_decoder,
 ) -> DataFrame:
-    """(id, sample_rate, n_samples, rms) per audio row via Arrow-batched
-    ``mapInPandas``. Projection happens inside the stage: only
-    (id, content) cross the Arrow boundary. Codec stubbed as elsewhere."""
-    out_schema = T.StructType([df.schema[id_col]] + list(AUDIO_META_SCHEMA.fields))
-    src = df.select(id_col, content_col)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [decoder(bytes(p)) for p in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "n_samples": [m["n_samples"] for m in metas],
-                    "rms": [m["rms"] for m in metas],
-                }
-            )
-
-    return src.mapInPandas(run, out_schema)
+    """(id, sample_rate, n_samples, rms) per audio row via
+    :func:`_decode_stage`: only (id, content) cross the Arrow
+    boundary."""
+    return _decode_stage(df, [id_col], content_col, decoder,
+                         AUDIO_META_SCHEMA.fields)
 
 
 # ---------------------------------------------------------------------------
@@ -494,14 +470,9 @@ def _gray_block_features(pixels: bytes, w: int, h: int, channels: int) -> list[f
 #: schema appended by ``decode_image_stats`` — the byte-exactness stats
 #: (px_sum/px_first over decoded top-down RGB bytes) beside the metadata
 IMAGE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("px_sum", T.LongType()),
-        T.StructField("px_first", T.IntegerType()),
-    ]
+    IMAGE_META_SCHEMA.fields
+    + [T.StructField("px_sum", T.LongType()),
+       T.StructField("px_first", T.IntegerType())]
 )
 
 
@@ -512,33 +483,13 @@ def decode_image_stats(
     decoder: Callable[[bytes], dict] = stdlib_bmp_decoder,
 ) -> DataFrame:
     """(id, width, height, channels, format, px_sum, px_first) per image
-    via Arrow-batched ``mapInPandas`` — the oracle-checkable decode
+    via :func:`_decode_stage` — the oracle-checkable decode
     stage: px_sum/px_first are computed from the DECODED pixel bytes, so
     a value match proves the codec actually inverted the byte format
     (BMP bottom-up BGR rows, PNG scanline filters), not just read a
-    header. Projection happens inside the stage: only (id, content)
-    cross the Arrow boundary."""
-    out_schema = T.StructType([df.schema[id_col]] + list(IMAGE_STATS_SCHEMA.fields))
-    src = df.select(id_col, content_col)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [decoder(bytes(p)) for p in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "channels": [m["channels"] for m in metas],
-                    "format": [m["format"] for m in metas],
-                    "px_sum": [m["px_sum"] for m in metas],
-                    "px_first": [m["px_first"] for m in metas],
-                }
-            )
-
-    return src.mapInPandas(run, out_schema)
+    header. Only (id, content) cross the Arrow boundary."""
+    return _decode_stage(df, [id_col], content_col, decoder,
+                         IMAGE_STATS_SCHEMA.fields)
 
 
 # --- deterministic stdlib ENCODERS (fixture generation) --------------------
@@ -836,38 +787,13 @@ def extract_video_meta(
     decoder: Callable[[bytes], dict] = stdlib_y4m_decoder,
 ) -> DataFrame:
     """(id, width, height, n_frames, fps_num, fps_den) per video row via
-    Arrow-batched ``mapInPandas`` — the container-header stage whose
+    :func:`_decode_stage` — the container-header stage whose
     n_frames output feeds :func:`frame_sample_plan`. Only (id, content)
     cross the Arrow boundary; no shuffle."""
-    out_schema = T.StructType(
-        [df.schema[id_col]]
-        + [
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("fps_num", T.IntegerType()),
-            T.StructField("fps_den", T.IntegerType()),
-        ]
-    )
-    src = df.select(id_col, content_col)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            metas = [decoder(bytes(p)) for p in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "fps_num": [m["fps_num"] for m in metas],
-                    "fps_den": [m["fps_den"] for m in metas],
-                }
-            )
-
-    return src.mapInPandas(run, out_schema)
+    return _decode_stage(
+        df, [id_col], content_col, decoder,
+        [T.StructField(c, T.IntegerType())
+         for c in ("width", "height", "n_frames", "fps_num", "fps_den")])
 
 
 def extract_frame_stats(
@@ -885,43 +811,28 @@ def extract_frame_stats(
     join is id-to-id against the plan (broadcastable: the plan is ids +
     small ints) and the stage stays scan-shaped; batching all of one
     file's sampled frames per row group amortizes the header parse."""
-    out_schema = T.StructType(
-        [df.schema[id_col]]
-        + [
-            T.StructField("frame_index", T.IntegerType()),
-            T.StructField("px_first", T.IntegerType()),
-            T.StructField("px_sum", T.LongType()),
-        ]
-    )
-    src = df.select(id_col, content_col, frame_col)
+    out_schema = T.StructType([
+        df.schema[id_col], T.StructField("frame_index", T.IntegerType()),
+        T.StructField("px_first", T.IntegerType()),
+        T.StructField("px_sum", T.LongType())])
+    # one parse per media id and task: ids map 1:1 to payloads, while
+    # per-FRAME parameters make (len, prefix) keys unsafe
+    meta_cache: dict = {}
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def run(batch):
+        firsts, sums = [], []
+        for mid, raw, fi in zip(batch.column(id_col).to_pylist(),
+                                batch.column(content_col).to_pylist(),
+                                batch.column(frame_col).to_pylist()):
+            m = meta_cache.get(mid)
+            if m is None:
+                m = meta_cache[mid] = decoder(raw)
+            fr = y4m_frame(raw, m, int(fi))
+            firsts.append(fr[0])
+            sums.append(sum(fr))
+        return {id_col: batch.column(id_col),
+                "frame_index": batch.column(frame_col),
+                "px_first": firsts, "px_sum": sums}
 
-        meta_cache: dict = {}
-        for pdf in batches:
-            firsts, sums = [], []
-            for mid, p, fi in zip(pdf[id_col], pdf[content_col], pdf[frame_col]):
-                raw = bytes(p)
-                # keyed on the id column: plan rows for the same media
-                # id share one parse, and ids map 1:1 to payloads so a
-                # hit can never slice another file's offsets (variable
-                # per-FRAME parameters make (len, prefix) keys unsafe).
-                key = mid
-                m = meta_cache.get(key)
-                if m is None:
-                    m = decoder(raw)
-                    meta_cache[key] = m
-                fr = y4m_frame(raw, m, int(fi))
-                firsts.append(fr[0])
-                sums.append(sum(fr))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "frame_index": pdf[frame_col].astype("int32"),
-                    "px_first": firsts,
-                    "px_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(run, out_schema)
+    return arrow_stage(df.select(id_col, content_col, frame_col),
+                       out_schema, run)

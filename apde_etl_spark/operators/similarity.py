@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from apde_etl_spark.operators.arrow_stage import arrow_stage, vectors
 from apde_etl_spark.operators.cache import tracked_persist, tracked_release
 from apde_etl_spark.operators.skew import replicated_salted_join
 from apde_etl_spark.sources.readers import collect_bounded, local_frame
@@ -59,7 +60,8 @@ def arrow_pair_cosine(
     out_col: str = "__cos",
 ) -> DataFrame:
     """Arrow-batched twin of ``dot(a,b)/(na*nb)``: returns
-    ``keys + (out_col,)`` with the cosine computed in numpy.
+    ``keys + (out_col,)`` with the cosine computed in numpy, in the
+    engine's one Arrow stage (:func:`arrow_stage`).
 
     BIT-IDENTICAL to the JVM HOF fold by construction: the fold
     ``aggregate(zip_with(a,b,*), 0.0, +)`` is the sequential IEEE-754
@@ -71,48 +73,52 @@ def arrow_pair_cosine(
     consumed from the pre-computed ``na``/``nb`` columns exactly as
     the JVM projection does, and ``dot/(na*nb)`` is one multiply and
     one divide in the same order. Verified bit-exact against the HOF
-    plan in tests/test_ann_index.py (hash equality on the insert-built
-    gate entries is the standing regression).
+    plan in tests/test_similarity_arrow_seam.py.
 
-    Why it exists: the interpreted HOF fold is ~O(d) interpreter
-    dispatches per row — fine for bounded serve frontiers, the wall
-    for the insertion build's millions of candidate rows per batch
-    (the 200k build ran >2h on the fold; Arrow-batched it completes —
-    BASELINE.md round-10). Arrow ships 8*d bytes per row per vector
-    column; the scorer emits only ``keys + cosine``, so the exchange
-    is one-way."""
+    Malformed rows get the fold's answer, row by row: NULL for a null
+    vector or element, two lengths or a null norm; the value when both
+    vectors share a length other than the batch's.
+
+    Why it exists: the interpreted HOF fold is the wall for the
+    insertion build's millions of candidate rows per batch (the 200k
+    build ran >2h on the fold — BASELINE.md round-10)."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    key_list = list(keys)
-    in_schema = {f.name: f for f in df.schema.fields}
-    out_schema = StructType(
-        [in_schema[k] for k in key_list]
-        + [StructField(out_col, DoubleType(), True)]
-    )
-    cols = key_list + [a_col, b_col, na_col, nb_col]
-    src = df.select(*cols)
+    out_schema = StructType([df.schema[k] for k in keys]
+                            + [StructField(out_col, DoubleType(), True)])
 
-    def gen(batches):
-        for pdf in batches:
-            out = pdf[key_list].copy()
-            n = len(pdf)
-            if n == 0:
-                out[out_col] = np.empty(0, dtype="float64")
-                yield out
-                continue
-            A = np.stack(pdf[a_col].to_numpy()).astype("float64", copy=False)
-            B = np.stack(pdf[b_col].to_numpy()).astype("float64", copy=False)
-            acc = np.zeros(n, dtype="float64")
-            for i in range(A.shape[1]):
-                acc = acc + A[:, i] * B[:, i]
-            out[out_col] = acc / (
-                pdf[na_col].to_numpy(dtype="float64")
-                * pdf[nb_col].to_numpy(dtype="float64")
-            )
-            yield out
+    def score(batch):
+        a, b = batch.column(a_col), batch.column(b_col)
+        A, ok = vectors(a)
+        B, ok_b = vectors(b, A.shape[1])
+        acc = np.zeros(len(ok), dtype="float64")
+        for i in range(A.shape[1]):
+            acc = acc + A[:, i] * B[:, i]
+        na = batch.column(na_col).to_numpy(zero_copy_only=False)
+        nb = batch.column(nb_col).to_numpy(zero_copy_only=False)
+        cos = acc / (na * nb)
+        for r in np.nonzero(~(ok & ok_b))[0]:
+            cos[r] = _fold_cosine(a[r].as_py(), b[r].as_py(), na[r], nb[r])
+        cols = {k: batch.column(k) for k in keys}
+        cols[out_col] = cos  # NaN becomes NULL
+        return cols
 
-    return src.mapInPandas(gen, out_schema)
+    return arrow_stage(df.select(*keys, a_col, b_col, na_col, nb_col),
+                       out_schema, score)
+
+
+def _fold_cosine(a, b, na, nb):
+    """``dot(a,b)/(na*nb)`` for one row in the fold's order, or NaN
+    where the fold gives NULL (a null norm reads as NaN)."""
+    import numpy as np
+
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return np.nan
+    acc = np.float64(0.0)
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc / (na * nb)
 
 
 def as_double_array(col: Column | str) -> Column:
@@ -1064,7 +1070,7 @@ def assign_topn_cells(
 
     ``strategy``: ``"hof"`` = broadcast crossJoin + slim
     (id, cell_id, sim) ranking window — all JVM-side, the right shape
-    while n_cells is small; ``"blas"`` = Arrow-batched ``mapInPandas``:
+    while n_cells is small; ``"blas"`` = an Arrow stage:
     the centroid matrix (n_cells x dim doubles, collected driver-side —
     the same small-side collect budget as the Lloyd trainers) rides the
     closure, each batch computes one X @ C.T matmul and ranks in numpy,
@@ -1121,33 +1127,35 @@ def assign_topn_cells(
     cell_ids = np.array([int(r["cell_id"]) for r in cent_rows], dtype=np.int64)
     C = np.array([list(r["__c"]) for r in cent_rows], dtype=np.float64)
     Cn = np.linalg.norm(C, axis=1)
+    # a malformed vector's sims are NULL on the hof path (the desc
+    # window ranks NULL last), except 0.0 where the zero-norm guard's OR
+    # holds: against a zero-norm centroid, or for a ragged zero vector
+    bad_sims = np.where(Cn == 0.0, 0.0, -np.inf)
     # zero-norm guard (same rule as the hof path): divide by 1 instead
     # of 0 — the dot is 0 there anyway, so the sim lands on exactly 0.0
     # rather than NaN, and both strategies rank degenerates identically.
     Cn = np.where(Cn == 0.0, 1.0, Cn)
     n_keep = min(n_probe, len(cell_ids))
 
-    def assign(batches):
-        import pandas as pd
+    def assign(batch):
+        X, ok = vectors(batch.column("__v"), C.shape[1])
+        Xn = np.linalg.norm(X, axis=1)
+        Xn = np.where(Xn == 0.0, 1.0, Xn)
+        S = (X @ C.T) / (Xn[:, None] * Cn[None, :])
+        for r in np.nonzero(~ok)[0]:
+            v = batch.column("__v")[r].as_py()
+            S[r] = bad_sims if v is None or any(x != 0.0 for x in v) else 0.0
+        order = np.argsort(-S, axis=1, kind="stable")[:, :n_keep]
+        return {
+            id_col: batch.column(id_col).take(
+                np.arange(batch.num_rows).repeat(n_keep)),
+            "cell_id": cell_ids[order].reshape(-1),
+            "__rk": np.tile(np.arange(1, n_keep + 1, dtype=np.int32),
+                            batch.num_rows),
+        }
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
-            Xn = np.linalg.norm(X, axis=1)
-            Xn = np.where(Xn == 0.0, 1.0, Xn)
-            S = (X @ C.T) / (Xn[:, None] * Cn[None, :])
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n_keep]
-            b = len(pdf)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy().repeat(n_keep),
-                "cell_id": cell_ids[order].reshape(b * n_keep),
-                "__rk": np.tile(np.arange(1, n_keep + 1, dtype=np.int32), b),
-            })
-
-    return e.select(id_col, "__v").mapInPandas(
-        assign, schema=f"{id_col} long, cell_id long, __rk int"
-    )
+    return arrow_stage(e.select(id_col, "__v"),
+                       f"{id_col} long, cell_id long, __rk int", assign)
 
 
 def ann_ivf_topk(
@@ -1583,28 +1591,33 @@ def pq_codes_blas(
     C2s = [(C * C).sum(axis=1) for C in Cs]
     passthrough = passthrough or []
 
-    def encode(batches):
-        import pandas as pd
+    def code(i, S):
+        D = -2.0 * (S @ Cs[i].T) + C2s[i][None, :]
+        return np.argmin(D, axis=1)  # first min on ties
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for i in range(m):
-                S = X[:, i * sub:(i + 1) * sub]
-                D = -2.0 * (S @ Cs[i].T) + C2s[i][None, :]
-                codes[:, i] = np.argmin(D, axis=1)  # first min on ties
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in passthrough:
-                out[c] = pdf[c].to_numpy()
-            out[out_col] = list(codes)
-            yield pd.DataFrame(out)
+    def row_codes(v):
+        """The HOF path's codes for a malformed vector: per subspace
+        NULL where the slice is short or holds a null element."""
+        subs = [(v or [])[i * sub:(i + 1) * sub] for i in range(m)]
+        return [int(code(i, np.array([s]))[0])
+                if len(s) == sub and None not in s else None
+                for i, s in enumerate(subs)]
+
+    def encode(batch):
+        X, ok = vectors(batch.column(vec_col), m * sub)
+        codes = np.empty((batch.num_rows, m), dtype=np.int32)
+        for i in range(m):
+            codes[:, i] = code(i, X[:, i * sub:(i + 1) * sub])
+        codes = codes.tolist()
+        for r in np.nonzero(~ok)[0]:
+            codes[r] = row_codes(batch.column(vec_col)[r].as_py())
+        out = {c: batch.column(c) for c in (id_col, *passthrough)}
+        out[out_col] = codes
+        return out
 
     extra = "".join(f", {c} long" for c in passthrough)
-    return df.select(id_col, *passthrough, vec_col).mapInPandas(
-        encode, schema=f"{id_col} long{extra}, {out_col} array<int>"
-    )
+    return arrow_stage(df.select(id_col, *passthrough, vec_col),
+                       f"{id_col} long{extra}, {out_col} array<int>", encode)
 
 
 def pq_encode_col(vec_name: str, codebooks: list[list[list[float]]]) -> Column:
@@ -2023,39 +2036,36 @@ def exact_topk_pairs(
             f"{EXACT_TOPK_MAX_ROWS}-row harness cap — ground-truth a "
             "query sample against the full corpus instead"
         )
+    C, ok = vectors(corpus.column("__v").combine_chunks())
+    if not ok.all():
+        raise ValueError(
+            f"exact_topk_pairs: {vec_col!r} holds a null vector, a null "
+            f"element or a length other than {C.shape[1]}")
     ids = corpus.column(id_col).to_numpy()
     order = np.argsort(ids, kind="stable")  # stable => id asc on ties
     ids = ids[order].astype(np.int64)
-    vecs = corpus.column("__v").combine_chunks()
-    C = vecs.flatten().to_numpy(zero_copy_only=False).astype(
-        np.float64).reshape(len(vecs), -1)[order]
+    C = C[order]
     Cn = np.linalg.norm(C, axis=1)
     n_keep = min(k, len(ids) - 1)
     # rows per matmul chunk: ~64 MB of score doubles (8M cells)
     chunk = max(1, 8_000_000 // max(len(ids), 1))
 
-    def topk(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for lo in range(0, len(pdf), chunk):
-                part = pdf.iloc[lo:lo + chunk]
-                if len(part) == 0:
-                    continue
-                X = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in part["__v"]])
-                Xn = np.linalg.norm(X, axis=1)
-                S = (X @ C.T) / (Xn[:, None] * Cn[None, :])
-                qids = part[id_col].to_numpy()
-                S[qids[:, None] == ids[None, :]] = -np.inf  # self excluded
-                order = np.argsort(-S, axis=1, kind="stable")[:, :n_keep]
-                yield pd.DataFrame({
-                    "id_a": qids.repeat(n_keep),
-                    "id_b": ids[order].reshape(len(part) * n_keep),
-                })
+    def topk(batch):
+        # the query side is a filter of the checked corpus
+        X, _ = vectors(batch.column("__v"), C.shape[1])
+        qids = batch.column(id_col).to_numpy()
+        id_b = []
+        for lo in range(0, len(X), chunk):
+            Xc, qc = X[lo:lo + chunk], qids[lo:lo + chunk]
+            Xn = np.linalg.norm(Xc, axis=1)
+            S = (Xc @ C.T) / (Xn[:, None] * Cn[None, :])
+            S[qc[:, None] == ids[None, :]] = -np.inf  # self excluded
+            id_b.append(ids[np.argsort(-S, axis=1, kind="stable")[:, :n_keep]])
+        return {"id_a": qids.repeat(n_keep),
+                "id_b": np.concatenate(id_b).reshape(-1)}
 
     q = e if query_filter is None else e.filter(query_filter)
-    return q.mapInPandas(topk, schema="id_a long, id_b long")
+    return arrow_stage(q, "id_a long, id_b long", topk)
 
 
 def semantic_dedup(

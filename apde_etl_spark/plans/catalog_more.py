@@ -669,7 +669,7 @@ def mm_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: the fake decoder derives every field from md5(payload) bytes, so DuckDB
-#: reproduces it exactly -> the Python mapInPandas stage is FULLY
+#: reproduces it exactly -> the Python Arrow stage is FULLY
 #: hash-verified against SQL, not just rows-counted.
 _MM_DECODE_ORACLE = f"""
 WITH b AS (SELECT doc_id, md5(text) AS m FROM documents)
@@ -684,7 +684,7 @@ FROM b
 
 @register("mm_image_decode_features", _MM_DECODE_ORACLE)
 def mm_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing, Python half: Arrow-batched mapInPandas decode
+    """Multimodal plumbing, Python half: the Arrow decode
     stage over the binary column using the deterministic fake decoder
     (real codecs are stubbed per container constraints — the schema,
     batching and partition behavior are the real thing being tested).
@@ -753,7 +753,7 @@ def mm_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     window chunk plan (media_id, chunk_index, start/end offsets) from an
     n_samples metadata column — native sequence+explode in the scan
     stage, no Python in the row path; the waveform decode consuming the
-    plan is a later mapInPandas stage (stubbed per container
+    plan is a later Arrow stage (stubbed per container
     constraints). n_samples derives deterministically from text length
     so the oracle regenerates it."""
     from apde_etl_spark.operators.multimodal import audio_chunk_plan
@@ -777,7 +777,7 @@ FROM b
 
 @register("mm_audio_decode_features", _MM_AUDIO_DECODE_ORACLE)
 def mm_audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio plumbing, Python half: Arrow-batched mapInPandas
+    """Multimodal audio plumbing, Python half: the Arrow
     feature stage (sample_rate / n_samples / RMS) over the binary column
     with the deterministic fake codec — schema, batch shape and
     partition behavior are the real thing under test. The fake is

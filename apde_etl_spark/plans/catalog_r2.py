@@ -912,7 +912,7 @@ FROM documents
 
 @register("mm_image_resize", _MM_RESIZE_ORACLE)
 def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal resize stage: Arrow-batched mapInPandas binary->binary
+    """Multimodal resize stage: an Arrow stage's binary->binary
     transform setting target dims (real codec stubbed per container
     constraints; the deterministic fake keeps md5 lineage). No shuffle —
     the stage pipelines directly after the scan at corpus scale. The
@@ -1115,6 +1115,7 @@ def pyds_stream_resume_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once across query restarts, no row lost or doubled — and
     the oracle regenerates the full table from the same md5 formula, so
     the hash check proves it."""
+    import glob
     import tempfile
 
     from apde_etl_spark.sources.pydatasource import register_synthetic_source
@@ -1141,11 +1142,10 @@ def pyds_stream_resume_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        try:
-            if spark.read.parquet(out).count() >= _PYDS_STREAM_ROWS:
-                break
-        except Exception:
+        if not glob.glob(f"{out}/part-*"):
             continue  # first run produced no files yet
+        if spark.read.parquet(out).count() >= _PYDS_STREAM_ROWS:
+            break
     return (
         spark.read.parquet(out)
         .groupBy("event_type")

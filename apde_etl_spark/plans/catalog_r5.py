@@ -22,8 +22,8 @@ plumbing moved bytes.
 
 The reference has no multimodal surface (this is builder-brief
 extension surface, like the rest of the mm_* family); the Spark shape
-is the production one: distributed ``binaryFile`` scan -> Arrow-batched
-``mapInPandas`` decode, no shuffle, no driver data path.
+is the production one: distributed ``binaryFile`` scan -> the Arrow
+decode stage, no shuffle, no driver data path.
 """
 
 from __future__ import annotations
@@ -130,7 +130,7 @@ def mm_audio_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual unpacked samples. A ±A square wave has RMS exactly A, so the
     oracle states sample_rate / n_samples / rms in closed form from
     doc_id; a hash match proves the decode, not just the plumbing.
-    No shuffle: scan -> mapInPandas, partitioned by file splits."""
+    No shuffle: scan -> Arrow stage, partitioned by file splits."""
     audio = _read_media(spark, sf_dir, "wav", "wav")
     out = extract_audio_features(
         audio, id_col="doc_id", content_col="content",

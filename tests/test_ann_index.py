@@ -311,14 +311,14 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
     ]:
         # the fast path IS taken: single Arrow stage, no per-hop joins
         plan = fast_df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan and "Join" not in plan
-        assert "MapInPandas" not in \
+        assert "MapInArrow" in plan and "Join" not in plan
+        assert "MapInArrow" not in \
             it_df._jdf.queryExecution().executedPlan().toString()
         assert canon(fast_df.collect()) == canon(it_df.collect())
     # rows gate: a cap below the corpus size forces the iterative path
     gated = ann_graph_search_layered(spark, d, queries, emb,
                                      local_serve_max_rows=3, **layered_kw)
-    assert "MapInPandas" not in \
+    assert "MapInArrow" not in \
         gated._jdf.queryExecution().executedPlan().toString()
 
 
@@ -328,7 +328,7 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     path for a corpus whose replicated payload (rows x dim x 8B) would
     blow the broadcast budget even when the ROW gate admits it;
     (2) null / ragged / wrong-dim QUERY vectors decline the fast plan
-    up front (the mapInPandas task could not fall back once running);
+    up front (the Arrow stage could not fall back once running);
     (3) an Integer-typed corpus id declines (schema stability with the
     iterative path, which preserves the original id type)."""
     import pyspark.sql.functions as F
@@ -345,7 +345,7 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     queries = emb.filter(F.col("vec_id") % 50 == 0)
 
     def is_fast(df):
-        return "MapInPandas" in \
+        return "MapInArrow" in \
             df._jdf.queryExecution().executedPlan().toString()
 
     # sanity: with default budgets the fast path serves this corpus

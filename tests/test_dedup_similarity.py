@@ -548,10 +548,17 @@ def test_assign_topn_cells_blas_matches_hof(spark, sf_dir):
         e.orderBy("vec_id").limit(16)
         .select(F.col("vec_id").alias("cell_id"), F.col("__v").alias("__c"))
     )
-    hof = SIM.assign_topn_cells(e, "vec_id", cent, 16, 3, strategy="hof")
-    blas = SIM.assign_topn_cells(e, "vec_id", cent, 16, 3, strategy="blas")
-    assert hof.exceptAll(blas).count() == 0
-    assert blas.exceptAll(hof).count() == 0
+    # malformed rows rank as the hof path ranks their NULL sims, also
+    # beside a zero-norm centroid, where the zero-norm guard scores 0.0
+    bad = e.unionByName(_malformed_vectors(spark))
+    zero = spark.createDataFrame([(BAD_ID, [0.0] * 64)],
+                                 "cell_id long, __c array<double>")
+    for cells in (cent, cent.unionByName(zero)):
+        hof = SIM.assign_topn_cells(bad, "vec_id", cells, 16, 3, strategy="hof")
+        blas = SIM.assign_topn_cells(bad, "vec_id", cells, 16, 3, strategy="blas")
+        assert hof.filter(F.col("vec_id") >= BAD_ID).count() == 3 * 5
+        assert hof.exceptAll(blas).count() == 0
+        assert blas.exceptAll(hof).count() == 0
     e.unpersist()
 
 
@@ -565,13 +572,43 @@ def test_pq_codes_blas_matches_column_path(spark, sf_dir):
         "vec_id", SIM.as_double_array("embedding").alias("__v")
     ).persist()
     books = SIM.train_pq_codebooks(e, "vec_id", dim=64, m=8, k_codes=16, iters=1)
-    col = e.select(
+    # malformed rows get the HOF path's NULL codes, per subspace
+    bad = e.unionByName(_malformed_vectors(spark))
+    col = bad.select(
         "vec_id", SIM.pq_encode_col("__v", books).alias("__codes")
     )
-    blas = SIM.pq_codes_blas(e, "vec_id", "__v", books)
+    blas = SIM.pq_codes_blas(bad, "vec_id", "__v", books)
+    assert col.filter(F.col("vec_id") == BAD_ID).first()["__codes"] == [None] * 8
     assert col.exceptAll(blas).count() == 0
     assert blas.exceptAll(col).count() == 0
     e.unpersist()
+
+
+def test_exact_topk_pairs_rejects_malformed_vectors(spark, sf_dir):
+    """The exact ground truth has no in-plan twin to define a malformed
+    row's answer, so a null, holed or ragged vector raises and names
+    the column instead of scoring a misaligned matrix."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    for vid, v in [(BAD_ID, None), (BAD_ID + 1, [0.5] * 63 + [None]),
+                   (BAD_ID + 2, [0.5] * 63)]:
+        bad = emb.select("vec_id", "embedding").unionByName(
+            spark.createDataFrame([(vid, v)], "vec_id long, embedding array<double>"))
+        with pytest.raises(ValueError, match="'embedding'"):
+            SIM.exact_topk_pairs(bad, k=3)
+
+
+#: first id of the malformed rows appended to the embeddings corpus
+BAD_ID = 10**9
+
+
+def _malformed_vectors(spark):
+    """(vec_id, __v) rows no batch matrix can hold: a null vector, a
+    null element, a short and a long vector, and a short zero vector."""
+    return spark.createDataFrame(
+        [(BAD_ID, None), (BAD_ID + 1, [0.25] * 40 + [None] + [0.25] * 23),
+         (BAD_ID + 2, [0.5] * 20), (BAD_ID + 3, [0.75] * 70),
+         (BAD_ID + 4, [0.0] * 10)],
+        "vec_id long, __v array<double>")
 
 
 def test_pq_training_sample_cap_inactive_below_cap(spark, sf_dir):

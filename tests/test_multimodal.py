@@ -1,5 +1,6 @@
-"""Multimodal plumbing tests: binary columns through Arrow-batched
-mapInPandas stages with the deterministic fake decoder."""
+"""Multimodal plumbing tests: binary columns through the engine's one
+Arrow stage (``operators.arrow_stage``) with the deterministic fake
+decoder: the decode stages map decoder keys to typed columns."""
 
 from __future__ import annotations
 

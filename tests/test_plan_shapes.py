@@ -607,16 +607,16 @@ def test_ann_graph_serve_plan_reads_frozen_artifacts(spark, sf_dir, qs,
     no joins at all; past the gate (forced here by making the local
     serve decline) candidates come from equi-joins against the
     persisted adjacency with no Python stage (the k-NN build's
-    exact_topk_pairs is mapInPandas — it must not appear at query
+    exact_topk_pairs is an Arrow stage — it must not appear at query
     time)."""
     from apde_etl_spark.operators import ann_index as AI
 
     plan = _plan(qs["ann_graph_topk"](spark, sf_dir))
-    assert "MapInPandas" in plan and "Join" not in plan
+    assert "MapInArrow" in plan and "Join" not in plan
     assert "CartesianProduct" not in plan
     monkeypatch.setattr(AI, "_try_local_serve", lambda *a, **kw: None)
     plan = _plan(qs["ann_graph_topk"](spark, sf_dir))
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "EvalPython" not in plan and "MapInArrow" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -650,16 +650,16 @@ def test_standardized_rate_broadcasts_standard_population(spark, sf_dir, qs):
 def test_ann_hnsw_serve_plan_reads_frozen_artifacts(spark, sf_dir, qs):
     """The layered (HNSW-class) serve plan must contain ZERO
     construction work, like the flat walk: no Python/Arrow stage (the
-    per-layer exact k-NN builds are mapInPandas — build-time only) and
+    per-layer exact k-NN builds are Arrow stages — build-time only) and
     no cartesian all-pairs; descent candidates come from equi-joins
     against the persisted graph_upper adjacency. The headline entry
     serves from the broadcast index (one Arrow stage, no joins); its
     ``_distributed`` twin takes the iterative walk."""
     plan = _plan(qs["ann_hnsw_topk"](spark, sf_dir))
-    assert "MapInPandas" in plan and "Join" not in plan
+    assert "MapInArrow" in plan and "Join" not in plan
     assert "CartesianProduct" not in plan
     plan = _plan(qs["ann_hnsw_topk_distributed"](spark, sf_dir))
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert "EvalPython" not in plan and "MapInArrow" not in plan
     assert "CartesianProduct" not in plan
 
 
@@ -704,7 +704,7 @@ def test_quality_lr_serve_is_literal_weight_projection(spark, sf_dir, qs):
     plan literals, so the 100 TB serve plan is identical to the
     fixed-weight production entry's."""
     plan = _plan(qs["quality_lr_trained"](spark, sf_dir))
-    assert "MapInPandas" not in plan and "EvalPython" not in plan
+    assert "MapInArrow" not in plan and "EvalPython" not in plan
     # the only allowed exchange is the output ordering's range exchange
     body = plan.split("Sort")[-1] if "Sort" in plan else plan
     assert "Exchange hashpartitioning" not in body
@@ -717,4 +717,4 @@ def test_video_decode_joins_plan_as_broadcast(spark, sf_dir, qs):
     plan = _plan(qs["mm_video_decode_real"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan  # the real decode seam, build side
+    assert "MapInArrow" in plan  # the real decode seam, build side

@@ -2,7 +2,8 @@
 
 On the shuffle candidate path the scorer is arrow_pair_cosine (numpy
 per-dimension accumulation); on the broadcast path it stays the in-plan
-JVM HOF fold. The two must be BIT-IDENTICAL — same IEEE-754 op order.
+JVM HOF fold. The two must be BIT-IDENTICAL — same IEEE-754 op order —
+and give the same NULL for a malformed row.
 """
 from __future__ import annotations
 
@@ -32,11 +33,11 @@ def test_arrow_seam_bit_exact_and_gated(spark, sf_dir):
         (SIM.embed_neardup_pairs, dict(threshold=0.3, num_planes=6, dim=64)),
     ]:
         fold_df = fn(emb, strategy="broadcast", **kw)
-        assert "MapInPandas" not in _plan(fold_df)
+        assert "MapInArrow" not in _plan(fold_df)
         fold = _canon(fold_df.collect())
 
         arrow_df = fn(emb, strategy="shuffle", **kw)
-        assert "MapInPandas" in _plan(arrow_df), fn.__name__
+        assert "MapInArrow" in _plan(arrow_df), fn.__name__
         assert fold == _canon(arrow_df.collect()), fn.__name__
 
 
@@ -55,6 +56,18 @@ def test_arrow_pair_cosine_direct_matches_fold(spark, sf_dir):
                  F.col("__n").alias("__nb"))
     cand = a.join(b, F.col("id_a") % 7 == F.col("id_b") % 7).filter(
         F.col("id_a") < F.col("id_b"))
+    # malformed rows: the fold gives NULL for a null vector on either
+    # side, a null element and two lengths; two vectors of one length
+    # other than the batch's still fold to a value
+    bad = spark.createDataFrame(
+        [(-1, None, [1.0] * 64), (-2, [1.0] * 64, None),
+         (-3, [1.0] * 63 + [None], [1.0] * 64), (-4, [1.0] * 64, [1.0] * 32),
+         (-5, [0.5, 0.25, 2.0], [1.0, 3.0, 0.125])],
+        "id_a long, __va array<double>, __vb array<double>")
+    cand = cand.unionByName(bad.select(
+        "id_a", "__va", SIM.l2_norm(F.col("__va")).alias("__na"),
+        (-F.col("id_a")).alias("id_b"), "__vb",
+        SIM.l2_norm(F.col("__vb")).alias("__nb")))
     fold = cand.select(
         "id_a", "id_b",
         (SIM.dot(F.col("__va"), F.col("__vb"))
@@ -64,4 +77,5 @@ def test_arrow_pair_cosine_direct_matches_fold(spark, sf_dir):
         na_col="__na", nb_col="__nb", out_col="c")
     got_f, got_a = _canon(fold.collect()), _canon(arrow.collect())
     assert len(got_f) > 100
+    assert [r[2] is None for r in got_f[:5]] == [False] + [True] * 4
     assert got_f == got_a

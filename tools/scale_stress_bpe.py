@@ -67,7 +67,7 @@ def main() -> None:
     ).agg(F.sum("n_bpe_tokens")).first()
     out["doc_counts_shuffle_s"] = round(time.perf_counter() - t0, 2)
 
-    # worst-case Arrow stage: every word distinct, no memo hits
+    # worst-case Arrow stage: every word distinct
     words = spark.range(n_vocab).select(
         F.concat(
             F.lit("w"),

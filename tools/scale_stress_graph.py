@@ -4,13 +4,18 @@ checking the claimed posture — per iteration ONE join + ONE groupBy on
 the node id, cost linear in |E|.
 
 Graph model: power-law-ish bipartite co-purchase (hot suppliers exist,
-as in the real graph): per edge, customer from a uniform hash, supplier
-from a quadratic-fold hash (mass concentrates on low ids). Generated in
-place with Spark expressions — no driver loops.
+as in the real graph): each customer buys from a run of consecutive
+suppliers that starts at a squared-uniform hash (mass concentrates on
+low ids). Every (customer, supplier) pair is distinct by construction,
+so a requested size of ``n_edges`` gives exactly ``2 * (n_edges // 2)``
+directed edges and says which side of ``graph.PR_LOCAL_MAX_EDGES`` the
+graph lands on. Generated in place with Spark expressions — no driver
+loops.
 
 Usage: python tools/scale_stress_graph.py [n_edges ...]
        python tools/scale_stress_graph.py iterscale [n_edges]
-Prints one JSON line per size; paste into BASELINE.md.
+Prints one JSON line per size, with the directed edge count PageRank
+ran on; paste into BASELINE.md.
 
 ``iterscale`` is the round-6 lineage-truncation proof: on one fixed
 graph it times iters=5 vs iters=25, both with checkpoint_every=5 —
@@ -30,22 +35,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _gen_edges(spark, n_edges: int):
+    """``n_edges // 2`` distinct (c, s) pairs: customer ``c`` is the
+    pair index modulo the customer count, and its ``r``-th pair goes to
+    supplier ``(start(c) + r) % n_supp`` with ``r`` below ``n_supp``, so
+    no pair repeats and no ``distinct`` is needed."""
     from pyspark.sql import functions as F
 
-    n_cust = max(1000, n_edges // 40)
-    n_supp = max(100, n_edges // 4000)
-    e0 = (
-        spark.range(n_edges)
-        .withColumn("hc", F.abs(F.xxhash64(F.col("id"))))
-        .withColumn("hs", F.abs(F.xxhash64(F.col("id"), F.lit(3))))
+    pairs = n_edges // 2
+    n_cust = max(1000, pairs // 20)
+    n_supp = max(100, pairs // 2000)
+    u = (F.abs(F.xxhash64(F.col("c"), F.lit(3))) % (1 << 20)) / float(1 << 20)
+    return (
+        spark.range(pairs)
+        .select((F.col("id") % n_cust).alias("c"),
+                (F.col("id") / n_cust).cast("long").alias("r"))
         .select(
-            (F.col("hc") % n_cust * 2).alias("c"),
-            ((F.col("hs") % n_supp) * (F.col("hs") % n_supp) % n_supp * 2
+            (F.col("c") * 2).alias("c"),
+            (((F.floor(u * u * n_supp) + F.col("r")) % n_supp) * 2
              + 1).alias("s"),
         )
-        .distinct()
     )
-    return e0
 
 
 def iterscale(n_edges: int = 2_000_000) -> None:
@@ -102,20 +111,7 @@ def main() -> None:
     spark = get_spark("scale-stress-graph")
 
     for n_edges in sizes:
-        n_cust = max(1000, n_edges // 40)
-        n_supp = max(100, n_edges // 4000)
-        e0 = (
-            spark.range(n_edges)
-            .withColumn("hc", F.abs(F.xxhash64(F.col("id"))))
-            .withColumn("hs", F.abs(F.xxhash64(F.col("id"), F.lit(3))))
-            .select(
-                (F.col("hc") % n_cust * 2).alias("c"),
-                # quadratic fold -> hot suppliers (power-law-ish)
-                ((F.col("hs") % n_supp) * (F.col("hs") % n_supp) % n_supp * 2
-                 + 1).alias("s"),
-            )
-            .distinct()
-        )
+        e0 = _gen_edges(spark, n_edges)
         edges = (
             e0.selectExpr("c AS src", "s AS dst")
             .unionAll(e0.selectExpr("s AS src", "c AS dst"))
