@@ -48,7 +48,7 @@ from apde_etl_spark.operators.similarity import (
     train_pq_codebooks,
 )
 from apde_etl_spark.sources.lifecycle import write_analytic_table
-from apde_etl_spark.sources.readers import local_frame
+from apde_etl_spark.sources.readers import collect_bounded, local_frame
 
 __all__ = [
     "build_ann_index",
@@ -551,8 +551,16 @@ def _try_local_serve(
     layered: bool,
     max_rows: int,
 ) -> DataFrame | None:
-    """Broadcast-index serve, or None when the gate/shape rules it out
-    (``max_rows`` <= 0 turns it off).
+    """Broadcast-index serve, or None when a gate or the corpus's shape
+    rules it out (``max_rows`` <= 0 turns it off).
+
+    Construction runs two jobs. The first is the gate's probe: a
+    :func:`~apde_etl_spark.sources.readers.collect_bounded` of the corpus
+    vectors' lengths alone (at most ``max_rows + 1`` ints), which decides
+    the row gate, the corpus shape and the byte gate before any vector
+    leaves the executors. The second collects the corpus. Each decline is
+    an explicit check, so an error past them (a corrupt artifact) raises,
+    as the join path would.
 
     Fidelity to the iterative walk, piece by piece:
 
@@ -565,6 +573,12 @@ def _try_local_serve(
       LARGEST double, so the sort key maps NaN to -inf on the negated
       axis; ties (including -0.0 vs 0.0, equal under IEEE compare)
       break by id exactly as ``row_number`` does.
+    - malformed query (a null vector, a null element, or a length other
+      than the corpus dim, as :func:`vectors` marks it): ``dot``'s
+      ``zip_with`` is NULL for every candidate, so every cut orders by
+      id ascending and ``cosine_raw`` is NULL. The stage gives such a
+      row one constant key and a NULL cosine, not NaN, which would rank
+      as the largest value and print as NaN.
     - expand: ``distinct(beam ∪ neighbors(beam))`` == ``np.unique`` of
       the concatenated index arrays.
     - levels (layered descent seeds): hash60(cast(id AS STRING)) %
@@ -572,8 +586,6 @@ def _try_local_serve(
       the same bytes Spark's string-cast feeds md5 (parity test-pinned
       against :func:`node_levels`).
     """
-    import logging
-
     if max_rows <= 0:
         return None
     from pyspark.sql.types import (
@@ -584,156 +596,118 @@ def _try_local_serve(
         StructType,
     )
 
-    try:
-        # LongType only (round-10 ADVICE, medium): the fast path's
-        # output schema declares the id column LongType, while the
-        # iterative path preserves the corpus id's original type — an
-        # Integer/Short corpus must take the join path so the same call
-        # returns the same schema regardless of corpus size or the
-        # ``local_serve_max_rows`` gate (the PageRank fast path
-        # declines non-long ids for the same reason).
-        id_type = corpus_df.schema[id_col].dataType
-        if not isinstance(id_type, LongType):
-            return None
-        # ONE bounded probe job: row count, vector-width range and
-        # null-vector presence over at most max_rows+1 corpus rows. The
-        # byte gate then sizes the would-be broadcast BEFORE anything
-        # is collected; ragged/null corpus vectors decline here too
-        # (the join path defines their semantics).
-        vec_arr = as_double_array(vec_col)
-        p = (corpus_df
-             .select(F.size(vec_arr).alias("__d"))
-             .limit(max_rows + 1)
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.count("__d").alias("nd"),
-                  F.min("__d").alias("dmin"),
-                  F.max("__d").alias("dmax"))
-             .collect()[0])
-        n_rows = int(p["n"])
-        if n_rows > max_rows or n_rows == 0:
-            return None
-        if p["nd"] != n_rows or p["dmin"] is None or p["dmin"] != p["dmax"]:
-            return None
-        dim_c = int(p["dmax"])
-        if dim_c <= 0:
-            return None
-        if n_rows * (dim_c * 8 + 24) > LOCAL_SERVE_MAX_BYTES:
-            return None
-        # query-side shape probe (round-10 ADVICE, low): a null or
-        # ragged query vector — or a query dim != corpus dim — would
-        # crash the Arrow stage at EXECUTION time, past the point
-        # where falling back to the join path is possible. Validate the
-        # whole query side in one job and decline the fast plan when
-        # anything is off; the join path's null-cosine semantics then
-        # apply unchanged.
-        q = (queries_df
-             .select(F.size(vec_arr).alias("__d"),
-                     F.exists(vec_arr, lambda x: x.isNull()).alias("__hn"))
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.count("__d").alias("nd"),
-                  F.min("__d").alias("dmin"),
-                  F.max("__d").alias("dmax"),
-                  F.sum(F.when(F.col("__hn"), 1).otherwise(0)).alias("nnul"))
-             .collect()[0])
-        if int(q["n"]) > 0:
-            if (q["nd"] != q["n"] or q["dmin"] is None
-                    or q["dmin"] != q["dmax"] or int(q["dmin"]) != dim_c
-                    or int(q["nnul"] or 0) > 0):
-                return None
-
-        import numpy as np
-
-        # the frozen artifacts are bounded by the gate
-        graph_pdf = _read_artifact(
-            spark, f"{index_dir}/graph", ["src", "dst"]).to_pandas()
-        meta_pdf = _read_artifact(
-            spark, f"{index_dir}/graph_meta", ["entry_id"]).to_pandas()
-        upper_pdf = None
-        top = 0
-        layer_factor = 0
-        if layered:
-            lm_pdf = _read_artifact(spark, f"{index_dir}/layer_meta",
-                                    ["n_layers", "layer_factor"]).to_pandas()
-            n_layers = int(lm_pdf["n_layers"].iloc[0])
-            layer_factor = int(lm_pdf["layer_factor"].iloc[0])
-            if not _upper_absent(spark, index_dir):
-                upper_pdf = _read_artifact(
-                    spark, f"{index_dir}/graph_upper",
-                    ["layer", "src", "dst"]).to_pandas()
-            top = n_layers if upper_pdf is not None else 0
-
-        cor = corpus_df.select(
-            F.col(id_col).cast("long").alias("cid"),
-            as_double_array(vec_col).alias("v"),
-        ).toArrow()
-        if cor.num_rows == 0:
-            return None
-        V, v_ok = vectors(cor.column("v").combine_chunks(), dim_c)
-        if not v_ok.all():
-            return None  # a null element: the join path defines it
-        cids = cor.column("cid").to_numpy()
-        order = np.argsort(cids, kind="stable")
-        cids = cids[order]
-        if len(cids) > 1 and (np.diff(cids) == 0).any():
-            return None  # duplicate ids: let the join path define it
-        V = V[order]
-        n, dim = V.shape
-        # corpus norms: the l2_norm fold, per-dimension-vectorized
-        accn = np.zeros(n, dtype="float64")
-        for i in range(dim):
-            c = V[:, i]
-            accn = accn + c * c
-        norms = np.sqrt(accn)
-
-        def to_idx(a: "np.ndarray"):
-            ix = np.searchsorted(cids, a)
-            ok = (ix < n) & (cids[np.minimum(ix, n - 1)] == a)
-            return ix, bool(ok.all())
-
-        def build_csr(src_ids, dst_ids):
-            si, s_ok = to_idx(src_ids)
-            di, d_ok = to_idx(dst_ids)
-            if not (s_ok and d_ok):
-                return None
-            o2 = np.argsort(si, kind="stable")
-            si, di = si[o2], di[o2]
-            indptr = np.zeros(n + 1, dtype=np.int64)
-            if len(si):
-                indptr[1:] = np.bincount(si, minlength=n).cumsum()
-            return indptr, di
-
-        g_csr = build_csr(
-            graph_pdf["src"].to_numpy(dtype="int64"),
-            graph_pdf["dst"].to_numpy(dtype="int64"))
-        if g_csr is None:
-            return None
-        uppers = {}
-        for lyr in range(1, top + 1):
-            sub = upper_pdf[upper_pdf["layer"] == lyr]
-            u_csr = build_csr(sub["src"].to_numpy(dtype="int64"),
-                              sub["dst"].to_numpy(dtype="int64"))
-            if u_csr is None:
-                return None
-            uppers[lyr] = u_csr
-        e_idx, e_ok = to_idx(meta_pdf["entry_id"].to_numpy(dtype="int64"))
-        if not e_ok:
-            return None
-        if top > 0:
-            import hashlib
-
-            fpow = layer_factor ** top
-            seed_mask = np.fromiter(
-                (int(hashlib.md5(str(int(c)).encode())
-                     .hexdigest()[:15], 16) % fpow == 0 for c in cids),
-                count=n, dtype=bool)
-            seeds_idx = np.nonzero(seed_mask)[0]
-        else:
-            seeds_idx = np.zeros(0, dtype=np.int64)
-    except Exception:  # structural surprise: serve via the join path
-        logging.getLogger(__name__).warning(
-            "ann local-serve setup failed; using iterative serve",
-            exc_info=True)
+    # LongType only (round-10 ADVICE, medium): the fast path's output
+    # schema declares the id column LongType, while the iterative path
+    # preserves the corpus id's original type — an Integer/Short corpus
+    # must take the join path so the same call returns the same schema
+    # regardless of corpus size or the ``local_serve_max_rows`` gate
+    # (the PageRank fast path declines non-long ids for the same reason).
+    if not isinstance(corpus_df.schema[id_col].dataType, LongType):
         return None
+    # the probe: row count, vector lengths and null vectors of at most
+    # max_rows+1 corpus rows, so the byte gate sizes the would-be
+    # broadcast BEFORE any vector is collected. Null and ragged corpus
+    # vectors decline (the join path defines their semantics).
+    sizes = collect_bounded(corpus_df.select(F.size(vec_col).alias("d")),
+                            max_rows)
+    if sizes is None or sizes.num_rows == 0 or sizes.column("d").null_count:
+        return None
+    import numpy as np
+
+    lens = sizes.column("d").to_numpy()
+    dim_c = int(lens.max())
+    if dim_c <= 0 or int(lens.min()) != dim_c:
+        return None
+    if len(lens) * (dim_c * 8 + 24) > LOCAL_SERVE_MAX_BYTES:
+        return None
+
+    # the frozen artifacts are bounded by the gate
+    graph_pdf = _read_artifact(
+        spark, f"{index_dir}/graph", ["src", "dst"]).to_pandas()
+    meta_pdf = _read_artifact(
+        spark, f"{index_dir}/graph_meta", ["entry_id"]).to_pandas()
+    upper_pdf = None
+    top = 0
+    layer_factor = 0
+    if layered:
+        lm_pdf = _read_artifact(spark, f"{index_dir}/layer_meta",
+                                ["n_layers", "layer_factor"]).to_pandas()
+        n_layers = int(lm_pdf["n_layers"].iloc[0])
+        layer_factor = int(lm_pdf["layer_factor"].iloc[0])
+        if not _upper_absent(spark, index_dir):
+            upper_pdf = _read_artifact(
+                spark, f"{index_dir}/graph_upper",
+                ["layer", "src", "dst"]).to_pandas()
+        top = n_layers if upper_pdf is not None else 0
+
+    cor = corpus_df.select(
+        F.col(id_col).cast("long").alias("cid"),
+        as_double_array(vec_col).alias("v"),
+    ).toArrow()
+    if cor.num_rows == 0:
+        return None
+    V, v_ok = vectors(cor.column("v").combine_chunks(), dim_c)
+    if not v_ok.all():
+        return None  # a null element: the join path defines it
+    cids = cor.column("cid").to_numpy()
+    order = np.argsort(cids, kind="stable")
+    cids = cids[order]
+    if len(cids) > 1 and (np.diff(cids) == 0).any():
+        return None  # duplicate ids: let the join path define it
+    V = V[order]
+    n, dim = V.shape
+    # corpus norms: the l2_norm fold, per-dimension-vectorized
+    accn = np.zeros(n, dtype="float64")
+    for i in range(dim):
+        c = V[:, i]
+        accn = accn + c * c
+    norms = np.sqrt(accn)
+
+    def to_idx(a: "np.ndarray"):
+        ix = np.searchsorted(cids, a)
+        ok = (ix < n) & (cids[np.minimum(ix, n - 1)] == a)
+        return ix, bool(ok.all())
+
+    def build_csr(src_ids, dst_ids):
+        si, s_ok = to_idx(src_ids)
+        di, d_ok = to_idx(dst_ids)
+        if not (s_ok and d_ok):
+            return None
+        o2 = np.argsort(si, kind="stable")
+        si, di = si[o2], di[o2]
+        indptr = np.zeros(n + 1, dtype=np.int64)
+        if len(si):
+            indptr[1:] = np.bincount(si, minlength=n).cumsum()
+        return indptr, di
+
+    # an edge or entry id outside the corpus: the join path defines it
+    g_csr = build_csr(
+        graph_pdf["src"].to_numpy(dtype="int64"),
+        graph_pdf["dst"].to_numpy(dtype="int64"))
+    if g_csr is None:
+        return None
+    uppers = {}
+    for lyr in range(1, top + 1):
+        sub = upper_pdf[upper_pdf["layer"] == lyr]
+        u_csr = build_csr(sub["src"].to_numpy(dtype="int64"),
+                          sub["dst"].to_numpy(dtype="int64"))
+        if u_csr is None:
+            return None
+        uppers[lyr] = u_csr
+    e_idx, e_ok = to_idx(meta_pdf["entry_id"].to_numpy(dtype="int64"))
+    if not e_ok:
+        return None
+    if top > 0:
+        import hashlib
+
+        fpow = layer_factor ** top
+        seed_mask = np.fromiter(
+            (int(hashlib.md5(str(int(c)).encode())
+                 .hexdigest()[:15], 16) % fpow == 0 for c in cids),
+            count=n, dtype=bool)
+        seeds_idx = np.nonzero(seed_mask)[0]
+    else:
+        seeds_idx = np.zeros(0, dtype=np.int64)
 
     bc = spark.sparkContext.broadcast(
         (cids, V, norms, g_csr, uppers, e_idx, seeds_idx, int(top),
@@ -766,6 +740,8 @@ def _try_local_serve(
         dim = V.shape[1]
 
         def score(cand, qv, qn):
+            if qv is None:  # a malformed query: NULL for every candidate
+                return np.zeros(len(cand), dtype="float64")
             C = V[cand]
             acc = np.zeros(len(cand), dtype="float64")
             for i in range(dim):
@@ -788,9 +764,7 @@ def _try_local_serve(
             cand = np.unique(np.concatenate([bidx, neigh(bidx, csr)]))
             return cut(cand, score(cand, qv, qn), width)
 
-        # every row is held: the query-shape probe declined the plan
-        # for a null, holed or ragged query vector
-        Q, _ = vectors(batch.column("__qv"), dim)
+        Q, q_ok = vectors(batch.column("__qv"), dim)
         accq = np.zeros(len(Q), dtype="float64")
         for i in range(dim):
             qc = Q[:, i]
@@ -799,7 +773,7 @@ def _try_local_serve(
         qids = batch.column("query_id")
         out_row, out_vid, out_cos = [], [], []
         for r in range(len(Q)):
-            qv, qn = Q[r], qns[r]
+            qv, qn = (Q[r], qns[r]) if q_ok[r] else (None, None)
             qid = qids[r].as_py()
             if top > 0:
                 bidx, bcos = cut(
@@ -824,7 +798,8 @@ def _try_local_serve(
             "rank": np.concatenate(
                 [np.arange(1, len(f) + 1, dtype=np.int32) for f in out_row]),
             out_schema[2].name: np.concatenate(out_vid),
-            "cosine_raw": np.concatenate(out_cos),
+            "cosine_raw": pa.array(np.concatenate(out_cos),
+                                   mask=~q_ok[rows]),
         }
 
     return arrow_stage(q_src, out_schema, serve)

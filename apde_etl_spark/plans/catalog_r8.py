@@ -169,11 +169,16 @@ def ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     layered graph index (operators/ann_index.py:
     ann_graph_search_layered): width-{dbeam} descent through the
     upper-layer adjacencies, then the flat layer-0 beam walk seeded by
-    the descent result + stratified entries. The serve plan reads ONLY
-    the frozen graph/graph_upper/graph_meta/layer_meta parquet + the
-    two input frames — zero Python stages, zero construction scans
-    (asserted in tests/test_plan_shapes.py). Oracle rebuilds levels and
-    per-layer adjacencies from first principles and unrolls the
+    the descent result + stratified entries. The corpus is under the
+    local-serve gate, so the serve is one Arrow stage over the query
+    batch against the broadcast index, with no joins; building it runs
+    two driver jobs (the gate's bounded collect of the vectors' lengths
+    and the corpus collect) and reads the frozen graph/graph_upper/
+    graph_meta/layer_meta artifacts without a job. The
+    ``_distributed`` twin takes the join-per-hop walk, whose plan reads
+    only those artifacts and the two input frames, with no Python stage
+    (both asserted in tests/test_plan_shapes.py). Oracle rebuilds levels
+    and per-layer adjacencies from first principles and unrolls the
     identical descent + hops."""
     return _ann_hnsw_topk(spark, sf_dir)
 

@@ -38,6 +38,15 @@ def get_spark(app_name: str = "apde-etl-spark", shuffle_partitions: int | None =
         # set with headroom. A static conf: it only takes effect when
         # this call starts the JVM's SparkContext.
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # With this on (PySpark's default), every DataFrame and Column
+        # method reads spark.sql.stackTracesInDataFrameContext through
+        # py4j, walks the Python stack, and sets and clears the JVM's
+        # PySparkCurrentOrigin: 2,450 of the 4,037 py4j calls of one
+        # traced pass of the benchmark's query workload. Off, Spark's
+        # error messages no longer name the Python call site
+        # (DEPLOY.md §2). PySpark reads it once per process, at the
+        # first decorated call with an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Scale-dependent I/O knobs (guide §6/§9), env-parameterised with
     # Spark's own defaults locally so the driver's bench stays

@@ -265,6 +265,15 @@ def test_hnsw_recall_floor_and_beats_nothing_lost(spark, sf_dir):
     assert r["recall_at_k"] >= 0.35
 
 
+def _canon(rows):
+    """Rows as sorted tuples with every float as its bit pattern."""
+    import struct
+
+    return sorted(
+        tuple(struct.pack(">d", v).hex() if isinstance(v, float)
+              else v for v in r) for r in rows)
+
+
 def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
                                      monkeypatch):
     """The size-gated broadcast-index serve (round 10) must reproduce
@@ -272,8 +281,6 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
     including the float64 cosines — and must respect its row gate
     (``local_serve_max_rows``: 0 turns it off, a cap below the corpus
     size declines)."""
-    import struct
-
     import pyspark.sql.functions as F
 
     import apde_etl_spark.operators.ann_index as AI
@@ -288,11 +295,6 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
     build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2,
                     n_layers=2, layer_factor=8, layer_neighbors=3)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-
-    def canon(rows):
-        return sorted(
-            tuple(struct.pack(">d", v).hex() if isinstance(v, float)
-                  else v for v in r) for r in rows)
 
     def iterative_flat(*a, **kw):
         # the flat serve has no gate parameter: make the gate decline
@@ -314,7 +316,7 @@ def test_local_serve_parity_bit_exact(spark, sf_dir, tmp_path,
         assert "MapInArrow" in plan and "Join" not in plan
         assert "MapInArrow" not in \
             it_df._jdf.queryExecution().executedPlan().toString()
-        assert canon(fast_df.collect()) == canon(it_df.collect())
+        assert _canon(fast_df.collect()) == _canon(it_df.collect())
     # rows gate: a cap below the corpus size forces the iterative path
     gated = ann_graph_search_layered(spark, d, queries, emb,
                                      local_serve_max_rows=3, **layered_kw)
@@ -327,21 +329,26 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     """Round-11 gate hardening: (1) the BYTE budget declines the fast
     path for a corpus whose replicated payload (rows x dim x 8B) would
     blow the broadcast budget even when the ROW gate admits it;
-    (2) null / ragged / wrong-dim QUERY vectors decline the fast plan
-    up front (the Arrow stage could not fall back once running);
-    (3) an Integer-typed corpus id declines (schema stability with the
-    iterative path, which preserves the original id type)."""
+    (2) a malformed QUERY vector (null, a null element, shorter or
+    longer than the corpus dim) is served by the fast plan with the
+    join path's answer: NULL cosines, candidates cut by id, bit-equal
+    rows in both serve functions; a NaN element is not malformed, and
+    both paths give its NaN cosines; (3) an Integer-typed corpus id
+    declines (schema stability with the iterative path, which
+    preserves the original id type)."""
     import pyspark.sql.functions as F
 
     import apde_etl_spark.operators.ann_index as AI
     from apde_etl_spark.operators.ann_index import (
         ann_graph_search,
+        ann_graph_search_layered,
         build_knn_graph,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     d = str(tmp_path / "bidx")
-    build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2)
+    build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2,
+                    n_layers=2, layer_factor=8, layer_neighbors=3)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
 
     def is_fast(df):
@@ -357,20 +364,50 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     assert not is_fast(ann_graph_search(spark, d, queries, emb,
                                         k=3, beam=6, hops=2))
     monkeypatch.undo()
-    # (2) ragged queries: one query vector truncated to a shorter dim
-    ragged = queries.select(
-        "vec_id",
-        F.when(F.col("vec_id") == 0, F.slice("embedding", 1, 3))
-        .otherwise(F.col("embedding")).alias("embedding"))
-    assert not is_fast(ann_graph_search(spark, d, ragged, emb,
-                                        k=3, beam=6, hops=2))
-    # null query vector
-    nullq = queries.select(
-        "vec_id",
-        F.when(F.col("vec_id") == 0, F.lit(None)).otherwise(
-            F.col("embedding")).alias("embedding"))
-    assert not is_fast(ann_graph_search(spark, d, nullq, emb,
-                                        k=3, beam=6, hops=2))
+
+    # (2) malformed queries, two rows of the batch each
+    def flat(q, slow):
+        with monkeypatch.context() as m:
+            if slow:
+                m.setattr(AI, "_try_local_serve", lambda *a, **kw: None)
+            return ann_graph_search(spark, d, q, emb, k=3, beam=6, hops=2)
+
+    def layered(q, slow):
+        return ann_graph_search_layered(
+            spark, d, q, emb, k=3, beam=6, hops=2, descend_beam=4,
+            hops_per_layer=1,
+            local_serve_max_rows=0 if slow else AI.LOCAL_SERVE_MAX_ROWS)
+
+    def with_element(v):
+        return F.transform(
+            "embedding", lambda x, i: F.when(i != 1, x).otherwise(v))
+
+    elem = emb.schema["embedding"].dataType.elementType
+    bad_ids = (0, 100)
+    for case, bad in {
+        "null vector": F.lit(None),
+        "null element": with_element(F.lit(None)),
+        "short vector": F.slice("embedding", 1, 3),
+        "long vector": F.concat(
+            "embedding", F.array(F.lit(0.5).cast(elem))),
+        # not malformed: a NaN cosine, which both paths keep as NaN
+        "NaN element": with_element(F.lit(float("nan")).cast(elem)),
+    }.items():
+        q = queries.select(
+            "vec_id",
+            F.when(F.col("vec_id").isin(*bad_ids), bad)
+            .otherwise(F.col("embedding")).alias("embedding"))
+        for serve in (flat, layered):
+            fast, slow = serve(q, slow=False), serve(q, slow=True)
+            assert is_fast(fast), (case, serve.__name__)
+            assert not is_fast(slow), (case, serve.__name__)
+            got = fast.collect()
+            assert _canon(got) == _canon(slow.collect()), \
+                (case, serve.__name__)
+            nulls = {r["query_id"] for r in got if r["cosine_raw"] is None}
+            assert nulls == (set() if case == "NaN element"
+                             else set(bad_ids)), (case, serve.__name__)
+
     # (3) integer corpus ids: iterative path keeps IntegerType output,
     # so the long-typed fast path must decline
     emb_int = emb.select(F.col("vec_id").cast("int").alias("vec_id"),
@@ -378,6 +415,33 @@ def test_local_serve_byte_gate_and_query_shape(spark, sf_dir, tmp_path,
     q_int = emb_int.filter(F.col("vec_id") % 50 == 0)
     assert not is_fast(ann_graph_search(spark, d, q_int, emb_int,
                                         k=3, beam=6, hops=2))
+
+
+def test_local_serve_constructs_in_two_jobs(spark, sf_dir, tmp_path):
+    """Constructing the layered fast serve runs two jobs: the bounded
+    collect of the corpus vectors' lengths, which decides the row, byte
+    and shape gates, and the corpus collect. The query side is checked
+    inside the Arrow stage, and the index artifacts are read without a
+    job."""
+    import pyspark.sql.functions as F
+    from test_local_frame import _jobs_of
+
+    from apde_etl_spark.operators.ann_index import (
+        ann_graph_search_layered,
+        build_knn_graph,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    d = str(tmp_path / "jidx")
+    build_knn_graph(emb, d, n_neighbors=4, n_entries=8, n_long_links=2,
+                    n_layers=2, layer_factor=8, layer_neighbors=3)
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    df, jobs = _jobs_of(spark, "ann_local_serve_jobs",
+                        lambda: ann_graph_search_layered(
+                            spark, d, queries, emb, k=3, beam=6, hops=2,
+                            descend_beam=4, hops_per_layer=1))
+    assert len(jobs) == 2
+    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_local_serve_level_seeds_match_node_levels(spark, sf_dir):

@@ -164,10 +164,9 @@ def _bounded_probe_sites():
 
 def test_size_probes_go_through_collect_bounded():
     """A driver fast path sizes its input with ``collect_bounded``, whose
-    collect is also the payload. The one other probe is the ANN local
-    serve's shape aggregate, which must bound the vectors' bytes before
-    it collects them."""
+    collect is also the payload. It is the only bounded probe: the ANN
+    local serve, which must bound the vectors' bytes before it collects
+    them, collects the vectors' lengths through it first."""
     assert set(_bounded_probe_sites()) == {
         ("sources/readers.py", "collect_bounded"),
-        ("operators/ann_index.py", "_try_local_serve"),
     }
