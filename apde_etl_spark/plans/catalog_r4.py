@@ -6,8 +6,9 @@ analogue is a hive-partitioned layout written by
 :func:`~apde_etl_spark.sources.lifecycle.write_analytic_table` — and the
 claim "partition pruning engages" deserves an EXECUTED proof, not a
 writer unit test. These entries materialize a year-partitioned orders
-table once per scale factor (in a temp workspace — never under the
-read-only testdata dir), then run headline shapes against it:
+table once per process and ``orders`` fingerprint (in a temp workspace —
+never under the read-only testdata dir), then run headline shapes
+against it:
 
 - ``qa_profile_partition_pruned`` — static pruning: a literal year
   predicate must surface as ``PartitionFilters`` (directory-level skip),
@@ -26,97 +27,22 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apde_etl_spark.plans.artifacts import artifact, source_fingerprints
 from apde_etl_spark.plans.catalog import _sql_round, load, register
 from apde_etl_spark.functions.core import round_half_away
-
-#: sf_dir -> materialized partitioned-orders path (one write per process)
-_PART_CACHE: dict[str, str] = {}
-
-
-def _source_fingerprint(path: str) -> str:
-    """mtime+size digest of a source parquet file/dir — keyed into every
-    derived-layout cache so REGENERATED testdata at the same path
-    invalidates the cached layout instead of silently serving stale rows
-    (the flat-table oracle would read fresh data while the layout entry
-    read the old copy)."""
-    h = hashlib.md5()
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                h.update(f"{f}:{st.st_size}:{st.st_mtime_ns}".encode())
-    else:
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
-
-
-def _sweep_stale_siblings(root: str, keep: str) -> None:
-    """Remove sibling fixture directories for the SAME source (same
-    prefix segment before the dash) with a different fingerprint —
-    each testdata regeneration mints a new fingerprint tag, and without
-    the sweep the stale copies accumulate for the life of /tmp. Other
-    sources' fixtures (other scale factors) are left alone. Derived
-    caches only, never sources. Call AFTER the current fixture is fully
-    built, so a failed build never destroys the last good copy."""
-    import shutil
-
-    prefix = keep.split("-", 1)[0]
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d != keep and d.split("-", 1)[0] == prefix:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-
-
-def fixture_dir(root_name: str, sf_dir: str, source_file: str) -> tuple[str, bool]:
-    """Shared fixture-cache addressing: returns (dir, is_complete) for a
-    derived fixture under ``/tmp/<root_name>/<sfseg>-<fpseg>`` keyed by
-    the source file's content fingerprint. The caller builds into the
-    dir when ``is_complete`` is False and MUST call
-    :func:`fixture_complete` afterward — that writes the ``_SUCCESS``
-    marker (a crash mid-build leaves no marker, so the next run
-    rebuilds instead of serving a partial fixture) and only then sweeps
-    stale same-source siblings. Concurrency caveat: the sweep can
-    remove a stale-fingerprint directory another LIVE process (pinned
-    to older testdata) is still scanning — acceptable for derived
-    caches in this workflow (processes run against one testdata
-    generation at a time); a shared multi-writer cache would need
-    generation-pinned retention instead."""
-    key = os.path.abspath(sf_dir)
-    fp = _source_fingerprint(os.path.join(key, source_file))
-    root = os.path.join(tempfile.gettempdir(), root_name)
-    tag = (hashlib.md5(key.encode()).hexdigest()[:8] + "-"
-           + hashlib.md5(fp.encode()).hexdigest()[:8])
-    base = os.path.join(root, tag)
-    return base, os.path.exists(os.path.join(base, "_FIXTURE_SUCCESS"))
-
-
-def fixture_complete(base: str) -> None:
-    """Mark ``base`` fully built and sweep stale same-source siblings."""
-    with open(os.path.join(base, "_FIXTURE_SUCCESS"), "w") as fh:
-        fh.write("ok")
-    _sweep_stale_siblings(os.path.dirname(base), os.path.basename(base))
-
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize orders partitioned by ``o_year`` (hive layout, sorted
     within files by o_custkey — the write_analytic_table headline shape)
-    under the system temp dir; reuse across calls and processes when the
-    layout already exists (keyed by source fingerprint, so regenerated
-    testdata invalidates it)."""
+    in a process temp dir, rebuilt when ``orders`` changes."""
     from apde_etl_spark.sources.lifecycle import write_analytic_table
 
-    key = os.path.abspath(sf_dir)
-    if key in _PART_CACHE:
-        return _PART_CACHE[key]
-    fdir, done = fixture_dir("apde_etl_partitioned", sf_dir, "orders.parquet")
-    base = os.path.join(fdir, "orders_by_year")
-    if not done:
+    def build(d: str) -> str:
+        base = os.path.join(d, "orders_by_year")
         orders = load(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate").cast("int")
         )
@@ -124,9 +50,9 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
             orders, base, partition_by="o_year", cluster_by="o_custkey",
             target_file_rows=500_000,
         )
-        fixture_complete(fdir)
-    _PART_CACHE[key] = base
-    return base
+        return base
+
+    return artifact("partitioned_orders", sf_dir, ("orders",), build)
 
 
 def read_partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,44 +146,46 @@ def _clear_stale_managed(spark: SparkSession, name: str, prefix: str) -> None:
                 shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
 
 
-#: sf_dir -> (orders_table, customer_table) bucketed catalog tables
-_BUCKET_CACHE: dict[str, tuple[str, str]] = {}
+def _warehouse_tag(sf_dir: str, tables: tuple[str, ...]) -> tuple[str, str]:
+    """(sfseg, tag) naming the warehouse copies of ``tables``: ``sfseg``
+    digests ``sf_dir`` and ``tag`` adds a digest of the tables'
+    fingerprints, so a regenerated source gets fresh table names in this
+    process and in every later one."""
+    key = os.path.abspath(sf_dir)
+    sfseg = hashlib.md5(key.encode()).hexdigest()[:6]
+    fp = repr(source_fingerprints(key, tables)).encode()
+    return sfseg, f"{sfseg}_{hashlib.md5(fp).hexdigest()[:6]}"
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize orders + customer as BUCKETED catalog tables (8
     buckets on the custkey join key, sorted within buckets) once per
-    scale factor — the write-time layout that makes every later
+    source fingerprint — the write-time layout that makes every later
     custkey equi-join/aggregation exchange-free
     (write_bucketed_table; the lake counterpart of the reference's
     clustered index on the join key, add_index.R:235-240)."""
     from apde_etl_spark.sources.lifecycle import write_bucketed_table
 
-    key = os.path.abspath(sf_dir)
-    if key in _BUCKET_CACHE:
-        return _BUCKET_CACHE[key]
-    fp_o = _source_fingerprint(os.path.join(key, "orders.parquet"))
-    fp_c = _source_fingerprint(os.path.join(key, "customer.parquet"))
-    sfseg = hashlib.md5(key.encode()).hexdigest()[:6]
-    fpseg = hashlib.md5(f"{fp_o}:{fp_c}".encode()).hexdigest()[:6]
-    tag = f"{sfseg}_{fpseg}"
-    t_orders, t_cust = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
+    sources = ("orders", "customer")
 
-    def _ensure(name: str, table: str, bucket_col: str) -> None:
-        if spark.catalog.tableExists(name):
-            return
-        # sweep only THIS source's stale fingerprints — other scale
-        # factors' tables keep their sfseg prefix and survive
-        _clear_stale_managed(spark, name, prefix=f"{table}_bkt_{sfseg}_")
-        write_bucketed_table(
-            load(spark, sf_dir, table), name,
-            bucket_by=bucket_col, num_buckets=8,
-        )
+    def build(_: str) -> tuple[str, str]:
+        sfseg, tag = _warehouse_tag(sf_dir, sources)
+        names = []
+        for table, bucket_col in zip(sources, ("o_custkey", "c_custkey")):
+            name = f"{table}_bkt_{tag}"
+            if not spark.catalog.tableExists(name):
+                # sweep only THIS source's stale fingerprints — other
+                # scale factors' tables keep their sfseg prefix and survive
+                _clear_stale_managed(spark, name,
+                                     prefix=f"{table}_bkt_{sfseg}_")
+                write_bucketed_table(
+                    load(spark, sf_dir, table), name,
+                    bucket_by=bucket_col, num_buckets=8,
+                )
+            names.append(name)
+        return tuple(names)
 
-    _ensure(t_orders, "orders", "o_custkey")
-    _ensure(t_cust, "customer", "c_custkey")
-    _BUCKET_CACHE[key] = (t_orders, t_cust)
-    return t_orders, t_cust
+    return artifact("bucketed_tables", sf_dir, sources, build)
 
 
 _BUCKETED_JOIN_ORACLE = f"""
@@ -293,33 +221,30 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cost-based optimization — ANALYZE stats flip the join order, executed
 # ===========================================================================
 
-#: sf_dir -> analyzed catalog-table names (lineitem, part, supplier)
-_CBO_CACHE: dict[str, tuple[str, str, str]] = {}
-
-
 def cbo_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Materialize lineitem/part/supplier as catalog tables with FULL
-    column statistics (ANALYZE TABLE ... FOR ALL COLUMNS) once per scale
-    factor — the stats layer Spark's cost-based optimizer reads. The
-    lake analogue of SQL Server's auto-created statistics the
+    column statistics (ANALYZE TABLE ... FOR ALL COLUMNS) once per
+    source fingerprint — the stats layer Spark's cost-based optimizer
+    reads. The lake analogue of SQL Server's auto-created statistics the
     reference's query plans silently rely on (its T-SQL generation,
     etl_qa_run_pipeline.R:1208+, leaves plan choice entirely to the
     engine); on Spark the stats must be MATERIALIZED for CBO to see
     them, so the engine ships the step as a first-class layout tool."""
-    key = os.path.abspath(sf_dir)
-    if key in _CBO_CACHE:
-        return _CBO_CACHE[key]
-    fp = _source_fingerprint(os.path.join(key, "lineitem.parquet"))
-    sfseg = hashlib.md5(key.encode()).hexdigest()[:6]
-    tag = f"{sfseg}_{hashlib.md5(fp.encode()).hexdigest()[:6]}"
-    names = tuple(f"cbo_{t}_{tag}" for t in ("lineitem", "part", "supplier"))
-    for t, name in zip(("lineitem", "part", "supplier"), names):
-        if not spark.catalog.tableExists(name):
-            _clear_stale_managed(spark, name, prefix=f"cbo_{t}_{sfseg}_")
-            load(spark, sf_dir, t).write.mode("overwrite").saveAsTable(name)
-            spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-    _CBO_CACHE[key] = names
-    return names
+    sources = ("lineitem", "part", "supplier")
+
+    def build(_: str) -> tuple[str, str, str]:
+        sfseg, tag = _warehouse_tag(sf_dir, sources)
+        names = tuple(f"cbo_{t}_{tag}" for t in sources)
+        for t, name in zip(sources, names):
+            if not spark.catalog.tableExists(name):
+                _clear_stale_managed(spark, name, prefix=f"cbo_{t}_{sfseg}_")
+                df = load(spark, sf_dir, t)
+                df.write.mode("overwrite").saveAsTable(name)
+                spark.sql(
+                    f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
+        return names
+
+    return artifact("cbo_tables", sf_dir, sources, build)
 
 
 _CBO_ORACLE = f"""

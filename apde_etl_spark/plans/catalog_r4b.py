@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators import similarity as SIM
 from apde_etl_spark.operators.temporal import asof_join, range_join_binned
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
@@ -890,31 +891,17 @@ def neardup_method_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multimodal ingest source — Spark binaryFile, byte-for-byte checked
 # ===========================================================================
 
-_BLOB_FIXTURE: dict[str, str] = {}
-
-
 def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize a deterministic raw-media fixture once per SF: one
-    .bin file per sampled document, content = md5(text) digest bytes +
-    a doc_id-dependent tail slice of md5('x'+text) — real NON-UTF8
-    bytes with varying lengths, derived purely from table data so the
-    oracle can regenerate the expectation from the documents view. The
-    driver loop is fixture materialization (~40 tiny files), not a data
-    path."""
+    """Materialize a deterministic raw-media fixture once per
+    ``documents`` fingerprint: one .bin file per sampled document,
+    content = md5(text) digest bytes + a doc_id-dependent tail slice of
+    md5('x'+text) — real NON-UTF8 bytes with varying lengths, derived
+    purely from table data so the oracle can regenerate the expectation
+    from the documents view. The driver loop is fixture materialization
+    (~40 tiny files), not a data path."""
     import hashlib as _h
 
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
-
-    key = os.path.abspath(sf_dir)
-    if key in _BLOB_FIXTURE:
-        return _BLOB_FIXTURE[key]
-    # fixture key carries the SOURCE fingerprint (regenerated testdata
-    # must invalidate it — content derives from documents.text) and
-    # completion is marker-gated: a crash mid-generation leaves no
-    # marker, so the next run rebuilds instead of serving partial files
-    base, done = fixture_dir("apde_etl_blobs", sf_dir, "documents.parquet")
-    if not done:
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> str:
         rows = (
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 12 == 0)
@@ -927,9 +914,9 @@ def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
                        + _h.md5(b"x" + text.encode()).digest()[: r["doc_id"] % 16])
             with open(os.path.join(base, f"doc_{r['doc_id']}.bin"), "wb") as fh:
                 fh.write(payload)
-        fixture_complete(base)
-    _BLOB_FIXTURE[key] = base
-    return base
+        return base
+
+    return artifact("blobs", sf_dir, ("documents",), build)
 
 
 _BLOB_ORACLE = """

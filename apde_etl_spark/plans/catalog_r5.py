@@ -44,6 +44,7 @@ from apde_etl_spark.operators.multimodal import (
     stdlib_png_decoder,
     stdlib_wav_decoder,
 )
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import _sql_round, load, load_events, register
 from apde_etl_spark.plans.catalog_ext import _sql_hash60
 
@@ -58,19 +59,10 @@ from apde_etl_spark.plans.catalog_ext import _sql_hash60
 #        scanline filter type 0..4 appears in each file)
 # Pixels follow multimodal.pixel_value(x, y, c, doc_id).
 
-_MEDIA_FIXTURE: dict[str, str] = {}
-
-
 def _media_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
-
-    key = os.path.abspath(sf_dir)
-    if key in _MEDIA_FIXTURE:
-        return _MEDIA_FIXTURE[key]
-    base, done = fixture_dir("apde_etl_media", sf_dir, "documents.parquet")
-    if not done:
+    def build(base: str) -> str:
         for sub in ("wav", "bmp", "png"):
-            os.makedirs(os.path.join(base, sub), exist_ok=True)
+            os.makedirs(os.path.join(base, sub))
         ids = [
             r["doc_id"]
             for r in load(spark, sf_dir, "documents")
@@ -89,9 +81,9 @@ def _media_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
                                    ("png", "png", png)):
                 with open(os.path.join(base, sub, f"doc_{i}.{ext}"), "wb") as fh:
                     fh.write(blob)
-        fixture_complete(base)
-    _MEDIA_FIXTURE[key] = base
-    return base
+        return base
+
+    return artifact("media", sf_dir, ("documents",), build)
 
 
 def _read_media(spark: SparkSession, sf_dir: str, sub: str, ext: str) -> DataFrame:
@@ -185,9 +177,6 @@ def mm_image_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming late-data boundary ------------------------------------------
 
-_STREAM_LATE_CACHE: dict[str, str] = {}
-
-
 def _stream_late_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Three parquet files in one stream directory with staggered
     modification times (the file source orders batches by mtime;
@@ -201,15 +190,10 @@ def _stream_late_fixture(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     from apde_etl_spark.operators.similarity import hash60
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
 
-    key = os.path.abspath(sf_dir)
-    if key in _STREAM_LATE_CACHE:
-        return _STREAM_LATE_CACHE[key]
-    fdir, done = fixture_dir("apde_etl_stream_late", sf_dir, "events.parquet")
-    base = os.path.join(fdir, "stream")
-    if not done:
-        os.makedirs(base, exist_ok=True)
+    def build(fdir: str) -> str:
+        base = os.path.join(fdir, "stream")
+        os.makedirs(base)
         ev = load_events(spark, sf_dir).select("event_id", "ts", "value")
         bucket = hash60(F.col("event_id").cast("string")) % 20
         batches = [("f1", bucket >= 2), ("f2", bucket == 1), ("f3", bucket == 0)]
@@ -221,9 +205,9 @@ def _stream_late_fixture(spark: SparkSession, sf_dir: str) -> str:
             shutil.copy(src, dst)
             os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
             shutil.rmtree(tmp)
-        fixture_complete(fdir)
-    _STREAM_LATE_CACHE[key] = base
-    return base
+        return base
+
+    return artifact("stream_late", sf_dir, ("events",), build)
 
 
 # The replayed semantics (pinned empirically, Spark 4.x): the late-event
@@ -316,26 +300,18 @@ def stream_late_data_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Z-order clustered layout, executed ------------------------------------
 
-_ZORDER_CACHE: dict[str, str] = {}
-
-
 def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     """lineitem written through ``write_analytic_table(zorder=True)``:
     clustered on the bit-interleaved (l_orderkey, l_partkey) Morton key,
     range-partitioned on it across files, with a small parquet block
     size so each file holds MANY row groups — the layout whose min/max
     stats must skip on BOTH single-column predicates (a lexicographic
-    sort only localizes the leading column). Fixture-cached per SF,
-    keyed by the source fingerprint."""
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
+    sort only localizes the leading column). Built once per
+    ``lineitem`` fingerprint."""
     from apde_etl_spark.sources.lifecycle import write_analytic_table
 
-    key = os.path.abspath(sf_dir)
-    if key in _ZORDER_CACHE:
-        return _ZORDER_CACHE[key]
-    fdir, done = fixture_dir("apde_etl_zorder", sf_dir, "lineitem.parquet")
-    base = os.path.join(fdir, "lineitem_zorder")
-    if not done:
+    def build(fdir: str) -> str:
+        base = os.path.join(fdir, "lineitem_zorder")
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
         )
@@ -346,9 +322,9 @@ def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             target_file_rows=200_000,
             writer_options={"parquet.block.size": 128 * 1024},
         )
-        fixture_complete(fdir)
-    _ZORDER_CACHE[key] = base
-    return base
+        return base
+
+    return artifact("zorder_lineitem", sf_dir, ("lineitem",), build)
 
 
 _ZORDER_ORACLE = f"""

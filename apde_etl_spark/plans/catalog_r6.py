@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from apde_etl_spark.functions.core import round_half_away
 from apde_etl_spark.operators.cache import tracked_persist
 from apde_etl_spark.operators.graph import pagerank_integer
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import _sql_round, load, materialize_ctes, register
 from apde_etl_spark.plans.catalog_r5b import _SQ8_QUANT_SQL
 
@@ -423,31 +424,21 @@ _ANN_NPROBE = 2
 _ANN_RERANK = 20
 _ANN_K = 5
 
-#: per-process index build cache: the gate may run entries in any order
-#: or subset, so every consumer ensures (and shares) the build.
-_INDEX_CACHE: dict = {}
-
 
 def _ensure_index(spark: SparkSession, sf_dir: str, variant: str = "full") -> str:
+    """The IVF index the lifecycle entries share (the gate may run them
+    in any order or subset, so each one ensures the build); ``sub``
+    leaves out every 20th vector for the append entry."""
     from apde_etl_spark.operators.ann_index import build_ann_index
 
-    key = (sf_dir, variant)
-    if key not in _INDEX_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix=f"apde_annidx_{variant}_")
-        # repeated gate runs would otherwise leak index dirs (centroids,
-        # bounds, codebooks, cell-partitioned codes) in the temp fs —
-        # same cleanup pattern as stream_linkage_upsert's work dir.
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    def build(d: str) -> str:
         emb = load(spark, sf_dir, "embeddings")
         if variant == "sub":
             emb = emb.filter(F.col("vec_id") % 20 != 0)
         build_ann_index(emb, d, dim=_ANN_DIM, n_cells=_ANN_CELLS)
-        _INDEX_CACHE[key] = d
-    return _INDEX_CACHE[key]
+        return d
+
+    return artifact(f"annidx_{variant}", sf_dir, ("embeddings",), build)
 
 
 _SQL_NORM = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
@@ -730,9 +721,6 @@ def stream_linkage_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Real baseline-JPEG decode in-gate (closes the last codec seam)
 # ===========================================================================
 
-_JPEG_FIXTURE: dict[str, str] = {}
-
-
 def _jpeg_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """One baseline JPEG per sampled document (doc_id % 12 == 0, the
     same id set as the round-5 media fixtures): 8-aligned dimensions
@@ -746,15 +734,8 @@ def _jpeg_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from apde_etl_spark.operators.jpegcodec import encode_jpeg_flat_blocks
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
 
-    key = os.path.abspath(sf_dir)
-    if key in _JPEG_FIXTURE:
-        return _JPEG_FIXTURE[key]
-    base, done = fixture_dir("apde_etl_media_jpeg", sf_dir,
-                             "documents.parquet")
-    if not done:
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> str:
         ids = [
             r["doc_id"]
             for r in load(spark, sf_dir, "documents")
@@ -766,9 +747,9 @@ def _jpeg_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
                 8 * (1 + i % 4), 8 * (1 + i % 3), seed=i)
             with open(os.path.join(base, f"doc_{i}.jpg"), "wb") as fh:
                 fh.write(blob)
-        fixture_complete(base)
-    _JPEG_FIXTURE[key] = base
-    return base
+        return base
+
+    return artifact("media_jpeg", sf_dir, ("documents",), build)
 
 
 _JPEG_ORACLE = """

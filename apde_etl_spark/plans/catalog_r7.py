@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apde_etl_spark.operators.cache import tracked_persist
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
@@ -287,38 +288,17 @@ _G_ENTRIES = 16  # hash-stratified entry points (see build_knn_graph)
 _G_LONG = 2      # deterministic small-world long links per node
 _G_QUERY_PRED = "vec_id % 97 = 0"
 
-#: per-process graph-index build cache (the _ensure_index pattern,
-#: atexit-cleaned)
-_GRAPH_CACHE: dict = {}
-
-
-def _cached_workdir(cache: dict, key, prefix: str, build) -> str:
-    """Build-once/cache/atexit-clean recipe shared by every per-process
-    artifact store in this module (graph indexes, versioned tables,
-    sketch stores) — the pattern catalog_r6._ensure_index established,
-    including the temp-dir leak fix, maintained in ONE place.
-    ``build(workdir)`` populates the directory on first use."""
-    if key not in cache:
-        import atexit
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        build(d)
-        cache[key] = d
-    return cache[key]
-
 
 def _ensure_graph_index(spark: SparkSession, sf_dir: str) -> str:
     from apde_etl_spark.operators.ann_index import build_knn_graph
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         emb = load(spark, sf_dir, "embeddings")
         build_knn_graph(emb, d, n_neighbors=_G_M, n_entries=_G_ENTRIES,
                         n_long_links=_G_LONG)
+        return d
 
-    return _cached_workdir(_GRAPH_CACHE, sf_dir, "apde_anngraph_", build)
+    return artifact("anngraph", sf_dir, ("embeddings",), build)
 
 
 def _sql_g_cos(av: str, an: str, bv: str, bn: str) -> str:
@@ -538,18 +518,15 @@ def ann_recall_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (round-6 verdict item #4; sources/lifecycle.py versioned-table layout)
 # ===========================================================================
 
-#: per-process versioned-table work area ({sf_dir: (cust_dir, ord_dir,
-#: compact_stats)}), atexit-cleaned like the ANN index caches
-_VERSIONED_CACHE: dict = {}
-
 _COMPACT_FRAGMENTS = 64
 _COMPACT_TARGET = 4
 
 
 def _ensure_versioned(spark: SparkSession, sf_dir: str) -> tuple:
-    """Build (once per process) a real versioned customers table —
-    v=1 the base snapshot, v=2 the MERGE result (updates + inserts +
-    deletes) — and a fragmented orders table compacted into v=2.
+    """Build (once per source fingerprint) a real versioned customers
+    table — v=1 the base snapshot, v=2 the MERGE result (updates +
+    inserts + deletes) — and a fragmented orders table compacted into
+    v=2.
     Everything derives deterministically from the base tables, so the
     SQL oracles can restate the final states from the views alone."""
     from apde_etl_spark.sources.lifecycle import (
@@ -559,9 +536,7 @@ def _ensure_versioned(spark: SparkSession, sf_dir: str) -> tuple:
         versioned_write,
     )
 
-    stats: dict = {}
-
-    def build(root: str) -> None:
+    def build(root: str) -> tuple:
         cust_dir, ord_dir = f"{root}/customers", f"{root}/orders"
         cust = load(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment")
@@ -598,14 +573,9 @@ def _ensure_versioned(spark: SparkSession, sf_dir: str) -> tuple:
             "o_orderkey", "o_orderstatus", "o_totalprice")
         versioned_write(orders, ord_dir, n_files=_COMPACT_FRAGMENTS)
         _, before, after = compact_table(spark, ord_dir, _COMPACT_TARGET)
-        stats["compact"] = (before, after)
+        return cust_dir, ord_dir, (before, after)
 
-    root = _cached_workdir(_VERSIONED_CACHE, sf_dir, "apde_versioned_",
-                           build)
-    if stats:  # first build this process: attach the compact stats
-        _VERSIONED_CACHE[(sf_dir, "stats")] = stats["compact"]
-    return (f"{root}/customers", f"{root}/orders",
-            _VERSIONED_CACHE[(sf_dir, "stats")])
+    return artifact("versioned", sf_dir, ("customer", "orders"), build)
 
 
 _MERGE_V2_SQL = """
@@ -1052,14 +1022,14 @@ def ann_graph_add_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector by beam * degree * hops."""
     from apde_etl_spark.operators.ann_index import build_knn_graph
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         emb95 = load(spark, sf_dir, "embeddings").filter(
             F.expr(_G_SUB_WHERE))
         build_knn_graph(emb95, d, n_neighbors=_G_M, n_entries=_G_ENTRIES,
                         n_long_links=_G_LONG)
+        return d
 
-    d = _cached_workdir(_GRAPH_CACHE, (sf_dir, "sub"),
-                        "apde_anngraph_sub_", build)
+    d = artifact("anngraph_sub", sf_dir, ("embeddings",), build)
     emb = load(spark, sf_dir, "embeddings")
     corpus95 = emb.filter(F.expr(_G_SUB_WHERE))
     batch = emb.filter(F.expr(_G_BATCH_PRED))
@@ -1087,8 +1057,6 @@ def ann_graph_add_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from apde_etl_spark.operators.profile import HLL_ALPHA, HLL_M  # noqa: E402
 
-_HLL_CACHE: dict = {}
-
 _SQL_H60_USER = ("CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)),"
                  " 1, 15)) AS BIGINT)")
 
@@ -1114,12 +1082,13 @@ def _ensure_hll_store(spark: SparkSession, sf_dir: str) -> str:
     from apde_etl_spark.operators.profile import hll_registers
     from apde_etl_spark.plans.catalog import load_events
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
         regs = hll_registers(ev, "user_id", ["day"])
         regs.write.mode("overwrite").partitionBy("day").parquet(d)
+        return d
 
-    return _cached_workdir(_HLL_CACHE, sf_dir, "apde_hll_", build)
+    return artifact("hll", sf_dir, ("events",), build)
 
 
 _HLL_DAILY_SQL = f"""

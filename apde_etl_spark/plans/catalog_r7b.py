@@ -39,12 +39,12 @@ from apde_etl_spark.operators.sketch import (
     qhist_registers,
     sql_cms_bucket,
 )
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     load,
     load_events,
     register,
 )
-from apde_etl_spark.plans.catalog_r7 import _cached_workdir
 
 
 def _sql_h60(col: str) -> str:
@@ -63,8 +63,6 @@ def _sql_h60(col: str) -> str:
 #: hash sample stands in for that candidate feed.
 _CMS_PROBE_MOD = 7
 
-_CMS_CACHE: dict = {}
-
 _CMS_REG_CTES = f"""
 ev AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events
        WHERE user_id IS NOT NULL),
@@ -82,12 +80,13 @@ def _ensure_cms_store(spark: SparkSession, sf_dir: str) -> str:
     partitioned by day — the frequency-sketch store the merge entries
     read WITHOUT rescanning events."""
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
         regs = cms_registers(ev, "user_id", ["day"])
         regs.write.mode("overwrite").partitionBy("day").parquet(d)
+        return d
 
-    return _cached_workdir(_CMS_CACHE, sf_dir, "apde_cms_", build)
+    return artifact("cms", sf_dir, ("events",), build)
 
 
 _CMS_DAILY_SQL = f"""
@@ -256,8 +255,6 @@ def stream_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Log-binned quantile histogram: per-day store, merged p99 enclosure
 # ===========================================================================
 
-_QH_CACHE: dict = {}
-
 _QH_REG_CTES = f"""
 ev AS (SELECT CAST(ts AS DATE) AS day, value FROM events
        WHERE value IS NOT NULL AND value >= 0),
@@ -271,12 +268,13 @@ regs AS (SELECT day, bin, CAST(count(*) AS BIGINT) AS cnt
 
 
 def _ensure_qhist_store(spark: SparkSession, sf_dir: str) -> str:
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
         regs = qhist_registers(ev, "value", ["day"])
         regs.write.mode("overwrite").partitionBy("day").parquet(d)
+        return d
 
-    return _cached_workdir(_QH_CACHE, sf_dir, "apde_qhist_", build)
+    return artifact("qhist", sf_dir, ("events",), build)
 
 
 _QH_DAILY_SQL = f"""

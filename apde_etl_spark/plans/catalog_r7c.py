@@ -37,18 +37,14 @@ from apde_etl_spark.operators.sketch import (
     kmv_sketch,
     sql_kmv_estimate,
 )
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
     load_events,
     register,
 )
-from apde_etl_spark.plans.catalog_r7 import (
-    _SQL_H60_USER,
-    _cached_workdir,
-)
-
-_KMV_CACHE: dict = {}
+from apde_etl_spark.plans.catalog_r7 import _SQL_H60_USER
 
 
 def _ensure_kmv_store(spark: SparkSession, sf_dir: str) -> str:
@@ -56,12 +52,13 @@ def _ensure_kmv_store(spark: SparkSession, sf_dir: str) -> str:
     partitioned by day — the distinct-sketch store the estimate
     entries merge FROM STORAGE."""
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
         sk = kmv_sketch(ev, "user_id", ["day"])
         sk.write.mode("overwrite").partitionBy("day").parquet(d)
+        return d
 
-    return _cached_workdir(_KMV_CACHE, sf_dir, "apde_kmv_", build)
+    return artifact("kmv", sf_dir, ("events",), build)
 
 
 #: shared oracle CTE: per-day k-min sketches of distinct user hashes.
@@ -1022,18 +1019,16 @@ def standardized_order_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bloom filter store: portable set-membership bits, FPR measured in-gate
 # ===========================================================================
 
-_BLOOM_CACHE: dict = {}
-
-
 def _ensure_bloom_store(spark: SparkSession, sf_dir: str) -> str:
     from apde_etl_spark.operators.sketch import bloom_bits
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
         bits = bloom_bits(ev, "user_id", ["day"])
         bits.write.mode("overwrite").partitionBy("day").parquet(d)
+        return d
 
-    return _cached_workdir(_BLOOM_CACHE, sf_dir, "apde_bloom_", build)
+    return artifact("bloom", sf_dir, ("events",), build)
 
 
 def _sql_bloom_ctes() -> str:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
@@ -36,7 +37,6 @@ from apde_etl_spark.plans.catalog import (
     register,
 )
 from apde_etl_spark.plans.catalog_r7 import (
-    _cached_workdir,
     _hop,
     _sql_g_cos,
     _sql_graph_ctes,
@@ -61,20 +61,18 @@ _H_DBEAM = 8
 _H_HPL = 2
 _H_QUERY_PRED = "vec_id % 97 = 0"
 
-_HNSW_CACHE: dict = {}
-
-
 def _ensure_hnsw_index(spark: SparkSession, sf_dir: str) -> str:
     from apde_etl_spark.operators.ann_index import build_knn_graph
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         emb = load(spark, sf_dir, "embeddings")
         build_knn_graph(
             emb, d, n_neighbors=_H_M, n_entries=_H_ENTRIES,
             n_long_links=_H_LONG, n_layers=_H_LAYERS,
             layer_factor=_H_FACTOR, layer_neighbors=_H_LM)
+        return d
 
-    return _cached_workdir(_HNSW_CACHE, sf_dir, "apde_hnsw_", build)
+    return artifact("hnsw", sf_dir, ("embeddings",), build)
 
 
 def _sql_hnsw_search_ctes() -> str:
@@ -624,27 +622,23 @@ ORDER BY feature
 """, ("qf", "qh"))
 
 
-_QLR_CACHE: dict = {}
-
-
 def _qlr_fit(spark: SparkSession, sf_dir: str) -> dict:
     """Collect the train-split feature histogram (bounded by the
     quantization grid, NOT the corpus — the linkage gamma-histogram
     pattern) and run the fixed-point GD loop driver-side."""
-    if sf_dir in _QLR_CACHE:
-        return _QLR_CACHE[sf_dir]
-    docs = load(spark, sf_dir, "documents")
-    feats = quality_lr_features(docs)
-    hist = (
-        feats.filter(F.col("doc_id") % 5 != 0)
-        .groupBy("x1", "x2", "x3", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    fit = quality_lr_train_fixedpoint(
-        [((r["x1"], r["x2"], r["x3"], r["y"]), r["n"]) for r in hist])
-    _QLR_CACHE[sf_dir] = fit
-    return fit
+
+    def build(_: str) -> dict:
+        feats = quality_lr_features(load(spark, sf_dir, "documents"))
+        hist = (
+            feats.filter(F.col("doc_id") % 5 != 0)
+            .groupBy("x1", "x2", "x3", "y")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        return quality_lr_train_fixedpoint(
+            [((r["x1"], r["x2"], r["x3"], r["y"]), r["n"]) for r in hist])
+
+    return artifact("qlr_fit", sf_dir, ("documents",), build)
 
 
 @register("quality_lr_weights", _QLR_WEIGHTS_SQL)
@@ -800,9 +794,6 @@ def quality_lr_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (plans/catalog_r5.py:123,170), fixtures from a matching stdlib
 # encoder so the oracle states every decoded byte in closed form.
 
-_VIDEO_FIXTURE: dict[str, str] = {}
-
-
 def _video_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """One .y4m per sampled document (doc_id % 12 == 0), parameters
     closed over doc_id so the oracle can restate them: W 4+id%6,
@@ -811,17 +802,9 @@ def _video_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     frame_pixel_value(x, y, c, f, doc_id)."""
     import os
 
-    from apde_etl_spark.plans.catalog_r4 import fixture_complete, fixture_dir
+    from apde_etl_spark.operators.multimodal import encode_y4m
 
-    key = os.path.abspath(sf_dir)
-    if key in _VIDEO_FIXTURE:
-        return _VIDEO_FIXTURE[key]
-    base, done = fixture_dir("apde_etl_video", sf_dir, "documents.parquet")
-    if not done:
-        from apde_etl_spark.operators.multimodal import encode_y4m
-
-        os.makedirs(base, exist_ok=True)
-
+    def build(base: str) -> str:
         ids = [
             r["doc_id"]
             for r in load(spark, sf_dir, "documents")
@@ -835,9 +818,9 @@ def _video_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
             )
             with open(os.path.join(base, f"doc_{i}.y4m"), "wb") as fh:
                 fh.write(blob)
-        fixture_complete(base)
-    _VIDEO_FIXTURE[key] = base
-    return base
+        return base
+
+    return artifact("video", sf_dir, ("documents",), build)
 
 
 _VIDEO_ORACLE = """

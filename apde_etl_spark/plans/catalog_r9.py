@@ -43,13 +43,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apde_etl_spark.plans.artifacts import artifact
 from apde_etl_spark.plans.catalog import (
     _sql_round,
     load,
     materialize_ctes,
     register,
 )
-from apde_etl_spark.plans.catalog_r7 import _cached_workdir, _sql_g_cos
+from apde_etl_spark.plans.catalog_r7 import _sql_g_cos
 from apde_etl_spark.plans.catalog_r8 import (
     _H_BEAM,
     _H_DBEAM,
@@ -79,9 +80,6 @@ _I_HOPS0 = 3       # insert-time layer-0 hop rounds
 _I_RHOPS = 3       # refresh-pass hop rounds (NN-descent repair)
 _I_RBEAM = 16      # refresh-pass beam width
 
-_INS_CACHE: dict = {}
-
-
 def _capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _I_CAP)
@@ -90,7 +88,7 @@ def _capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_insert_index(spark: SparkSession, sf_dir: str) -> str:
     from apde_etl_spark.operators.ann_index import build_knn_graph_insert
 
-    def build(d: str) -> None:
+    def build(d: str) -> str:
         build_knn_graph_insert(
             _capped(spark, sf_dir), d,
             n_neighbors=_I_M0, n_entries=_H_ENTRIES, n_long_links=_H_LONG,
@@ -100,8 +98,9 @@ def _ensure_insert_index(spark: SparkSession, sf_dir: str) -> str:
             insert_beam=_I_BEAM0, insert_hops=_I_HOPS0,
             refresh_passes=1, refresh_hops=_I_RHOPS,
             refresh_beam=_I_RBEAM)
+        return d
 
-    return _cached_workdir(_INS_CACHE, sf_dir, "apde_hnswins_", build)
+    return artifact("hnsw_insert", sf_dir, ("embeddings",), build)
 
 
 # ---------------------------------------------------------------------------
